@@ -779,10 +779,7 @@ object ManifestTable {
     val v = currentVersion(spark, path)
       .getOrElse(sys.error(s"no manifest table at $path"))
     val m = readManifest(spark, path, v)
-    commit(spark, path, v + 1, m.schema, m.partitionCols, m.files,
-      m.statsCols, Map.empty, m.bloomCols, carry = Some(m),
-      constraints = m.constraints, transforms = m.transforms,
-      colmap = m.colmap, retired = m.retired, props = kvs)
+    commit(spark, path, v + 1, m, m.files, props = kvs)
   }
 
   /** `ALTER TABLE … UNSET TBLPROPERTIES` — a metadata-only commit with
@@ -793,11 +790,7 @@ object ManifestTable {
     val v = currentVersion(spark, path)
       .getOrElse(sys.error(s"no manifest table at $path"))
     val m = readManifest(spark, path, v)
-    commit(spark, path, v + 1, m.schema, m.partitionCols, m.files,
-      m.statsCols, Map.empty, m.bloomCols,
-      carry = Some(m.copy(props = m.props -- keys)),
-      constraints = m.constraints, transforms = m.transforms,
-      colmap = m.colmap, retired = m.retired)
+    commit(spark, path, v + 1, m.copy(props = m.props -- keys), m.files)
   }
 
   /** The COPY INTO idempotency ledger of the CURRENT version: which
@@ -2475,15 +2468,21 @@ object ManifestTable {
     * with unfolded entries. Returns the new version (unchanged when
     * nothing needed folding); loses a version race by retrying against
     * the fresh snapshot. */
-  def foldEqdelCounts(spark: SparkSession, path: String): Long =
-    foldEqdelCounts(spark, path, MaxCommitRetries)
-
-  private def foldEqdelCounts(spark: SparkSession, path: String,
-                              retries: Int): Long = {
+  def foldEqdelCounts(spark: SparkSession, path: String): Long = {
     val v = currentVersion(spark, path)
       .getOrElse(sys.error(s"no manifest table at $path"))
-    val m = readManifest(spark, path, v)
-    if (m.eqdels.isEmpty || m.eqdels.forall(_.matched.isDefined)) return v
+    // a concurrent commit may have changed exactly the state the counts
+    // describe — recount against the winner, boundedly (commit-time
+    // invalidation guards correctness; the retry restores usefulness,
+    // and a hot table just folds on a later call)
+    commitRebasing(spark, path, readManifest(spark, path, v))((_, _) => ())(
+      foldEqdelCountsOnto(spark, path, _))
+  }
+
+  /** One fold attempt: count against snapshot `m`, commit onto it. */
+  private def foldEqdelCountsOnto(spark: SparkSession, path: String,
+                                  m: Manifest): Long = {
+    if (m.eqdels.isEmpty || m.eqdels.forall(_.matched.isDefined)) return m.version
     val maxSeq = m.eqdels.iterator.map(_.seq).max
     val atRisk = m.files.filter(r => m.fseq.getOrElse(r, 0L) < maxSeq)
     val rows = attachFseq(spark, m,
@@ -2522,20 +2521,7 @@ object ManifestTable {
     // exact state by commit-time invalidation — the recount would agree)
     val folded = m.eqdels.map(e => e.copy(matched =
       Some(e.matched.getOrElse(counted.getOrElse(e.name, 0L)))))
-    try commit(spark, path, v + 1, m.schema, m.partitionCols, m.files,
-      m.statsCols, Map.empty, m.bloomCols,
-      carry = Some(m.copy(eqdels = folded)),
-      constraints = m.constraints, transforms = m.transforms,
-      colmap = m.colmap, retired = m.retired)
-    catch {
-      // a concurrent commit may have changed exactly the state the counts
-      // describe — recompute against the winner, boundedly (commit-time
-      // invalidation guards correctness; the retry restores usefulness,
-      // and a hot table just folds on a later call)
-      case e: java.util.ConcurrentModificationException =>
-        if (retries <= 0) throw e
-        foldEqdelCounts(spark, path, retries - 1)
-    }
+    commit(spark, path, m.version + 1, m.copy(eqdels = folded), m.files)
   }
 
   private def eqdDir(path: String) = new Path(path, "_eqd")
@@ -2708,11 +2694,15 @@ object ManifestTable {
     }
   }
 
-  /** `spark.graft.dml.mode` — the DML execution-strategy dial (results
-    * are identical across modes, oracle- and fuzz-pinned):
+  /** `spark.graft.dml.mode` — the encoding UPDATE and MERGE write in
+    * (results are identical across modes, oracle- and fuzz-pinned). The
+    * value is trimmed and case-insensitive; any other value fails the
+    * statement ([[dmlMode]]) rather than silently running copy-on-write.
+    * DELETE does not consult it: [[delete]] is copy-on-write and
+    * [[deleteVectorized]] the merge-on-read face.
     *
-    *  - unset (default): COPY-ON-WRITE — touched files rewrite in full;
-    *    simplest read path, the right default for read-heavy tables;
+    *  - unset or `cow` (default): COPY-ON-WRITE — touched files rewrite in
+    *    full; simplest read path, the right default for read-heavy tables;
     *  - `mor`: MERGE-ON-READ — UPDATE and MERGE record touched rows as
     *    deletion-vector entries plus a match-bounded append; write cost
     *    O(matched rows) instead of O(touched files' bytes) (repricing one
@@ -2732,13 +2722,17 @@ object ManifestTable {
     * [[rewriteDeletes]] (OPTIMIZE … PURGE) materializes both sidecar
     * kinds back to clean files on the maintenance window. */
   val DmlModeKey = "spark.graft.dml.mode"
-  private def morDml(spark: SparkSession): Boolean =
-    spark.conf.getOption(DmlModeKey).exists(_.trim.equalsIgnoreCase("mor"))
-  /** `spark.graft.dml.mode = eq` routes MERGE through EQUALITY DELETES —
-    * zero table reads per merge (see [[mergeEq]]); the streaming-CDC
-    * ingest mode. UPDATE keeps MOR/COW (an update's SET reads the row). */
-  private def eqDml(spark: SparkSession): Boolean =
-    spark.conf.getOption(DmlModeKey).exists(_.trim.equalsIgnoreCase("eq"))
+
+  /** The session's DML encoding: `cow` (also when unset), `mor` or `eq`. */
+  private def dmlMode(spark: SparkSession): String =
+    spark.conf.getOption(DmlModeKey) match {
+      case None => "cow"
+      case Some(raw) => raw.trim.toLowerCase(java.util.Locale.ROOT) match {
+        case mode @ ("cow" | "mor" | "eq") => mode
+        case _ => throw new IllegalArgumentException(
+          s"$DmlModeKey must be one of cow, mor, eq; got '$raw'")
+      }
+    }
 
   /** DV-applied scan of `rels` that KEEPS the (`__dv_fname`, `__dv_pos`)
     * metadata columns, logical-named — the merge-on-read write paths need
@@ -3109,7 +3103,7 @@ object ManifestTable {
     */
   private def writeDataFiles(spark: SparkSession, path: String, df0: DataFrame,
                              partitionCols: Seq[String],
-                             colmap: Map[String, String] = Map.empty): Seq[String] = {
+                             colmap: Map[String, String]): Seq[String] = {
     // batches arrive LOGICAL-named; files are written physical so every
     // vintage shares one on-disk naming regardless of later renames
     val df = toPhysical(df0, colmap)
@@ -3207,27 +3201,32 @@ object ManifestTable {
     moved
   }
 
-  /** Publish a new version. `stats` covers the commit's NEW files; stats
-    * for files carried over from a previous snapshot come from `carry`
-    * (the base manifest) — passing the base instead of a pre-merged map is
-    * what lets a sidecar-backed table carry 10⁵ files' stats forward
-    * DISTRIBUTED (old sidecar → filter to kept files → new sidecar)
-    * without the driver ever holding them. Representation is chosen per
-    * commit by file count ([[sidecarThreshold]]); tables cross between
-    * inline and sidecar freely in both directions (growth past the
-    * threshold, shrink via compact/delete below it).
+  /** Publish version `expected` as `files` landed on snapshot `on`.
+    *
+    * `on` carries both halves of what a commit inherits. Its DEFINITION —
+    * schema, partition columns and transforms, stats and Bloom columns,
+    * constraints, column map, retired names — is written verbatim, so a
+    * caller that changes the definition passes `on.copy(...)`. Its STATE
+    * is carried forward: DVs and file sequences of kept files, eqdel
+    * entries, sink txn watermarks, the COPY ledger, properties, the parent
+    * timestamp, and the stats of kept files. `stats` covers only the
+    * commit's NEW files; carried stats come from `on` — passing the base
+    * instead of a pre-merged map is what lets a sidecar-backed table carry
+    * 10⁵ files' stats forward DISTRIBUTED (old sidecar → filter to kept
+    * files → new sidecar) without the driver ever holding them. A commit
+    * that inherits no state (create, replace, convert, clone) passes a
+    * fresh `Manifest(0L, …)` with an empty state. The other arguments add
+    * to the carried state: `dvs`, `txn`, `ingests`, `props` and `eqdels`
+    * merge over it, and `fseqExplicit` re-keys file sequences.
+    * Representation is chosen per commit by file count
+    * ([[sidecarThreshold]]); tables cross between inline and sidecar
+    * freely in both directions. Throws `ConcurrentModificationException`
+    * when `expected` is already taken — [[commitRebasing]] is the retry.
     */
   private[sources] def commit(spark: SparkSession, path: String, expected: Long,
-                              schema: StructType, partitionCols: Seq[String],
-                              files: Seq[String], statsCols: Seq[String] = Nil,
+                              on: Manifest, files: Seq[String],
                               stats: Map[String, FileStats] = Map.empty,
-                              bloomCols: Seq[String] = Nil,
-                              carry: Option[Manifest] = None,
                               dvs: Map[String, (String, Long)] = Map.empty,
-                              constraints: Seq[(String, String)] = Nil,
-                              transforms: Seq[PartitionTransform] = Nil,
-                              colmap: Map[String, String] = Map.empty,
-                              retired: Seq[String] = Nil,
                               op: Option[String] = None,
                               opCols: Seq[String] = Nil,
                               txn: Option[(String, Long)] = None,
@@ -3244,8 +3243,7 @@ object ManifestTable {
     // fileSet filter — a rewritten file was produced by a DV-applying read,
     // so its deletions are materialized, not lost
     val effectiveDvs =
-      carry.map(_.dvs.filter { case (rel, _) => fileSet.contains(rel) })
-        .getOrElse(Map.empty) ++ dvs
+      on.dvs.filter { case (rel, _) => fileSet.contains(rel) } ++ dvs
     require(effectiveDvs.keySet.subsetOf(fileSet),
       s"DV entries for files not in the commit: ${(effectiveDvs.keySet -- fileSet).mkString(", ")}")
     // file SEQUENCES (the equality-delete scoping): explicit wins (clone/
@@ -3254,13 +3252,13 @@ object ManifestTable {
     // commit — a rewrite's output read through the eqdel-applying scan,
     // and an eq-merge's own batch, are therefore exempt from every
     // already-recorded eqdel, which IS the delete-then-insert ordering
-    val carryFiles: Set[String] = carry.map(_.files.toSet).getOrElse(Set.empty)
+    val carryFiles: Set[String] = on.files.toSet
     // zero entries shed (absent reads as 0 — identical); NEGATIVE values
     // persist: a clone maps carried source sequences onto (…, -1, 0, 1]
     // so its own future commits (≥ 2) sequence above every carried entry
     val effectiveFseq: Map[String, Long] = files.map { rel =>
       rel -> fseqExplicit.getOrElse(rel,
-        carry.flatMap(_.fseq.get(rel)).getOrElse(
+        on.fseq.getOrElse(rel,
           if (carryFiles.contains(rel)) 0L else expected))
     }.filter(_._2 != 0L).toMap
     // an eqdel entry RETIRES when no remaining file is sequenced before it
@@ -3271,17 +3269,16 @@ object ManifestTable {
     // with it), when DV entries change (a position delete over raw rows
     // may overlap the key set), or when sequences re-key (clone/restore
     // explicit fseq) — conservative, the next fold restores exactness.
-    val dvsChanged = carry.exists(_.dvs != effectiveDvs)
-    def scopedRemoved(e: EqDelete): Boolean = carry.exists(b =>
-      b.files.exists(rel =>
-        b.fseq.getOrElse(rel, 0L) < e.seq && !fileSet.contains(rel)))
-    val effectiveEqdels = (carry.map(_.eqdels).getOrElse(Nil) ++ eqdels)
+    val dvsChanged = on.dvs != effectiveDvs
+    def scopedRemoved(e: EqDelete): Boolean = on.files.exists(rel =>
+      on.fseq.getOrElse(rel, 0L) < e.seq && !fileSet.contains(rel))
+    val effectiveEqdels = (on.eqdels ++ eqdels)
       .filter(e => files.exists(rel => effectiveFseq.getOrElse(rel, 0L) < e.seq))
       .map(e => if (e.matched.isDefined &&
           (dvsChanged || fseqExplicit.nonEmpty || scopedRemoved(e)))
         e.copy(matched = None) else e)
-    val hasStats = statsCols.nonEmpty || bloomCols.nonEmpty ||
-      stats.nonEmpty || carry.exists(b => b.stats.nonEmpty || b.sidecar.isDefined)
+    val hasStats = on.statsCols.nonEmpty || on.bloomCols.nonEmpty ||
+      stats.nonEmpty || on.stats.nonEmpty || on.sidecar.isDefined
     val useSidecar = hasStats && files.size > sidecarThreshold(spark)
     // metadata-only commits (same files, no fresh stats — deleteVectorized
     // is the canonical case) REUSE the base's sidecar instead of rewriting
@@ -3289,11 +3286,9 @@ object ManifestTable {
     // one text manifest and one small DV parquet, nothing else. Sidecars
     // are immutable and vacuum keeps any sidecar a surviving manifest
     // references, so sharing one across versions is safe.
-    val reuseSidecar: Option[String] = carry match {
-      case Some(b) if useSidecar && stats.isEmpty && b.sidecar.isDefined &&
-          fileSet == b.files.toSet => b.sidecar
-      case _ => None
-    }
+    val reuseSidecar: Option[String] =
+      if (useSidecar && stats.isEmpty && fileSet == carryFiles) on.sidecar
+      else None
     var sidecarName: Option[String] = None
     var statLines: Seq[String] = Nil
     if (reuseSidecar.isDefined) {
@@ -3302,15 +3297,14 @@ object ManifestTable {
       // inline lines. Carried stats from a sidecar base are filtered to the
       // kept files DISTRIBUTED and only then collected — bounded by the new
       // (below-threshold) file list, not the base's
-      val carried: Map[String, FileStats] = carry match {
-        case None => Map.empty
-        case Some(b) if b.sidecar.isEmpty =>
-          b.stats.filter { case (rel, _) => fileSet.contains(rel) && !stats.contains(rel) }
-        case Some(b) =>
+      val carried: Map[String, FileStats] =
+        if (on.sidecar.isEmpty)
+          on.stats.filter { case (rel, _) => fileSet.contains(rel) && !stats.contains(rel) }
+        else {
           val keep = fileSet -- stats.keySet
-          readSidecar(spark, path, b).filter(r => keep.contains(r.rel))
+          readSidecar(spark, path, on).filter(r => keep.contains(r.rel))
             .collect().map(r => r.rel -> rowStats(r)).toMap
-      }
+        }
       val all = carried ++ stats
       statLines = for {
         rel <- files.filter(all.contains)
@@ -3324,26 +3318,22 @@ object ManifestTable {
       import spark.implicits._
       val name = f"s$expected%012d-${java.util.UUID.randomUUID().toString.take(8)}"
       val carryRels = fileSet -- stats.keySet
-      val carryCovered: Set[String] = carry match {
-        case None => Set.empty
-        case Some(b) if b.sidecar.isDefined => carryRels.intersect(b.files.toSet)
-        case Some(b) => carryRels.intersect(b.stats.keySet)
-      }
+      val carryCovered: Set[String] = carryRels.intersect(
+        if (on.sidecar.isDefined) carryFiles else on.stats.keySet)
       val driverRows: Seq[SidecarRow] =
         files.collect { case rel if stats.contains(rel) =>
           SidecarRow(rel, toSidecarCols(stats(rel))) } ++
           (carryRels -- carryCovered).toSeq.sorted.map(SidecarRow(_, Nil))
       val newDs = spark.createDataset(driverRows)
-      val ds = carry match {
-        case Some(b) if b.sidecar.isDefined && carryCovered.nonEmpty =>
+      val ds =
+        if (carryCovered.isEmpty) newDs
+        else if (on.sidecar.isDefined)
           newDs.unionByName(
-            readSidecar(spark, path, b).filter(r => carryCovered.contains(r.rel)))
-        case Some(b) if b.sidecar.isEmpty && carryCovered.nonEmpty =>
+            readSidecar(spark, path, on).filter(r => carryCovered.contains(r.rel)))
+        else
           newDs.unionByName(spark.createDataset(
             files.collect { case rel if carryCovered.contains(rel) =>
-              SidecarRow(rel, toSidecarCols(b.stats(rel))) }))
-        case _ => newDs
-      }
+              SidecarRow(rel, toSidecarCols(on.stats(rel))) }))
       ds.write.mode(SaveMode.Overwrite)
         .parquet(new Path(manifestDir(path), name).toString)
       sidecarName = Some(name)
@@ -3353,10 +3343,10 @@ object ManifestTable {
     // read is then strictly increasing in version order even across
     // writers with skewed wall clocks, and it lives in the manifest
     // BYTES — a migration that resets mtimes cannot corrupt time travel.
-    // The parent comes from `carry` when the commit chains; the rare
-    // carry-less paths (create, full overwrite) read the predecessor's
-    // line, one small manifest parse per commit.
-    val parentTs = carry.map(_.ts).filter(_ > 0L).getOrElse(
+    // The parent comes from `on` when the commit chains; the rare
+    // state-less paths (create, full overwrite; `on.ts` is 0) read the
+    // predecessor's line, one small manifest parse per commit.
+    val parentTs = Some(on.ts).filter(_ > 0L).getOrElse(
       if (expected > 1) readCommitTs(spark, path, expected - 1) else 0L)
     val commitTs = math.max(System.currentTimeMillis(), parentTs + 1)
     // feature-gated protocol stamp: format 2 only WHILE live eqdel lines
@@ -3367,10 +3357,10 @@ object ManifestTable {
     val body = (Seq(Header,
       "format=" + (if (effectiveEqdels.nonEmpty) 2L else 1L),
       "ts=" + commitTs,
-      "schema=" + schema.json,
-      "partitions=" + partitionCols.mkString(","),
-      "statscols=" + statsCols.mkString(",")) ++
-      (if (bloomCols.nonEmpty) Seq("bloomcols=" + bloomCols.mkString(",")) else Nil) ++
+      "schema=" + on.schema.json,
+      "partitions=" + on.partitionCols.mkString(","),
+      "statscols=" + on.statsCols.mkString(",")) ++
+      (if (on.bloomCols.nonEmpty) Seq("bloomcols=" + on.bloomCols.mkString(",")) else Nil) ++
       sidecarName.map("sidecar=" + _).toSeq ++
       files.map("file=" + _) ++
       effectiveDvs.toSeq.sortBy(_._1).map { case (rel, (n, cnt)) => s"dv=$rel|$n|$cnt" } ++
@@ -3384,23 +3374,23 @@ object ManifestTable {
       (if (effectiveEqdels.nonEmpty)
          effectiveFseq.toSeq.sortBy(_._1).map { case (rel, s) => s"fseq=$rel|$s" }
        else Nil) ++
-      constraints.map { case (n, e) =>
+      on.constraints.map { case (n, e) =>
         s"constraint=$n|${java.net.URLEncoder.encode(e, "UTF-8")}" } ++
-      transforms.map(t => s"transform=${t.derived}|${t.kind}|${t.arg}|${t.src}") ++
-      colmap.toSeq.sortBy(_._1).map { case (lg, ph) => s"colmap=$lg|$ph" } ++
-      retired.map("retired=" + _) ++
+      on.transforms.map(t => s"transform=${t.derived}|${t.kind}|${t.arg}|${t.src}") ++
+      on.colmap.toSeq.sortBy(_._1).map { case (lg, ph) => s"colmap=$lg|$ph" } ++
+      on.retired.map("retired=" + _) ++
       op.map("op=" + _).toSeq ++
       (if (opCols.nonEmpty) Seq("opcols=" + opCols.mkString(",")) else Nil) ++
-      (carry.map(_.txns).getOrElse(Map.empty) ++ txn).toSeq.sortBy(_._1)
+      (on.txns ++ txn).toSeq.sortBy(_._1)
         .map { case (id, b) =>
           s"txn=${java.net.URLEncoder.encode(id, "UTF-8")}|$b" } ++
       // COPY INTO ledger: carried like txn watermarks (append chains keep
       // it; an overwrite replaces the content, so the ledger resets too)
-      (carry.map(_.ingests).getOrElse(Nil) ++ ingests).distinct.sorted
+      (on.ingests ++ ingests).distinct.sorted
         .map(i => s"ingest=${java.net.URLEncoder.encode(i, "UTF-8")}") ++
       // user table properties: carried across every chained commit;
-      // SET merges, UNSET passes a carry with the keys removed
-      (carry.map(_.props).getOrElse(Map.empty) ++ props).toSeq.sortBy(_._1)
+      // SET merges, UNSET passes `on` with the keys removed
+      (on.props ++ props).toSeq.sortBy(_._1)
         .map { case (k, v0) => s"prop=${java.net.URLEncoder.encode(k, "UTF-8")}|" +
           java.net.URLEncoder.encode(v0, "UTF-8") } ++
       statLines).mkString("\n") + "\n"
@@ -3427,6 +3417,63 @@ object ManifestTable {
     * commit pressure — at which point failing loudly beats spinning.
     */
   private val MaxCommitRetries = 5
+
+  /** Commit-with-rebase: the one retry path for every operation that
+    * survives a lost version race. `land(on)` commits the operation onto
+    * snapshot `on` — first `base`, the snapshot the operation read — and
+    * returns the version. After a lost race the head is re-read and
+    * `rebase(on, head)` runs: the operation's own conflict rule, which
+    * throws to refuse. Otherwise the operation lands on the head, at most
+    * [[MaxCommitRetries]] times. `cleanup` (unpublished sidecars, moved
+    * files) runs on every failing exit: retries exhausted or rebase
+    * refused. A non-race exception out of `land` propagates untouched —
+    * the commit's outcome is then unknown, and its sidecars may be live.
+    */
+  private def commitRebasing(spark: SparkSession, path: String, base: Manifest,
+                             cleanup: () => Unit = () => ())(
+                             rebase: (Manifest, Manifest) => Unit)(
+                             land: Manifest => Long): Long = {
+    var on = base
+    var tries = 0
+    while (true) {
+      try return land(on)
+      catch {
+        case e: java.util.ConcurrentModificationException =>
+          tries += 1
+          try {
+            if (tries > MaxCommitRetries) throw e
+            val head = readManifest(spark, path, currentVersion(spark, path).get)
+            rebase(on, head)
+            on = head
+          } catch { case t: Throwable => cleanup(); throw t }
+      }
+    }
+    sys.error("unreachable")
+  }
+
+  /** New data files of one operation, with stats collected under the
+    * stats and Bloom declarations of `under` — the snapshot whose layout
+    * they were written in. */
+  private case class Written(rels: Seq[String], stats: Map[String, FileStats],
+                             under: Manifest) {
+    /** The stats for landing on `on`: re-collected when a rebase landed
+      * on a head that declares other stats or Bloom columns, so the
+      * head's declarations cover the new files too. */
+    def statsOn(spark: SparkSession, path: String, on: Manifest): Map[String, FileStats] =
+      if (on.statsCols == under.statsCols && on.bloomCols == under.bloomCols) stats
+      else collectStats(spark, path, rels, on.schema, on.partitionCols,
+        on.statsCols, on.bloomCols)
+  }
+
+  /** The one write step for new data files: write `df` in `under`'s
+    * layout and physical names, then collect the files' stats under its
+    * declarations. */
+  private def writeFiles(spark: SparkSession, path: String, df: DataFrame,
+                         under: Manifest): Written = {
+    val rels = writeDataFiles(spark, path, df, under.partitionCols, under.colmap)
+    Written(rels, collectStats(spark, path, rels, under.schema,
+      under.partitionCols, under.statsCols, under.bloomCols), under)
+  }
 
   private def dirOf(rel: String): String =
     relTail(rel).split("/").dropRight(1).mkString("/")
@@ -3462,24 +3509,16 @@ object ManifestTable {
     val full = withDerived(withGen, transforms)
     val pCols = partitionCols ++ transforms.map(_.derived)
     enforceConstraints(full, constraints, "overwrite")
-    val files = writeDataFiles(spark, path,
-      clusterForWrite(full, pCols, transforms), pCols)
-    val stats = collectStats(spark, path, files, full.schema, pCols,
-      statsCols, bloomCols)
-    var tries = 0
-    while (true) {
-      val next = currentVersion(spark, path).map(_ + 1).getOrElse(1L)
-      try return commit(spark, path, next, full.schema, pCols, files,
-        statsCols, stats, bloomCols, constraints = constraints,
-        transforms = transforms, txn = txn,
+    val fresh = Manifest(0L, full.schema, pCols, Nil, statsCols,
+      bloomCols = bloomCols, constraints = constraints, transforms = transforms)
+    val w = writeFiles(spark, path, clusterForWrite(full, pCols, transforms), fresh)
+    // the head is only a version number here: nothing of it carries
+    val head = fresh.copy(version = currentVersion(spark, path).getOrElse(0L))
+    commitRebasing(spark, path, head)((_, _) => ()) { on =>
+      commit(spark, path, on.version + 1, fresh, w.rels, w.stats, txn = txn,
         props = generated.map { case (c, sql) =>
           (GeneratedPropPrefix + c) -> sql })
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          tries += 1; if (tries > MaxCommitRetries) throw e
-      }
     }
-    sys.error("unreachable")
   }
 
   /** ZERO-COPY conversion of an existing parquet directory (flat or
@@ -3589,8 +3628,9 @@ object ManifestTable {
         "hive `k=v` partition dirs — nested non-partition layouts cannot convert")
     val stats = collectStats(spark, path, rels, schema, partCols,
       statsCols, bloomCols)
-    commit(spark, path, 1L, schema, partCols, rels, statsCols, stats,
-      bloomCols)
+    commit(spark, path, 1L,
+      Manifest(0L, schema, partCols, Nil, statsCols, bloomCols = bloomCols),
+      rels, stats)
   }
 
   /** CONVERT a DELTA table's current snapshot into a graft table
@@ -3887,8 +3927,8 @@ object ManifestTable {
         dvByPath.filter { case (rel, _) => live.contains(rel) }.toMap)
     val stats = collectStats(spark, path, rels, schema, partCols,
       statsPhys, bloomPhys)
-    commit(spark, path, 1L, schema, partCols, rels, statsPhys, stats,
-      bloomPhys, dvs = dvEntries, colmap = colmap)
+    commit(spark, path, 1L, Manifest(0L, schema, partCols, Nil, statsPhys,
+      bloomCols = bloomPhys, colmap = colmap), rels, stats, dvs = dvEntries)
   }
 
   /** Translate a converted snapshot's Delta deletion vectors into ONE
@@ -4109,8 +4149,9 @@ object ManifestTable {
     val extRels = rels.map(r => extRef(base, r))
     val stats = collectStats(spark, path, extRels, schema, partCols,
       statsCols, bloomCols)
-    commit(spark, path, 1L, schema, partCols, extRels, statsCols, stats,
-      bloomCols)
+    commit(spark, path, 1L,
+      Manifest(0L, schema, partCols, Nil, statsCols, bloomCols = bloomCols),
+      extRels, stats)
   }
 
   /** SHALLOW CLONE (Delta's `CREATE TABLE … SHALLOW CLONE src` re-derived):
@@ -4180,10 +4221,12 @@ object ManifestTable {
     // it, file-count-bounded; commit re-spills past the threshold)
     val stats = statsFor(spark, source, m).map { case (rel, st) =>
       ext(rel) -> st }
-    commit(spark, target, 1L, m.schema, m.partitionCols,
-      m.files.map(ext), m.statsCols, stats, m.bloomCols, dvs = dvs2,
-      constraints = m.constraints, transforms = m.transforms,
-      colmap = m.colmap, retired = m.retired, op = Some("clone"),
+    // the clone keeps the source's definition and inherits none of its
+    // state beyond what is passed explicitly
+    commit(spark, target, 1L, Manifest(0L, m.schema, m.partitionCols, Nil,
+        m.statsCols, bloomCols = m.bloomCols, constraints = m.constraints,
+        transforms = m.transforms, colmap = m.colmap, retired = m.retired),
+      m.files.map(ext), stats, dvs = dvs2, op = Some("clone"),
       props = m.props, eqdels = eqdels2, fseqExplicit = fseq2)
   }
 
@@ -4541,12 +4584,12 @@ object ManifestTable {
                               partitionCols: Seq[String],
                               txn: Option[(String, Long)] = None,
                               ingests: Seq[String] = Nil): Option[Long] = {
-    val files = writeDataFiles(spark, path, df, partitionCols)
+    val fresh = Manifest(0L, df.schema, partitionCols, Nil)
+    val w = writeFiles(spark, path, df, fresh)
     // `ingests` must reach version 1 too: a COPY-shaped append that CREATES
     // the table would otherwise commit the rows without its ledger, and a
     // re-run of the same ingestion would land them twice
-    try Some(commit(spark, path, 1L, df.schema, partitionCols, files, Nil,
-      Map.empty, txn = txn, ingests = ingests))
+    try Some(commit(spark, path, 1L, fresh, w.rels, txn = txn, ingests = ingests))
     catch { case _: java.util.ConcurrentModificationException => None }
   }
 
@@ -4567,76 +4610,63 @@ object ManifestTable {
         createExclusive(spark, path, df, Nil, txn, ingests)
           .getOrElse(append(spark, path, df, txn, ingests))
       case Some(v0) =>
-        var m = readManifest(spark, path, v0)
+        val m = readManifest(spark, path, v0)
         // generated partition columns: the table derives them, the caller
         // never supplies them (a caller value could contradict the
         // transform and land rows where pruning won't look)
         val batch = fillIdentity(m, fillDefaults(m, withDerived(
           df.drop(m.transforms.map(_.derived): _*), m.transforms, Some(m.schema))),
           "append")
+        // COPY INTO race: an ingestion of landing files the table already
+        // absorbed — found here, or in a concurrent winner on rebase —
+        // must fail LOUDLY, not land the rows twice; the re-run recomputes
+        // its fresh set against the ledger and absorbs only what is missing
+        def requireFreshIngests(head: Manifest): Unit = {
+          val dup = ingests.toSet.intersect(head.ingests.toSet)
+          if (dup.nonEmpty) throw new java.util.ConcurrentModificationException(
+            s"ingestion lost to a concurrent COPY of ${dup.size} of its " +
+              s"file(s) (e.g. ${dup.head}) — re-run to pick up the remainder")
+        }
         // fail fast, before any data lands
         val (schema0, colmap0) = evolveSchema(batch, m, "append")
         enforceConstraints(batch, m.constraints, "append")
-        val base = m
+        requireFreshIngests(m)
         val (batchW, idObs) = observeIdentityMax(m, batch)
-        val added = writeDataFiles(spark, path,
-          clusterForWrite(batchW, m), m.partitionCols,
-          colmap0)
         // stats read the new files under the EVOLVED physical schema:
         // stats columns are never renamed, and a physically-narrow batch
         // column upcasts to the declared stats type (a batch-schema read
         // would hand encodeStat an Int where the table says Long)
-        val addedStats =
-          collectStats(spark, path, added, schema0,
-            m.partitionCols, m.statsCols, m.bloomCols)
-        val idWm = identityWmUpdate(spark, path, base, added, addedStats, idObs)
-        var tries = 0
-        while (true) {
-          require(m.partitionCols == base.partitionCols,
+        val w = writeFiles(spark, path, clusterForWrite(batchW, m),
+          m.copy(schema = schema0, colmap = colmap0))
+        val idWm = identityWmUpdate(spark, path, m, w.rels, w.stats, idObs)
+        val committed = commitRebasing(spark, path, m) { (_, head) =>
+          require(head.partitionCols == m.partitionCols,
             s"table partitioning changed concurrently: " +
-              s"${base.partitionCols} -> ${m.partitionCols}")
+              s"${m.partitionCols} -> ${head.partitionCols}")
           // a concurrent write already advanced the identity watermark we
           // minted from: both batches carry overlapping generated ids, so
           // retrying silently would commit duplicates — fail loudly
           if (idWm.nonEmpty &&
-              m.props.get(IdentityWmProp) != base.props.get(IdentityWmProp))
+              head.props.get(IdentityWmProp) != m.props.get(IdentityWmProp))
             throw new java.util.ConcurrentModificationException(
               s"identity allocation on $path lost to a concurrent write — " +
                 "the batch's generated ids were minted from a stale " +
                 "watermark; re-run the append")
-          // COPY INTO race: a concurrent ingestion of the same landing
-          // files must fail LOUDLY here, not land the rows twice — the
-          // re-run recomputes its fresh set against the winner's ledger
-          // and absorbs only what is still missing
-          if (ingests.nonEmpty) {
-            val dup = ingests.toSet.intersect(m.ingests.toSet)
-            if (dup.nonEmpty) throw new java.util.ConcurrentModificationException(
-              s"ingestion lost to a concurrent COPY of ${dup.size} of its " +
-                s"file(s) (e.g. ${dup.head}) — re-run to pick up the remainder")
-          }
-          if (m.colmap != base.colmap || m.retired != base.retired)
+          requireFreshIngests(head)
+          if (head.colmap != m.colmap || head.retired != m.retired)
             throw new java.util.ConcurrentModificationException(
               s"append to $path lost to a rename/drop commit — the batch's " +
                 "files were written under the old physical names; re-run")
-          val (schema, colmap2) = evolveSchema(batch, m, "append")
-          try {
-            val committed = commit(spark, path, m.version + 1, schema,
-              m.partitionCols, m.files ++ added, m.statsCols, addedStats,
-              m.bloomCols, carry = Some(m), constraints = m.constraints,
-              transforms = m.transforms, colmap = colmap2,
-              retired = m.retired, txn = txn, ingests = ingests,
-              props = idWm)
-            // best-effort small-file packing of the touched directories
-            autoCompactAfterAppend(spark, path, added)
-            return committed
-          }
-          catch {
-            case e: java.util.ConcurrentModificationException =>
-              tries += 1; if (tries > MaxCommitRetries) throw e
-              m = readManifest(spark, path, currentVersion(spark, path).get)
-          }
+        } { on =>
+          val (schema, colmap2) = evolveSchema(batch, on, "append")
+          val landing = on.copy(schema = schema, colmap = colmap2)
+          commit(spark, path, on.version + 1, landing, on.files ++ w.rels,
+            w.statsOn(spark, path, landing), txn = txn, ingests = ingests,
+            props = idWm)
         }
-        sys.error("unreachable")
+        // best-effort small-file packing of the touched directories
+        autoCompactAfterAppend(spark, path, w.rels)
+        committed
     }
 
   /** `TRUNCATE TABLE`: drop every row, keep the table — schema,
@@ -4652,11 +4682,7 @@ object ManifestTable {
       .getOrElse(sys.error(s"no manifest table at $path"))
     val m = readManifest(spark, path, v)
     requireMutable(m, path, "TRUNCATE")
-    commit(spark, path, v + 1, m.schema, m.partitionCols, Nil,
-      m.statsCols, Map.empty, m.bloomCols,
-      carry = Some(m.copy(ingests = Nil)),
-      constraints = m.constraints, transforms = m.transforms,
-      colmap = m.colmap, retired = m.retired, op = Some("truncate"))
+    commit(spark, path, v + 1, m.copy(ingests = Nil), Nil, op = Some("truncate"))
   }
 
   // ---------------------------------------------- write-audit-publish staging
@@ -4708,15 +4734,11 @@ object ManifestTable {
       df.drop(m.transforms.map(_.derived): _*), m.transforms, Some(m.schema)))
     requireCompatible(batch, m, "stageAppend")
     enforceConstraints(batch, m.constraints, "stageAppend")
-    val files = writeDataFiles(spark, path,
-      clusterForWrite(batch, m), m.partitionCols,
-      m.colmap)
+    val w = writeFiles(spark, path, clusterForWrite(batch, m), m)
     // stats inline always: a stage is one batch, bounded by its writer
-    val stats = collectStats(spark, path, files, m.schema,
-      m.partitionCols, m.statsCols, m.bloomCols)
     val statLines = for {
-      rel <- files.filter(stats.contains)
-      (c, (mn, mx)) <- stats(rel).toSeq.sortBy(_._1)
+      rel <- w.rels.filter(w.stats.contains)
+      (c, (mn, mx)) <- w.stats(rel).toSeq.sortBy(_._1)
     } yield s"stats=$rel|$c|${mn.getOrElse("")}|${mx.getOrElse("")}"
     val stageId = id.getOrElse(
       java.util.UUID.randomUUID().toString.replace("-", "").take(12))
@@ -4732,7 +4754,7 @@ object ManifestTable {
       // staged bytes only when the table's constraints have since changed
       m.constraints.map { case (n, e) =>
         s"constraint=$n|${java.net.URLEncoder.encode(e, "UTF-8")}" } ++
-      files.map("file=" + _) ++
+      w.rels.map("file=" + _) ++
       statLines).mkString("\n") + "\n"
     val f = fs(spark, path)
     val out = f.create(new Path(manifestDir(path), stagedName(stageId)), false)
@@ -4788,13 +4810,12 @@ object ManifestTable {
     * staged manifest is removed on success. */
   def publishStaged(spark: SparkSession, path: String, id: String): Long = {
     val st = readStagedManifest(spark, path, id)
-    var m = readManifest(spark, path,
+    val m = readManifest(spark, path,
       currentVersion(spark, path).getOrElse(sys.error(s"no manifest table at $path")))
-    var tries = 0
-    while (true) {
-      require(m.partitionCols == st.partitionCols &&
-        m.transforms == st.transforms && m.colmap == st.colmap &&
-        m.schema.json == st.schema.json,
+    def check(head: Manifest): Unit = {
+      require(head.partitionCols == st.partitionCols &&
+        head.transforms == st.transforms && head.colmap == st.colmap &&
+        head.schema.json == st.schema.json,
         s"publishStaged: table layout changed since stage $id was written " +
           "(schema/partitioning/column mapping differ) — audit again and re-stage")
       // constraints added/changed BETWEEN stage and publish must gate the
@@ -4802,25 +4823,18 @@ object ManifestTable {
       // the CHECK pass over exactly the staged files against the CURRENT
       // constraint set (one batch-bounded scan, and only when they differ
       // — the stage itself already validated the set it was written under)
-      if (m.constraints != st.constraints)
+      if (head.constraints != st.constraints)
         enforceConstraints(
-          readRels(spark, path, m.copy(files = st.files, stats = st.stats),
+          readRels(spark, path, head.copy(files = st.files, stats = st.stats),
             st.files),
-          m.constraints, s"publishStaged($id)")
-      try {
-        val v = commit(spark, path, m.version + 1, m.schema, m.partitionCols,
-          m.files ++ st.files, m.statsCols, st.stats, m.bloomCols,
-          carry = Some(m), constraints = m.constraints,
-          transforms = m.transforms, colmap = m.colmap, retired = m.retired)
-        fs(spark, path).delete(new Path(manifestDir(path), stagedName(id)), false)
-        return v
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          tries += 1; if (tries > MaxCommitRetries) throw e
-          m = readManifest(spark, path, currentVersion(spark, path).get)
-      }
+          head.constraints, s"publishStaged($id)")
     }
-    sys.error("unreachable")
+    check(m)
+    val v = commitRebasing(spark, path, m)((_, head) => check(head)) { on =>
+      commit(spark, path, on.version + 1, on, on.files ++ st.files, st.stats)
+    }
+    fs(spark, path).delete(new Path(manifestDir(path), stagedName(id)), false)
+    v
   }
 
   /** Abandon a staged batch: delete its manifest, then its data files
@@ -5144,22 +5158,19 @@ object ManifestTable {
           bm.files.zip(newFiles).map { case (o, n) =>
             n -> remap(bm.fseq.getOrElse(o, 0L)) }.toMap)
       }
-    // carry = main's manifest: sink txn watermarks and the COPY ledger
-    // survive the publish; the branch's definition (schema, partitioning,
-    // constraints, properties) is the new truth. Main's own eqdel entries
-    // do NOT carry — the branch inherited them at fork (same names, now
-    // remapped), and their old seqs would compare wrongly against the
-    // re-keyed file sequences.
+    // the publish lands the branch's definition (schema, partitioning,
+    // constraints, properties) on main's state: sink txn watermarks and
+    // the COPY ledger survive. Main's own eqdel entries do NOT carry —
+    // the branch inherited them at fork (same names, now remapped), and
+    // their old seqs would compare wrongly against the re-keyed file
+    // sequences.
     val mm = readManifest(spark, path, mv)
     val v =
-      try commit(spark, path, mv + 1, bm.schema, bm.partitionCols,
-        newFiles, bm.statsCols, newStats, bm.bloomCols,
-        carry = Some(mm.copy(files = Nil, stats = Map.empty, dvs = Map.empty,
-          eqdels = Nil)),
-        dvs = newDvs,
-        constraints = bm.constraints, transforms = bm.transforms,
-        colmap = bm.colmap, retired = bm.retired,
-        props = bm.props - BranchBaseProp,
+      try commit(spark, path, mv + 1,
+        bm.copy(files = Nil, stats = Map.empty, sidecar = mm.sidecar,
+          dvs = Map.empty, eqdels = Nil, txns = mm.txns, ingests = mm.ingests,
+          props = mm.props, ts = mm.ts),
+        newFiles, newStats, dvs = newDvs, props = bm.props - BranchBaseProp,
         eqdels = newEqdels, fseqExplicit = newFseq)
       catch {
         // a writer slipped in between the base check and the commit:
@@ -5280,33 +5291,17 @@ object ManifestTable {
     }
     def undo(): Unit =
       movedPairs.foreach { case (src, dst) => f.rename(dst, src): Unit }
-    var cur = mm0
-    var tries = 0
-    while (true) {
-      try {
-        val v = commit(spark, path, cur.version + 1, cur.schema,
-          cur.partitionCols, cur.files ++ newRels, cur.statsCols, newStats,
-          cur.bloomCols, carry = Some(cur), constraints = cur.constraints,
-          transforms = cur.transforms, colmap = cur.colmap,
-          retired = cur.retired, op = Some("cherry-pick"))
-        dropBranch(spark, path, name)
-        return v
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          tries += 1
-          if (tries > MaxCommitRetries) { undo(); throw e }
-          val now = readManifest(spark, path, currentVersion(spark, path).get)
-          try checkAgainst(now)
-          catch { case t: Throwable => undo(); throw t }
-          if (now.constraints != cur.constraints)
-            try enforceConstraints(
-              toLogical(rawScan(spark, path, now, newRels), now.colmap),
-              now.constraints, "CHERRY-PICK")
-            catch { case t: Throwable => undo(); throw t }
-          cur = now
-      }
+    val v = commitRebasing(spark, path, mm0, () => undo()) { (on, head) =>
+      checkAgainst(head)
+      if (head.constraints != on.constraints)
+        enforceConstraints(toLogical(rawScan(spark, path, head, newRels), head.colmap),
+          head.constraints, "CHERRY-PICK")
+    } { on =>
+      commit(spark, path, on.version + 1, on, on.files ++ newRels, newStats,
+        op = Some("cherry-pick"))
     }
-    sys.error("unreachable")
+    dropBranch(spark, path, name)
+    v
   }
 
   /** Versions pinned by live branches (their fork bases) — main's VACUUM
@@ -5440,10 +5435,7 @@ object ManifestTable {
       try f.exists(filePath(path, rel))
       catch { case _: java.io.IOException => false })
     if (missing.isEmpty || dryRun) return missing
-    commit(spark, path, v + 1, m.schema, m.partitionCols,
-      m.files.filterNot(missing.toSet), m.statsCols, Map.empty, m.bloomCols,
-      carry = Some(m), constraints = m.constraints, transforms = m.transforms,
-      colmap = m.colmap, retired = m.retired)
+    commit(spark, path, v + 1, m, m.files.filterNot(missing.toSet))
     missing
   }
 
@@ -5550,7 +5542,7 @@ object ManifestTable {
   def overwritePartitions(spark: SparkSession, path: String, df: DataFrame): Long = {
     val v0 = currentVersion(spark, path)
       .getOrElse(sys.error(s"no manifest table at $path — use overwrite"))
-    var m = readManifest(spark, path, v0)
+    val m = readManifest(spark, path, v0)
     requireMutable(m, path, "OVERWRITE PARTITIONS")
     require(m.partitionCols.nonEmpty, "table is unpartitioned — use overwrite")
     requireUniformLayout(m, "overwritePartitions")
@@ -5558,32 +5550,17 @@ object ManifestTable {
       df.drop(m.transforms.map(_.derived): _*), m.transforms, Some(m.schema)))
     requireCompatible(batch, m, "overwritePartitions")
     enforceConstraints(batch, m.constraints, "overwritePartitions")
-    val base = m
-    val added = writeDataFiles(spark, path,
-      clusterForWrite(batch, m), m.partitionCols,
-      m.colmap)
-    val replacedDirs = added.map(dirOf).toSet
-    val addedStats =
-      collectStats(spark, path, added, m.schema, m.partitionCols,
-        m.statsCols, m.bloomCols)
-    var tries = 0
-    while (true) {
-      require(m.partitionCols == base.partitionCols,
+    val w = writeFiles(spark, path, clusterForWrite(batch, m), m)
+    val replacedDirs = w.rels.map(dirOf).toSet
+    commitRebasing(spark, path, m) { (_, head) =>
+      require(head.partitionCols == m.partitionCols,
         s"table partitioning changed concurrently: " +
-          s"${base.partitionCols} -> ${m.partitionCols}")
-      requireCompatible(batch, m, "overwritePartitions")
-      val kept = m.files.filterNot(rel => replacedDirs.contains(dirOf(rel)))
-      try return commit(spark, path, m.version + 1, m.schema, m.partitionCols,
-        kept ++ added, m.statsCols, addedStats, m.bloomCols, carry = Some(m),
-        constraints = m.constraints, transforms = m.transforms,
-        colmap = m.colmap, retired = m.retired)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          tries += 1; if (tries > MaxCommitRetries) throw e
-          m = readManifest(spark, path, currentVersion(spark, path).get)
-      }
+          s"${m.partitionCols} -> ${head.partitionCols}")
+      requireCompatible(batch, head, "overwritePartitions")
+    } { on =>
+      val kept = on.files.filterNot(rel => replacedDirs.contains(dirOf(rel)))
+      commit(spark, path, on.version + 1, on, kept ++ w.rels, w.statsOn(spark, path, on))
     }
-    sys.error("unreachable")
   }
 
   /** Replace the table's CONTENT while preserving its DEFINITION — what
@@ -5618,7 +5595,7 @@ object ManifestTable {
     basePin.foreach(p => if (v0 != p)
       throw new java.util.ConcurrentModificationException(
         s"$path moved to version $v0 since the rewrite read version $p — re-run"))
-    var m = readManifest(spark, path, v0)
+    val m = readManifest(spark, path, v0)
     requireMutable(m, path, "INSERT OVERWRITE")
     val batch = fillIdentity(m, fillDefaults(m, withDerived(
       df.drop(m.transforms.map(_.derived): _*), m.transforms, Some(m.schema))),
@@ -5627,46 +5604,37 @@ object ManifestTable {
     enforceConstraints(batch, m.constraints, "overwrite")
     // fresh stats declarations resolve to the PHYSICAL name the evolved
     // schema assigned the new column
-    val statsCols2 = m.statsCols ++
-      extraStats.map(c => colmap0.getOrElse(c, c)).filterNot(m.statsCols.contains)
-    val base = m
+    def withExtraStats(on: Manifest): Seq[String] = on.statsCols ++
+      extraStats.map(c => colmap0.getOrElse(c, c)).filterNot(on.statsCols.contains)
     val (batchW, idObs) = observeIdentityMax(m, batch)
-    val added = writeDataFiles(spark, path,
-      clusterForWrite(batchW, m), m.partitionCols,
-      colmap0)
-    val addedStats = collectStats(spark, path, added, schema0,
-      m.partitionCols, statsCols2, m.bloomCols)
-    val idWm = identityWmUpdate(spark, path, base, added, addedStats, idObs)
-    var tries = 0
-    while (true) {
-      basePin.foreach(p => if (m.version != p)
-        throw new java.util.ConcurrentModificationException(
-          s"$path moved past version $p during the rewrite — re-run"))
-      require(m.partitionCols == base.partitionCols,
+    val w = writeFiles(spark, path, clusterForWrite(batchW, m),
+      m.copy(schema = schema0, colmap = colmap0, statsCols = withExtraStats(m)))
+    val idWm = identityWmUpdate(spark, path, m, w.rels, w.stats, idObs)
+    commitRebasing(spark, path, m) { (_, head) =>
+      basePin.foreach(p => throw new java.util.ConcurrentModificationException(
+        s"$path moved past version $p during the rewrite — re-run"))
+      require(head.partitionCols == m.partitionCols,
         s"table partitioning changed concurrently: " +
-          s"${base.partitionCols} -> ${m.partitionCols}")
-      if (m.colmap != base.colmap || m.retired != base.retired)
+          s"${m.partitionCols} -> ${head.partitionCols}")
+      if (head.colmap != m.colmap || head.retired != m.retired)
         throw new java.util.ConcurrentModificationException(
           s"INSERT OVERWRITE on $path lost to a rename/drop commit — the " +
             "batch's files were written under the old physical names; re-run")
       if (idWm.nonEmpty &&
-          m.props.get(IdentityWmProp) != base.props.get(IdentityWmProp))
+          head.props.get(IdentityWmProp) != m.props.get(IdentityWmProp))
         throw new java.util.ConcurrentModificationException(
           s"identity allocation on $path lost to a concurrent write — the " +
             "batch's generated ids were minted from a stale watermark; re-run")
-      try return commit(spark, path, m.version + 1, schema0, m.partitionCols,
-        added, statsCols2, addedStats, m.bloomCols,
-        carry = Some(m.copy(ingests = Nil)),
-        constraints = m.constraints, transforms = m.transforms,
-        colmap = colmap0, retired = m.retired, op = Some("overwrite"),
+    } { on =>
+      // the head's definition carries: its schema evolves by the batch,
+      // its stats declarations gain the extra ones
+      val (schema, colmap2) = evolveSchema(batch, on, "overwrite")
+      val landing = on.copy(schema = schema, colmap = colmap2,
+        statsCols = withExtraStats(on), ingests = Nil)
+      commit(spark, path, on.version + 1, landing, w.rels,
+        w.statsOn(spark, path, landing), op = Some("overwrite"),
         props = idWm ++ extraProps)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          tries += 1; if (tries > MaxCommitRetries || basePin.isDefined) throw e
-          m = readManifest(spark, path, currentVersion(spark, path).get)
-      }
     }
-    sys.error("unreachable")
   }
 
   /** Declare a GENERATED column on an EXISTING table — the post-hoc
@@ -5841,7 +5809,7 @@ object ManifestTable {
                    cols: Seq[String]): (Long, Seq[String]) = {
     val v0 = currentVersion(spark, path)
       .getOrElse(sys.error(s"no manifest table at $path"))
-    var m = readManifest(spark, path, v0)
+    val m = readManifest(spark, path, v0)
     val logical = logicalSchema(m)
     cols.foreach { c =>
       require(logical.fieldNames.contains(c),
@@ -5861,31 +5829,24 @@ object ManifestTable {
     if (fresh.isEmpty && statless.isEmpty) return (v0, Nil)
     val computed = collectStats(spark, path, m.files, m.schema,
       m.partitionCols, fresh, Nil, forceRows = true)
-    var tries = 0
-    while (true) {
-      // re-merge against the (possibly rebased) snapshot each attempt:
-      // the computed stats describe IMMUTABLE files, so entries survive
-      // for files the winner still references, files it dropped fall out
-      // of the merge, and files it added commit statless — exactly what
-      // every stats table already tolerates
-      val existing = statsFor(spark, path, m)
-      val merged = m.files.flatMap { rel =>
+    // re-merge against the snapshot each attempt lands on: the computed
+    // stats describe IMMUTABLE files, so entries survive for files the
+    // winner still references, files it dropped fall out of the merge,
+    // and files it added commit statless — exactly what every stats
+    // table already tolerates
+    val v = commitRebasing(spark, path, m)((_, _) => ()) { on =>
+      val existing = statsFor(spark, path, on)
+      val merged = on.files.flatMap { rel =>
         val st = existing.getOrElse(rel, Map.empty) ++
           computed.getOrElse(rel, Map.empty)
         if (st.isEmpty) None else Some(rel -> st)
       }.toMap
-      try return (commit(spark, path, m.version + 1, m.schema, m.partitionCols,
-        m.files, m.statsCols ++ fresh, merged, m.bloomCols, carry = Some(m),
-        constraints = m.constraints, transforms = m.transforms,
-        colmap = m.colmap, retired = m.retired, op = Some("analyze")),
-        fresh)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          tries += 1; if (tries > MaxCommitRetries) throw e
-          m = readManifest(spark, path, currentVersion(spark, path).get)
-      }
+      commit(spark, path, on.version + 1,
+        on.copy(statsCols = on.statsCols ++ fresh.filterNot(on.statsCols.contains)),
+        on.files, merged,
+        op = Some("analyze"))
     }
-    sys.error("unreachable")
+    (v, fresh)
   }
 
   /** Keyed MERGE (upsert): rows whose `keys` match existing rows replace
@@ -5909,7 +5870,8 @@ object ManifestTable {
   def merge(spark: SparkSession, path: String, updates: DataFrame,
             keys: Seq[String], partitionCols: Seq[String] = Nil,
             deleteKeys: Option[DataFrame] = None,
-            txn: Option[(String, Long)] = None): Long =
+            txn: Option[(String, Long)] = None): Long = {
+    val mode = dmlMode(spark) // a mistyped mode fails before any work
     currentVersion(spark, path) match {
       case None =>
         // lost CREATE race → the table exists now; merge into it instead of
@@ -5926,10 +5888,11 @@ object ManifestTable {
           Some(m.schema)))
         requireCompatible(batch, m, "merge")
         enforceConstraints(batch, m.constraints, "merge")
-        if (morDml(spark))
-          return mergeMor(spark, path, v, m, batch, keys, deleteKeys, txn)
-        if (eqDml(spark))
-          return mergeEq(spark, path, v, m, batch, keys, deleteKeys, txn)
+        mode match {
+          case "mor" => return mergeMor(spark, path, v, m, batch, keys, deleteKeys, txn)
+          case "eq" => return mergeEq(spark, path, v, m, batch, keys, deleteKeys, txn)
+          case _ =>
+        }
         val existing = readVersion(spark, path, v)
         val ordered = existing.columns.map(col).toSeq
         // every key this merge removes from the current snapshot: keys being
@@ -5957,19 +5920,15 @@ object ManifestTable {
         if (m.partitionCols.isEmpty) {
           val kept = cutByKeys(existing, touchKeys, "left_anti", bcastRight = false)
           val next = kept.unionByName(batch.select(ordered: _*)).localCheckpoint(true)
-          val files = writeDataFiles(spark, path, next, Nil, m.colmap)
+          val w = writeFiles(spark, path, next, m)
           // full-table rewrite: ANY concurrent commit invalidates the
           // snapshot this merge rewrote — no rebase path exists.
-          // carry = m: table properties, sink txn watermarks and the COPY
-          // ledger survive the rewrite (dropped-file stats/DV entries are
-          // filtered by the new file set inside commit); without it an
-          // unpartitioned merge silently SHED the table's props and every
-          // other sink's exactly-once watermark.
-          commit(spark, path, v + 1, m.schema, Nil, files, m.statsCols,
-            collectStats(spark, path, files, m.schema, Nil, m.statsCols,
-              m.bloomCols), m.bloomCols, carry = Some(m),
-            constraints = m.constraints,
-            transforms = m.transforms, colmap = m.colmap, retired = m.retired,
+          // Landing on m carries table properties, sink txn watermarks and
+          // the COPY ledger through the rewrite (dropped-file stats/DV
+          // entries are filtered by the new file set inside commit);
+          // without them an unpartitioned merge silently SHED the table's
+          // props and every other sink's exactly-once watermark.
+          commit(spark, path, v + 1, m, w.rels, w.stats,
             op = Some("merge"), opCols = keys, txn = txn)
         } else {
           requireUniformLayout(m, "merge into a partitioned table")
@@ -5988,71 +5947,70 @@ object ManifestTable {
             existing.join(broadcast(affectedDf), m.partitionCols),
             touchKeys, "left_anti", bcastRight = false)
           val next = kept.unionByName(batch.select(ordered: _*)).localCheckpoint(true)
-          val added = writeDataFiles(spark, path,
-            clusterForWrite(next, m), m.partitionCols,
-            m.colmap)
+          val w = writeFiles(spark, path, clusterForWrite(next, m), m)
           // remove every affected partition's old entries (NOT just dirs the
           // new files landed in — a drained partition writes no files)
           val affectedDirs = affected.map(vals =>
             m.partitionCols.zip(vals).map { case (c, value) =>
               s"$c=${org.apache.spark.sql.graft.bridge.escapePathValue(value)}"
             }.mkString("/")).toSet
-          val addedStats =
-            collectStats(spark, path, added, m.schema, m.partitionCols,
-              m.statsCols, m.bloomCols)
-          var cur = m
-          var tries = 0
-          while (true) {
-            val keptFiles = cur.files.filterNot(rel => affectedDirs.contains(dirOf(rel)))
-            try return commit(spark, path, cur.version + 1, m.schema, m.partitionCols,
-              keptFiles ++ added, m.statsCols, addedStats, m.bloomCols, carry = Some(cur),
-              constraints = cur.constraints, transforms = m.transforms,
-              colmap = m.colmap, retired = m.retired,
-              op = Some("merge"), opCols = keys, txn = txn)
-            catch {
-              case e: java.util.ConcurrentModificationException =>
-                tries += 1; if (tries > MaxCommitRetries) throw e
-                val now = readManifest(spark, path, currentVersion(spark, path).get)
-                // rebase is sound ONLY against a non-interacting delta:
-                if (now.schema != m.schema || now.colmap != m.colmap)
-                  throw new java.util.ConcurrentModificationException(
-                    s"merge of $path lost to a commit that changed the table schema — " +
-                      "re-run against the new snapshot")
-                val removed = cur.files.toSet -- now.files.toSet
-                if (removed.nonEmpty) throw new java.util.ConcurrentModificationException(
-                  s"merge of $path lost to a commit that rewrote ${removed.size} file(s) " +
-                    "this merge read — re-run against the new snapshot")
-                // a constraint added mid-merge must gate this batch too —
-                // committing the OLD set would silently drop the new CHECK
-                if (now.constraints != cur.constraints)
-                  enforceConstraints(batch, now.constraints, "merge")
-                // a concurrent deleteVectorized changed file CONTENT without
-                // changing the file list — the rows this merge derived are
-                // stale exactly as if the file had been rewritten
-                if (now.dvs != cur.dvs) throw new java.util.ConcurrentModificationException(
-                  s"merge of $path lost to a commit that changed deletion vectors — " +
-                    "re-run against the new snapshot")
-                val fresh = now.files.filterNot(cur.files.toSet)
-                if (fresh.exists(rel => affectedDirs.contains(dirOf(rel))))
-                  throw new java.util.ConcurrentModificationException(
-                    s"merge of $path lost to a commit that wrote into a partition " +
-                      "this merge rewrites — re-run against the new snapshot")
-                if (fresh.nonEmpty) {
-                  // NULL-SAFE, like the key cut itself: a concurrent
-                  // append of null-keyed rows conflicts with a null-keyed
-                  // tombstone exactly as a non-null key would
-                  val overlap = cutByKeys(readRels(spark, path, now, fresh),
-                    touchKeys.distinct(), "left_semi", bcastRight = true)
-                  if (!overlap.isEmpty) throw new java.util.ConcurrentModificationException(
-                    s"merge of $path lost to a commit that appended rows sharing its " +
-                      "merge keys — re-run against the new snapshot")
-                }
-                cur = now
-            }
+          // rebase is sound ONLY against a non-interacting delta
+          commitRebasing(spark, path, m) { (on, head) =>
+            mergeRebase(path, m, batch, on, head)
+            val removed = on.files.toSet -- head.files.toSet
+            if (removed.nonEmpty)
+              mergeLost(path, s"rewrote ${removed.size} file(s) this merge read")
+            // a concurrent deleteVectorized changed file CONTENT without
+            // changing the file list — the rows this merge derived are
+            // stale exactly as if the file had been rewritten
+            if (head.dvs != on.dvs) mergeLost(path, "changed deletion vectors")
+            val fresh = head.files.filterNot(on.files.toSet)
+            if (fresh.exists(rel => affectedDirs.contains(dirOf(rel))))
+              mergeLost(path, "wrote into a partition this merge rewrites")
+            if (fresh.nonEmpty && holdsKeys(spark, path, head, fresh, keys,
+                touchKeys.distinct().toDF(keys.map("__mk_" + _): _*)))
+              mergeLost(path, "appended rows sharing this merge's keys")
+          } { on =>
+            commit(spark, path, on.version + 1, on,
+              on.files.filterNot(rel => affectedDirs.contains(dirOf(rel))) ++ w.rels,
+              w.statsOn(spark, path, on), op = Some("merge"), opCols = keys, txn = txn)
           }
-          sys.error("unreachable")
         }
     }
+  }
+
+  /** The conflict rule every MERGE encoding shares on a lost race. The
+    * batch was shaped against `base`'s definition, so a head with another
+    * schema, column mapping or partitioning refuses. Landing commits the
+    * head's constraints, so a constraint added since `on` re-gates the
+    * batch — committing the old set would silently drop the new CHECK. */
+  private def mergeRebase(path: String, base: Manifest, batch: DataFrame,
+                          on: Manifest, head: Manifest): Unit = {
+    if (head.schema != base.schema || head.colmap != base.colmap ||
+        head.partitionCols != base.partitionCols ||
+        head.transforms != base.transforms)
+      mergeLost(path, "changed the table definition")
+    if (head.constraints != on.constraints)
+      enforceConstraints(batch, head.constraints, "merge")
+  }
+
+  private def mergeLost(path: String, what: String): Nothing =
+    throw new java.util.ConcurrentModificationException(
+      s"merge of $path lost to a concurrent commit that $what — " +
+        "re-run against the new snapshot")
+
+  /** Does any row of `rels` carry a key of `touchKeys` (columns
+    * `__mk_<key>`)? NULL-SAFE (<=>) like the merge key cut itself: a
+    * concurrent append of null-keyed rows conflicts with a null-keyed
+    * tombstone exactly as a non-null key would. */
+  private def holdsKeys(spark: SparkSession, path: String, m: Manifest,
+                        rels: Seq[String], keys: Seq[String],
+                        touchKeys: DataFrame): Boolean = {
+    val rows = readRels(spark, path, m, rels)
+    !rows.join(broadcast(touchKeys),
+      keys.map(k => rows(k) <=> touchKeys("__mk_" + k)).reduce(_ && _),
+      "left_semi").isEmpty
+  }
 
   /** Merge-on-read MERGE (`spark.graft.dml.mode=mor`): the old copies of
     * every key the merge touches (updated OR deleted) become deletion-
@@ -6063,10 +6021,9 @@ object ManifestTable {
     * million changed keys against billions of resident rows must not
     * re-write the resident bytes. Same null-safe `<=>` key cut as the
     * COW path (NOT MATCHED BY SOURCE legs may delete null-keyed rows);
-    * `op=merge`+keys gives CDF the four-type refinement; losing the
-    * version race throws with the sidecar cleaned up — parity with
-    * [[deleteVectorized]], no rebase (the COW rebase re-reads rewritten
-    * partitions, which MOR never materializes). */
+    * `op=merge`+keys gives CDF the four-type refinement; a lost version
+    * race rebases past a winner that cannot interact and otherwise
+    * throws with the sidecar cleaned up. */
   private def mergeMor(spark: SparkSession, path: String, v: Long,
                        m: Manifest, batch: DataFrame, keys: Seq[String],
                        deleteKeys: Option[DataFrame],
@@ -6094,104 +6051,78 @@ object ManifestTable {
       .select(col("__dv_fname").as("fname"), col("__dv_pos").as("pos"))
       .localCheckpoint(true)
     val (dvName, newDvs) = writeDvEntries(spark, path, m, v, matchedPos)
-    val added = if (b.isEmpty) Nil
-      else writeDataFiles(spark, path, clusterForWrite(b, m),
-        m.partitionCols, m.colmap)
-    if (newDvs.isEmpty && added.isEmpty) return v
-    val addedStats = collectStats(spark, path, added, m.schema,
-      m.partitionCols, m.statsCols, m.bloomCols)
-    val newFiles = if (m.statsCols.nonEmpty || m.bloomCols.nonEmpty)
-                     added.filter(addedStats.contains)
-                   else added
+    val w = if (b.isEmpty) Written(Nil, Map.empty, m)
+            else writeFiles(spark, path, clusterForWrite(b, m), m)
+    if (newDvs.isEmpty && w.rels.isEmpty) return v
     def cleanup(): Unit = dvName.foreach(n =>
       fs(spark, path).delete(new Path(dvDir(path), n), true): Unit)
-    def lost(msg: String): Nothing = {
-      cleanup()
-      throw new java.util.ConcurrentModificationException(
-        s"merge of $path lost to a concurrent commit that $msg — " +
-          "re-run against the new snapshot")
-    }
-    // rebase loop: appends COMMUTE with a MOR merge unless they carry the
+    // rebase: appends COMMUTE with a MOR merge unless they carry the
     // merge's keys — same discipline as the COW rebase, but the stakes
     // differ (our DV entries reference the files we READ, so any change
     // to those files' identity or DVs is a stale-read conflict)
-    var cur = m
-    var tries = 0
-    while (true) {
-      try return commit(spark, path, cur.version + 1, m.schema,
-        m.partitionCols, cur.files ++ newFiles, m.statsCols, addedStats,
-        m.bloomCols, carry = Some(cur), dvs = newDvs,
-        constraints = cur.constraints, transforms = m.transforms,
-        colmap = m.colmap, retired = m.retired,
+    commitRebasing(spark, path, m, () => cleanup()) { (on, head) =>
+      mergeRebase(path, m, b, on, head)
+      val removed = on.files.toSet -- head.files.toSet
+      // a removed file OUTSIDE the candidate set was proven key-free
+      // (pruning layers only KEEP extra files) and none of our DV
+      // entries reference it — its rewrite commutes with this merge
+      if (removed.exists(rel => candidateSet.contains(rel) ||
+          newDvs.contains(rel)))
+        mergeLost(path, "rewrote file(s) this merge read or deletion-vectored")
+      // our sidecar merged the PRIOR positions of exactly the files it
+      // touches; a concurrent DV change on one of them would be
+      // silently dropped by the entry replacement
+      if (newDvs.keys.exists(rel => head.dvs.get(rel) != m.dvs.get(rel)))
+        mergeLost(path, "changed deletion vectors on file(s) this merge re-vectors")
+      val fresh = head.files.filterNot(on.files.toSet)
+      if (fresh.nonEmpty && holdsKeys(spark, path, head, fresh, keys, touchKeys))
+        mergeLost(path, "appended rows sharing this merge's keys")
+    } { on =>
+      commit(spark, path, on.version + 1, on, on.files ++ w.rels,
+        w.statsOn(spark, path, on), dvs = newDvs,
         op = Some("merge"), opCols = keys, txn = txn)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          tries += 1; if (tries > MaxCommitRetries) { cleanup(); throw e }
-          val now = readManifest(spark, path, currentVersion(spark, path).get)
-          if (now.schema != m.schema || now.colmap != m.colmap)
-            lost("changed the table schema")
-          val removed = cur.files.toSet -- now.files.toSet
-          // a removed file OUTSIDE the candidate set was proven key-free
-          // (pruning layers only KEEP extra files) and none of our DV
-          // entries reference it — its rewrite commutes with this merge
-          if (removed.exists(rel => candidateSet.contains(rel) ||
-              newDvs.contains(rel)))
-            lost("rewrote file(s) this merge read or deletion-vectored")
-          // our sidecar merged the PRIOR positions of exactly the files it
-          // touches; a concurrent DV change on one of them would be
-          // silently dropped by the entry replacement
-          if (newDvs.keys.exists(rel => now.dvs.get(rel) != m.dvs.get(rel)))
-            lost("changed deletion vectors on file(s) this merge re-vectors")
-          if (now.constraints != cur.constraints)
-            try enforceConstraints(b, now.constraints, "merge")
-            catch { case t: Throwable => cleanup(); throw t }
-          val fresh = now.files.filterNot(cur.files.toSet)
-          if (fresh.nonEmpty) {
-            // NULL-SAFE (<=>), matching the key cut: a concurrent append
-            // of null-keyed rows during a merge carrying a null-keyed
-            // tombstone is a stale-read conflict like any other
-            val freshRows = readRels(spark, path, now, fresh)
-            val overlap = freshRows.join(broadcast(touchKeys),
-              keys.map(k => freshRows(k) <=> touchKeys("__mk_" + k))
-                .reduce(_ && _), "left_semi")
-            if (!overlap.isEmpty)
-              lost("appended rows sharing this merge's keys")
-          }
-          cur = now
-      }
     }
-    sys.error("unreachable")
   }
 
-  /** Candidate files for a MOR merge's key cut. When the LEADING merge
-    * key is a stats/Bloom column and its distinct values are driver-
-    * collectable (≤ `spark.graft.mor.keyPruneMax`, default 100 000), zone
-    * maps bound the scan to files whose [min,max] meets the key range,
-    * and Blooms (for sets ≤ 4096, where per-file probing stays cheap)
-    * drop files holding none of the values. Composite keys prune on the
-    * leading column alone — a (tenant, id) CDC key cuts to the touched
-    * tenants' files, a conservative SUPERSET of the true match set (the
-    * key cut's join decides exactly). Conservative by construction —
-    * every layer only ever KEEPS extra files; NULL leading keys,
-    * uncollectable sets and statless columns fall back to every file. */
+  /** Candidate files for a MOR merge's key cut: [[keyCandidates]] on the
+    * LEADING merge key. Composite keys prune on the leading column alone
+    * — a (tenant, id) CDC key cuts to the touched tenants' files, a
+    * conservative SUPERSET of the true match set (the key cut's join
+    * decides exactly). An unknowable candidate set (NULL leading keys,
+    * uncollectable sets, statless columns) falls back to every file. */
   private[sources] def morMergeCandidates(spark: SparkSession, path: String,
                                           m: Manifest, keys: Seq[String],
                                           touchKeys: DataFrame): Seq[String] = {
-    val ph = m.colmap.getOrElse(keys.head, keys.head)
-    if (!m.statsCols.contains(ph) && !m.bloomCols.contains(ph)) return m.files
-    val cap = spark.conf.getOption("spark.graft.mor.keyPruneMax")
-      .map(_.toInt).getOrElse(100000)
     // composite keys: the leading column's DISTINCT values can sit under
     // the cap even when the full key set does not
-    val lead = if (keys.length == 1) touchKeys
-               else touchKeys.select(touchKeys.columns.head).distinct()
+    keyCandidates(spark, path, m, m.colmap.getOrElse(keys.head, keys.head),
+      if (keys.length == 1) touchKeys
+      else touchKeys.select(touchKeys.columns.head).distinct())
+      .getOrElse(m.files)
+  }
+
+  /** The key-candidate prune shared by the MOR key cut and eqdel
+    * exoneration: the files of `m` that may hold a value of `lead`'s
+    * first column, a key column stored as physical column `ph`. Zone maps
+    * bound the files to the values' [min, max]; Blooms (for sets ≤ 4096,
+    * where per-file probing stays cheap) drop files holding none of them.
+    * Conservative — every layer only ever KEEPS extra files. None when
+    * the set is unknowable: `ph` carries neither stats nor a Bloom, the
+    * values (or `count`, when the caller knows it) pass
+    * `spark.graft.mor.keyPruneMax` (default 100 000), or a value is NULL
+    * (null-safe equality matches rows zone maps cannot see). `lead` is
+    * only evaluated once those cheap checks pass. */
+  private def keyCandidates(spark: SparkSession, path: String, m: Manifest,
+                            ph: String, lead: => DataFrame,
+                            count: Option[Long] = None): Option[Seq[String]] = {
+    if (!m.statsCols.contains(ph) && !m.bloomCols.contains(ph)) return None
+    val cap = spark.conf.getOption("spark.graft.mor.keyPruneMax")
+      .map(_.toInt).getOrElse(100000)
+    if (count.exists(_ > cap)) return None
     val rows = lead.limit(cap + 1).collect()
-    if (rows.length > cap) return m.files
-    // a NULL key (NOT MATCHED BY SOURCE deleting null-keyed rows) is
-    // invisible to zone maps/Blooms — scan everything
-    if (rows.exists(_.isNullAt(0))) return m.files
+    if (rows.length > cap || rows.exists(_.isNullAt(0))) return None
     val vals = rows.map(_.get(0)).toSeq
-    if (vals.isEmpty) return m.files
+    if (vals.isEmpty) return Some(Nil)
     val (mn, mx) = vals.tail.foldLeft((vals.head, vals.head)) {
       case ((lo, hi), x) =>
         (if (statCompare(x, lo).exists(_ < 0)) x else lo,
@@ -6199,7 +6130,7 @@ object ManifestTable {
     }
     val points: Map[String, Seq[Any]] =
       if (vals.length <= 4096) Map(ph -> vals) else Map.empty
-    prunedRels(spark, path, m, Map(ph -> ((Some(mn), Some(mx)))), points)
+    Some(prunedRels(spark, path, m, Map(ph -> ((Some(mn), Some(mx)))), points))
   }
 
   /** EQUALITY-DELETE MERGE (`spark.graft.dml.mode=eq` — Iceberg v2's
@@ -6216,8 +6147,9 @@ object ManifestTable {
     * once, and CDF across the commit refuses unless
     * `spark.graft.cdf.eqdels=compute` opts into the keyed-scan delta.
     * CLONE, branch and FAST FORWARD renumber sequences across version
-    * domains, so the zero-copy lifecycle never demands a PURGE. Rebase is UNCONDITIONAL except definition
-    * changes: an eq-merge reads nothing, so appends/rewrites/other
+    * domains, so the zero-copy lifecycle never demands a PURGE. Rebase is
+    * UNCONDITIONAL except definition changes ([[mergeRebase]]): an
+    * eq-merge reads nothing, so appends/rewrites/other
     * merges all commute — the retry re-sequences the entry at the new
     * head, which IS the CDC linearization by commit order. A concurrent
     * constraint add re-gates the batch on retry. */
@@ -6248,45 +6180,16 @@ object ManifestTable {
     val count = obs.get("n").asInstanceOf[Long]
     def cleanup(): Unit =
       fs(spark, path).delete(new Path(eqdDir(path), name), true): Unit
-    val added = if (b.isEmpty) Nil
-      else writeDataFiles(spark, path, clusterForWrite(b, m),
-        m.partitionCols, m.colmap)
-    if (count == 0L && added.isEmpty) { cleanup(); return v }
-    val addedStats = collectStats(spark, path, added, m.schema,
-      m.partitionCols, m.statsCols, m.bloomCols)
-    val newFiles = if (m.statsCols.nonEmpty || m.bloomCols.nonEmpty)
-                     added.filter(addedStats.contains)
-                   else added
-    var cur = m
-    var tries = 0
-    while (true) {
-      val nv = cur.version + 1
-      try return commit(spark, path, nv, m.schema, m.partitionCols,
-        cur.files ++ newFiles, m.statsCols, addedStats, m.bloomCols,
-        carry = Some(cur), constraints = cur.constraints,
-        transforms = m.transforms, colmap = m.colmap, retired = m.retired,
+    val w = if (b.isEmpty) Written(Nil, Map.empty, m)
+            else writeFiles(spark, path, clusterForWrite(b, m), m)
+    if (count == 0L && w.rels.isEmpty) { cleanup(); return v }
+    commitRebasing(spark, path, m, () => cleanup())(mergeRebase(path, m, b, _, _)) { on =>
+      val nv = on.version + 1
+      commit(spark, path, nv, on, on.files ++ w.rels, w.statsOn(spark, path, on),
         op = Some("merge"), opCols = keys, txn = txn,
         eqdels = if (count == 0L) Nil
                  else Seq(EqDelete(name, phKeys, nv, count)))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          tries += 1; if (tries > MaxCommitRetries) { cleanup(); throw e }
-          val now = readManifest(spark, path, currentVersion(spark, path).get)
-          if (now.schema != m.schema || now.colmap != m.colmap ||
-              now.partitionCols != m.partitionCols ||
-              now.transforms != m.transforms) {
-            cleanup()
-            throw new java.util.ConcurrentModificationException(
-              s"merge of $path lost to a commit that changed the table " +
-                "definition — re-run against the new snapshot")
-          }
-          if (now.constraints != cur.constraints)
-            try enforceConstraints(b, now.constraints, "merge")
-            catch { case t: Throwable => cleanup(); throw t }
-          cur = now
-      }
     }
-    sys.error("unreachable")
   }
 
   /** Row-level DELETE, copy-on-write: rewrite ONLY the files that hold
@@ -6317,10 +6220,7 @@ object ManifestTable {
       case Some(matching) =>
         if (matching.isEmpty) return v
         val doomed = matching.toSet
-        commit(spark, path, v + 1, m.schema, m.partitionCols,
-          m.files.filterNot(doomed), m.statsCols, Map.empty, m.bloomCols,
-          carry = Some(m), constraints = m.constraints,
-          transforms = m.transforms, colmap = m.colmap, retired = m.retired)
+        commit(spark, path, v + 1, m, m.files.filterNot(doomed))
       case None =>
         rewriteWithout(spark, path, v, m,
           touchedFiles(spark, path, m.files, m, predicate), predicate)
@@ -6375,10 +6275,7 @@ object ManifestTable {
     try {
       val (dvName, newDvs) = writeDvEntries(spark, path, m, v, fresh)
       if (dvName.isEmpty) return v
-      try commit(spark, path, v + 1, m.schema, m.partitionCols, m.files,
-        m.statsCols, Map.empty, m.bloomCols, carry = Some(m), dvs = newDvs,
-        constraints = m.constraints, transforms = m.transforms,
-        colmap = m.colmap, retired = m.retired)
+      try commit(spark, path, v + 1, m, m.files, dvs = newDvs)
       catch { case e: java.util.ConcurrentModificationException =>
         dvName.foreach(n => fs(spark, path).delete(new Path(dvDir(path), n), true))
         throw e
@@ -6457,10 +6354,7 @@ object ManifestTable {
     if (affected.isEmpty)
       // every affected file exonerated (the keys matched nothing still
       // live): retire the entries in one METADATA-ONLY commit
-      return commit(spark, path, v + 1, m.schema, m.partitionCols,
-        m.files, m.statsCols, Map.empty, m.bloomCols, carry = Some(m),
-        constraints = m.constraints, transforms = m.transforms,
-        colmap = m.colmap, retired = m.retired,
+      return commit(spark, path, v + 1, m, m.files,
         fseqExplicit = exonerated.iterator.map(_ -> (v + 1)).toMap)
     commitRewrite(spark, path, v, m, affected,
       readRels(spark, path, m, affected),
@@ -6479,27 +6373,13 @@ object ManifestTable {
   private def eqdelCandidates(spark: SparkSession, path: String,
                               m: Manifest, e: EqDelete): Option[Seq[String]] = {
     val ph = e.keyCols.head
-    if (!m.statsCols.contains(ph) && !m.bloomCols.contains(ph)) return None
-    val cap = spark.conf.getOption("spark.graft.mor.keyPruneMax")
-      .map(_.toInt).getOrElse(100000)
     // single-key: the sidecar count is exact, short-circuit past the cap
     // without opening it; composite: the LEAD's distinct count can sit
     // under the cap even when the full key set does not
-    if (e.keyCols.length == 1 && e.count > cap) return None
-    val keys0 = eqdelKeys(spark, path, m, e).select(col("__eqk_" + ph))
-    val lead = if (e.keyCols.length == 1) keys0 else keys0.distinct()
-    val rows = lead.limit(cap + 1).collect()
-    if (rows.length > cap || rows.exists(_.isNullAt(0))) return None
-    val vals = rows.map(_.get(0)).toSeq
-    if (vals.isEmpty) return Some(Nil)
-    val (mn, mx) = vals.tail.foldLeft((vals.head, vals.head)) {
-      case ((lo, hi), x) =>
-        (if (statCompare(x, lo).exists(_ < 0)) x else lo,
-         if (statCompare(x, hi).exists(_ > 0)) x else hi)
-    }
-    val points: Map[String, Seq[Any]] =
-      if (vals.length <= 4096) Map(ph -> vals) else Map.empty
-    Some(prunedRels(spark, path, m, Map(ph -> ((Some(mn), Some(mx)))), points))
+    def keys0 = eqdelKeys(spark, path, m, e).select(col("__eqk_" + ph))
+    keyCandidates(spark, path, m, ph,
+      if (e.keyCols.length == 1) keys0 else keys0.distinct(),
+      if (e.keyCols.length == 1) Some(e.count) else None)
   }
 
   /** Commit history straight from the manifest chain — the DESCRIBE
@@ -6661,10 +6541,8 @@ object ManifestTable {
       s"constraint '$name' already exists on $path")
     enforceConstraints(readVersion(spark, path, v), Seq(name -> sql),
       s"addConstraint($name) on existing data")
-    commit(spark, path, v + 1, m.schema, m.partitionCols, m.files,
-      m.statsCols, Map.empty, m.bloomCols, carry = Some(m),
-      constraints = m.constraints :+ (name -> sql), transforms = m.transforms,
-      colmap = m.colmap, retired = m.retired)
+    commit(spark, path, v + 1,
+      m.copy(constraints = m.constraints :+ (name -> sql)), m.files)
   }
 
   /** Drop a CHECK constraint (metadata-only commit). With `ifExists`, a
@@ -6677,10 +6555,8 @@ object ManifestTable {
     if (ifExists && !m.constraints.exists(_._1 == name)) return v
     require(m.constraints.exists(_._1 == name),
       s"no constraint '$name' on $path (have: ${m.constraints.map(_._1).mkString(", ")})")
-    commit(spark, path, v + 1, m.schema, m.partitionCols, m.files,
-      m.statsCols, Map.empty, m.bloomCols, carry = Some(m),
-      constraints = m.constraints.filterNot(_._1 == name), transforms = m.transforms,
-      colmap = m.colmap, retired = m.retired)
+    commit(spark, path, v + 1,
+      m.copy(constraints = m.constraints.filterNot(_._1 == name)), m.files)
   }
 
   /** A column rename/drop must not touch anything the table's machinery
@@ -6738,10 +6614,7 @@ object ManifestTable {
     val ph = m.colmap.getOrElse(oldName, oldName)
     val colmap2 = (m.colmap - oldName) ++
       (if (newName == ph) Map.empty[String, String] else Map(newName -> ph))
-    commit(spark, path, v + 1, m.schema, m.partitionCols, m.files,
-      m.statsCols, Map.empty, m.bloomCols, carry = Some(m),
-      constraints = m.constraints, transforms = m.transforms,
-      colmap = colmap2, retired = m.retired)
+    commit(spark, path, v + 1, m.copy(colmap = colmap2), m.files)
   }
 
   /** Add NULLABLE columns in a metadata-only commit — the explicit DDL
@@ -6801,11 +6674,9 @@ object ManifestTable {
     }
     val l2p = mapped.map(_._2).toMap
     commit(spark, path, v + 1,
-      StructType(m.schema.fields ++ mapped.map(_._1)), m.partitionCols,
-      m.files, m.statsCols, Map.empty, m.bloomCols, carry = Some(m),
-      constraints = m.constraints, transforms = m.transforms,
-      colmap = m.colmap ++ mapped.collect { case (_, (lg, ph)) if lg != ph => lg -> ph },
-      retired = m.retired,
+      m.copy(schema = StructType(m.schema.fields ++ mapped.map(_._1)),
+        colmap = m.colmap ++ mapped.collect { case (_, (lg, ph)) if lg != ph => lg -> ph }),
+      m.files,
       props = defaults.map { case (n, sql) =>
         s"$DefaultPropPrefix${l2p(n)}" -> sql })
   }
@@ -6833,10 +6704,9 @@ object ManifestTable {
       s"drop: column '$name' keys a live equality delete on $path — run " +
         "OPTIMIZE ... PURGE first (scoped to the affected files)")
     commit(spark, path, v + 1,
-      StructType(m.schema.fields.filterNot(_.name == ph)), m.partitionCols,
-      m.files, m.statsCols, Map.empty, m.bloomCols, carry = Some(m),
-      constraints = m.constraints, transforms = m.transforms,
-      colmap = m.colmap - name, retired = (m.retired :+ ph).distinct)
+      m.copy(schema = StructType(m.schema.fields.filterNot(_.name == ph)),
+        colmap = m.colmap - name, retired = (m.retired :+ ph).distinct),
+      m.files)
   }
 
   /** Does the type contain a floating-point leaf anywhere? */
@@ -6947,12 +6817,10 @@ object ManifestTable {
       m.schema.fields.filterNot(f => removedDerived.contains(f.name)) ++ fresh)
     // removed derived names RETIRE (like dropped columns): their old dirs
     // survive on disk, so the name may never mean something else
-    commit(spark, path, v + 1, schema2,
-      partitionCols ++ transforms.map(_.derived), m.files,
-      m.statsCols, Map.empty, m.bloomCols, carry = Some(m),
-      constraints = m.constraints, transforms = transforms,
-      colmap = m.colmap,
-      retired = (m.retired ++ removedDerived).distinct)
+    commit(spark, path, v + 1,
+      m.copy(schema = schema2, partitionCols = partitionCols ++ transforms.map(_.derived),
+        transforms = transforms, retired = (m.retired ++ removedDerived).distinct),
+      m.files)
   }
 
   /** Directory-based partition arithmetic (replaced-dirs, affected-dirs)
@@ -7046,6 +6914,7 @@ object ManifestTable {
     */
   def update(spark: SparkSession, path: String, predicate: Column,
              sets: Seq[(String, Column)]): Long = {
+    val mode = dmlMode(spark) // a mistyped mode fails before any work
     val v = currentVersion(spark, path)
       .getOrElse(sys.error(s"no manifest table at $path"))
     val m = readManifest(spark, path, v)
@@ -7075,7 +6944,7 @@ object ManifestTable {
     // eq mode routes UPDATE through MOR too: an UPDATE's SET reads the
     // old row regardless, so position deletes are the best it can do —
     // a user who opted out of COW write amplification gets it everywhere
-    if (morDml(spark) || eqDml(spark))
+    if (mode != "cow")
       return updateMor(spark, path, v, m, touched, hit, sets)
     val setMap = sets.toMap
     val replaced = logical.fields.map { f =>
@@ -7151,19 +7020,10 @@ object ManifestTable {
     val freshPos = matched
       .select(col("__dv_fname").as("fname"), col("__dv_pos").as("pos"))
     val (dvName, newDvs) = writeDvEntries(spark, path, m, v, freshPos)
-    val added = writeDataFiles(spark, path, clusterForWrite(rewritten, m),
-      m.partitionCols, m.colmap)
-    val addedStats = collectStats(spark, path, added, m.schema,
-      m.partitionCols, m.statsCols, m.bloomCols)
-    val newFiles = if (m.statsCols.nonEmpty || m.bloomCols.nonEmpty)
-                     added.filter(addedStats.contains)
-                   else added
-    try commit(spark, path, v + 1, m.schema, m.partitionCols,
-      m.files ++ newFiles, m.statsCols, addedStats, m.bloomCols,
-      carry = Some(m), dvs = newDvs, constraints = m.constraints,
-      transforms = m.transforms, colmap = m.colmap, retired = m.retired,
+    val w = writeFiles(spark, path, clusterForWrite(rewritten, m), m)
+    try commit(spark, path, v + 1, m, m.files ++ w.rels, w.stats, dvs = newDvs,
       op = Some("update"),
-      props = identityWmUpdate(spark, path, m, newFiles, addedStats))
+      props = identityWmUpdate(spark, path, m, w.rels, w.stats))
     catch { case e: java.util.ConcurrentModificationException =>
       dvName.foreach(n => fs(spark, path).delete(new Path(dvDir(path), n), true))
       throw e
@@ -7182,25 +7042,19 @@ object ManifestTable {
                             fseqExplicit: Map[String, Long] = Map.empty): Long = {
     val touchedSet = touched.toSet
     val untouched = m.files.filterNot(touchedSet)
-    val written = writeDataFiles(spark, path, replacement, m.partitionCols,
-      m.colmap)
-    val newStats = collectStats(spark, path, written, m.schema,
-      m.partitionCols, m.statsCols, m.bloomCols)
+    val w = writeFiles(spark, path, replacement, m)
     // a fully-drained rewrite can emit a ROW-LESS parquet file; the stats
     // pass records it as an explicit rows=0 entry — drop it from the
     // commit and let vacuum sweep the orphaned bytes.
     val newFiles = if (m.statsCols.nonEmpty || m.bloomCols.nonEmpty)
-                     written.filterNot(rel =>
-                       newStats.get(rel).exists(isZeroRowEntry))
-                   else written
+                     w.rels.filterNot(rel =>
+                       w.stats.get(rel).exists(isZeroRowEntry))
+                   else w.rels
     // identity tables self-sync the watermark past everything the rewrite
     // wrote (REPLACE WHERE mints fresh ids; delete/update rewrites carry
     // old ones, whose max never exceeds the current watermark — harmless)
-    commit(spark, path, v + 1, m.schema, m.partitionCols,
-      untouched ++ newFiles, m.statsCols, newStats, m.bloomCols, carry = Some(m),
-      constraints = m.constraints, transforms = m.transforms,
-      colmap = m.colmap, retired = m.retired, op = op,
-      props = identityWmUpdate(spark, path, m, newFiles, newStats),
+    commit(spark, path, v + 1, m, untouched ++ newFiles, w.stats, op = op,
+      props = identityWmUpdate(spark, path, m, newFiles, w.stats),
       fseqExplicit = fseqExplicit)
   }
 
@@ -7258,18 +7112,15 @@ object ManifestTable {
     } else graft.operators.Maintenance.sizedRepartition(
       current, m.partitionCols, targetRowsPerFile))
       .localCheckpoint(true) // materialize before writing (self-read safety)
-    val files = writeDataFiles(spark, path, sized, m.partitionCols, m.colmap)
-    // carry = Some(m): table-level metadata (TBLPROPERTIES, streaming txn
+    val w = writeFiles(spark, path, sized, m)
+    // landing on m: table-level metadata (TBLPROPERTIES, streaming txn
     // watermarks, the COPY ledger) must survive maintenance — dropping the
     // txn line here would make the sink REPLAY its last batch after the
     // next restart (exactly-once broken by an OPTIMIZE), and dropping
     // props would silently lift the appendOnly guard. DVs do not leak
-    // through the carry: every old file is rewritten out of the file set,
-    // and commit() filters carried DVs to surviving files.
-    commit(spark, path, v + 1, m.schema, m.partitionCols, files, m.statsCols,
-      collectStats(spark, path, files, m.schema, m.partitionCols, m.statsCols,
-        m.bloomCols), m.bloomCols, carry = Some(m), constraints = m.constraints,
-      transforms = m.transforms, colmap = m.colmap, retired = m.retired)
+    // through the landing: every old file is rewritten out of the file
+    // set, and commit() filters carried DVs to surviving files.
+    commit(spark, path, v + 1, m, w.rels, w.stats)
   }
 
   /** BIN-PACKING compaction: rewrite ONLY files smaller than
@@ -7410,11 +7261,8 @@ object ManifestTable {
       .foreach(n => sys.error(
         s"restore: equality-delete sidecar $n of version $toVersion was " +
           "vacuumed — that version is no longer restorable"))
-    commit(spark, path, cur + 1, target.schema, target.partitionCols,
-      target.files, target.statsCols, Map.empty, target.bloomCols,
-      carry = Some(target.copy(txns = now.txns)),
-      constraints = target.constraints, transforms = target.transforms,
-      colmap = target.colmap, retired = now.retired,
+    commit(spark, path, cur + 1,
+      target.copy(txns = now.txns, retired = now.retired), target.files,
       op = Some("restore"))
   }
 

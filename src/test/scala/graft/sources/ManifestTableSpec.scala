@@ -523,7 +523,8 @@ class ManifestTableSpec extends SparkSpec {
     // a lost race = the expected version number is already taken when the
     // rename happens; the raw commit primitive must abort, not overwrite
     intercept[java.util.ConcurrentModificationException] {
-      ManifestTable.commit(spark, path, expected = 1L, df.schema, Nil, Nil)
+      ManifestTable.commit(spark, path, expected = 1L,
+        ManifestTable.Manifest(0L, df.schema, Nil, Nil), Nil)
     }
     assert(ManifestTable.read(spark, path).count() === 1, "winner's snapshot intact")
   }
@@ -892,7 +893,8 @@ class ManifestTableSpec extends SparkSpec {
     }.toMap
     val schema = new org.apache.spark.sql.types.StructType()
       .add("id", org.apache.spark.sql.types.LongType)
-    ManifestTable.commit(spark, path, 1L, schema, Nil, files, Seq("id"), stats)
+    ManifestTable.commit(spark, path, 1L,
+      ManifestTable.Manifest(0L, schema, Nil, Nil, Seq("id")), files, stats)
     // the text manifest stays the commit root but carries no stats lines
     val txt = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path, "_manifests", f"m${1L}%012d.txt")))

@@ -284,6 +284,53 @@ class MorDmlSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.mor.keyPruneMax")
     assert(ManifestTable.read(spark, full).orderBy("id").collect().toSeq
       === ManifestTable.read(spark, cow).orderBy("id").collect().toSeq)
+    // the same cap gates eqdel exoneration in OPTIMIZE PURGE (one shared
+    // key prune): with it off, no pre-entry file is exonerated
+    // metadata-only — every one rewrites, and the answer still matches COW
+    val eqp = mk("kpeq")
+    val fleet = ManifestTable.readManifest(spark, eqp,
+      ManifestTable.currentVersion(spark, eqp).get).files.toSet
+    spark.conf.set(ManifestTable.DmlModeKey, "eq")
+    try ManifestTable.merge(spark, eqp, cdc(spark), keys = Seq("id"),
+      deleteKeys = Some(Seq(110L).toDF("id")))
+    finally spark.conf.unset(ManifestTable.DmlModeKey)
+    spark.conf.set("spark.graft.mor.keyPruneMax", "0")
+    try ManifestTable.rewriteDeletes(spark, eqp)
+    finally spark.conf.unset("spark.graft.mor.keyPruneMax")
+    val purged = ManifestTable.readManifest(spark, eqp,
+      ManifestTable.currentVersion(spark, eqp).get)
+    assert(purged.eqdels.isEmpty)
+    assert(purged.files.toSet.intersect(fleet).isEmpty,
+      "prune off: every pre-entry file rewrites, none is exonerated")
+    assert(ManifestTable.read(spark, eqp).orderBy("id").collect().toSeq
+      === ManifestTable.read(spark, cow).orderBy("id").collect().toSeq)
+  }
+
+  test("spark.graft.dml.mode: trimmed and case-insensitive; a typo fails instead of running copy-on-write") {
+    val path = mkTable("mode", n = 100)
+    def merge(): Long = ManifestTable.merge(spark, path,
+      Seq((1L, 1L, "m")).toDF("id", "k", "v"), keys = Seq("id"))
+    try {
+      spark.conf.set(ManifestTable.DmlModeKey, "mro")
+      val before = ManifestTable.currentVersion(spark, path)
+      val e = intercept[IllegalArgumentException](merge())
+      assert(e.getMessage.contains(ManifestTable.DmlModeKey) && e.getMessage.contains("mro"))
+      intercept[IllegalArgumentException](
+        ManifestTable.update(spark, path, col("id") === 2L, Seq("v" -> lit("u"))))
+      assert(ManifestTable.currentVersion(spark, path) === before, "nothing committed")
+      spark.conf.set(ManifestTable.DmlModeKey, " MoR ")
+      merge()
+      assert(ManifestTable.readManifest(spark, path,
+        ManifestTable.currentVersion(spark, path).get).dvs.nonEmpty,
+        "' MoR ' selects merge-on-read")
+      spark.conf.set(ManifestTable.DmlModeKey, "COW")
+      merge()
+      assert(ManifestTable.readManifest(spark, path,
+        ManifestTable.currentVersion(spark, path).get).dvs.isEmpty,
+        "'COW' rewrites the touched file, materializing its deletion vector")
+    } finally spark.conf.unset(ManifestTable.DmlModeKey)
+    assert(ManifestTable.read(spark, path).filter(col("id") === 1L)
+      .select("v").as[String].collect().toSeq === Seq("m"))
   }
 
   test("MOR MERGE composite-key prune: the leading column cuts the scan below the fleet; answers match COW") {
