@@ -136,7 +136,7 @@ object ManifestTable {
     * the file's column is entirely null (such a file can never satisfy a
     * range predicate, so it prunes away).
     */
-  private type FileStats = Map[String, (Option[String], Option[String])]
+  private[sources] type FileStats = Map[String, (Option[String], Option[String])]
 
   /** Generated-partition-column transform (the hidden-partitioning idea,
     * in its Delta generated-columns shape: the derived column is visible
@@ -1334,6 +1334,7 @@ object ManifestTable {
     case l: Long => s"L:$l"
     case i: Int => s"L:${i.toLong}"
     case s: Short => s"L:${s.toLong}"
+    case b: Byte => s"L:${b.toLong}"
     case d: Double => s"D:$d"
     case fl: Float => s"D:${fl.toDouble}"
     case s: String => "S:" + java.net.URLEncoder.encode(s, "UTF-8")
@@ -1794,14 +1795,16 @@ object ManifestTable {
     }
 
   /** Reserved pseudo-column in the per-file stats map holding the file's
-    * ROW COUNT (min == max == count). Rides the stats scan for free and
-    * powers [[fastCount]]; never a queryable column (pruning consults only
+    * ROW COUNT (min == max == count). One more aggregate in [[statsAggs]],
+    * so it comes with every file's stats — out of the write job for new
+    * files, out of [[collectStats]] for the rest — and powers
+    * [[fastCount]]; never a queryable column (pruning consults only
     * `statsCols`, which cannot contain it).
     */
   private val RowsKey = "_rows"
 
-  /** True iff the entry records an explicit ZERO row count ([[collectStats]]
-    * synthesizes one for files the stats scan saw no rows from). Zero-row
+  /** True iff the entry records an explicit ZERO row count
+    * ([[emptyFileStats]], recorded for every file that holds no rows). Zero-row
     * files contribute nothing: pruning skips them, the metadata folds
     * ignore them, rewrites drop them from the commit. */
   private def isZeroRowEntry(st: FileStats): Boolean =
@@ -1851,25 +1854,21 @@ object ManifestTable {
     * still replaces a table scan. Pruning never calls this (see
     * [[prunedRels]]).
     */
-  private def statsFor(spark: SparkSession, path: String,
+  private[sources] def statsFor(spark: SparkSession, path: String,
                        m: Manifest): Map[String, FileStats] = m.sidecar match {
     case None => m.stats
     case Some(_) =>
       readSidecar(spark, path, m).collect().map(r => r.rel -> rowStats(r)).toMap
   }
 
-  /** One column-pruned pass over freshly committed files: per-file min/max
-    * for each stats column plus the row count, keyed by table-relative
-    * path. Runs distributed (`input_file_name` grouping); the scan reads
-    * only the stats columns.
-    */
-  private def collectStats(spark: SparkSession, path: String, rels: Seq[String],
-                           schema: StructType, partitionCols: Seq[String],
-                           statsCols: Seq[String],
-                           bloomCols: Seq[String] = Nil,
-                           forceRows: Boolean = false): Map[String, FileStats] = {
-    if ((statsCols.isEmpty && bloomCols.isEmpty && !forceRows) || rels.isEmpty)
-      return Map.empty
+  /** The per-file stats aggregate list: for each stats column its min,
+    * max, null count and HLL sketch, a Bloom bitset per Bloom column, and
+    * the row count. One list, evaluated over two row sources: the write
+    * tasks' rows ([[WriteStats]]) and a scan of existing files
+    * ([[collectStats]]); both key the results by alias and encode them
+    * with [[fileStatsOf]]. Throws on declarations no stats can carry. */
+  private[sources] def statsAggs(statsCols: Seq[String], partitionCols: Seq[String],
+                                 bloomCols: Seq[String]): Seq[Column] = {
     val bad = (statsCols ++ bloomCols).filter(partitionCols.contains)
     require(bad.isEmpty, s"stats on partition columns are redundant: $bad")
     require(!statsCols.contains(RowsKey), s"$RowsKey is reserved")
@@ -1880,7 +1879,7 @@ object ManifestTable {
         s"$BloomPrefix / $NdvPrefix / $NullsPrefix")
     val bloomAgg = udaf(new BloomAgg(BloomWords, BloomK),
       org.apache.spark.sql.Encoders.LONG)
-    val aggs = statsCols.flatMap(c =>
+    statsCols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"),
         // per-file null count: IS [NOT] NULL skipping + metadata COUNT(c)
         sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"),
@@ -1892,6 +1891,68 @@ object ManifestTable {
       bloomCols.map(c =>
         bloomAgg(when(col(c).isNotNull, xxhash64(col(c)))).as(s"bloom_$c")) :+
       count(lit(1)).as("_nrows")
+  }
+
+  /** One file's entry from its [[statsAggs]] results, `agg` looking each
+    * one up by alias (external Scala values, as a collected `Row` holds
+    * them). */
+  private[sources] def fileStatsOf(statsCols: Seq[String], bloomCols: Seq[String])(
+                                   agg: String => Any): FileStats = {
+    val nrows = Some(encodeStat(agg("_nrows")))
+    // bloom payloads ride the same per-file stats map under a reserved
+    // pseudo-column key — every commit path that carries stats carries
+    // them too, with no extra plumbing (the RowsKey trick)
+    val blooms = bloomCols.map { c =>
+      (BloomPrefix + c) -> ((Option(agg(s"bloom_$c")).map(_.toString), None))
+    }
+    // per-file HLL distinct sketches ride the same map (the RowsKey
+    // trick): mergeable at plan time into a table-level NDV for CBO
+    val ndvs = statsCols.map { c =>
+      (NdvPrefix + c) -> ((Option(agg(s"ndv_$c")).map(b =>
+        java.util.Base64.getEncoder.encodeToString(b.asInstanceOf[Array[Byte]])), None))
+    }
+    // per-file null counts, same vehicle
+    val nulls = statsCols.map { c =>
+      val n = Some(encodeStat(agg(s"nulls_$c")))
+      (NullsPrefix + c) -> ((n, n))
+    }
+    statsCols.map { c =>
+      val enc = (Option(agg(s"min_$c")), Option(agg(s"max_$c"))) match {
+        case (Some(a), Some(b)) =>
+          val (lo, hi) = encodeBounds(a, b)
+          (Some(lo).filter(_.nonEmpty), Some(hi).filter(_.nonEmpty))
+        case (a, b) => (a.map(encodeStat), b.map(encodeStat))
+      }
+      c -> enc
+    }.toMap ++ blooms ++ ndvs ++ nulls + (RowsKey -> ((nrows, nrows)))
+  }
+
+  /** The entry of a ZERO-ROW file: rows=0 and zero null counts, nothing
+    * else. Recording it makes metadata COUNT folds exact on tables
+    * carrying empty files and lets [[prunedRels]] skip them at plan time
+    * (Spark's task 0 writes one for an empty batch; converted Delta/Iceberg
+    * lakes routinely carry them). */
+  private[sources] def emptyFileStats(statsCols: Seq[String]): FileStats = {
+    val zeroRows = Some(encodeStat(0L))
+    statsCols.map(c => (NullsPrefix + c) -> ((zeroRows, zeroRows))).toMap +
+      (RowsKey -> ((zeroRows, zeroRows)))
+  }
+
+  /** Stats of files graft did not write in this call — ANALYZE, the three
+    * CONVERTs, and a rebase onto a head declaring other stats columns
+    * ([[Written.statsOn]]): one column-pruned scan of `rels` under
+    * `schema`, grouped by `input_file_name`, evaluating [[statsAggs]].
+    * Freshly written files get theirs from the write job instead
+    * ([[writeFiles]]). Keyed by table-relative path.
+    */
+  private[sources] def collectStats(spark: SparkSession, path: String, rels: Seq[String],
+                                    schema: StructType, partitionCols: Seq[String],
+                                    statsCols: Seq[String],
+                                    bloomCols: Seq[String] = Nil,
+                                    forceRows: Boolean = false): Map[String, FileStats] = {
+    if ((statsCols.isEmpty && bloomCols.isEmpty && !forceRows) || rels.isEmpty)
+      return Map.empty
+    val aggs = statsAggs(statsCols, partitionCols, bloomCols)
     // one scan per base dir (a shallow clone's ANALYZE reads external
     // files anchored at the SOURCE's data dir; same-base is one load)
     val f0 = fs(spark, path)
@@ -1917,46 +1978,12 @@ object ManifestTable {
               catch { case _: java.net.URISyntaxException => r.getString(0) }
       val rel = byResolved.getOrElse(p, sys.error(
         s"stats file ${r.getString(0)} not among committed files"))
-      val nrows = Some(encodeStat(r.getAs[Long]("_nrows")))
-      // bloom payloads ride the same per-file stats map under a reserved
-      // pseudo-column key — every commit path that carries stats carries
-      // them too, with no extra plumbing (the RowsKey trick)
-      val blooms = bloomCols.map { c =>
-        (BloomPrefix + c) -> ((Option(r.getAs[String](s"bloom_$c")), None))
-      }
-      // per-file HLL distinct sketches ride the same map (the RowsKey
-      // trick): mergeable at plan time into a table-level NDV for CBO
-      val ndvs = statsCols.map { c =>
-        (NdvPrefix + c) -> ((Option(r.getAs[Array[Byte]](s"ndv_$c"))
-          .map(java.util.Base64.getEncoder.encodeToString), None))
-      }
-      // per-file null counts, same vehicle
-      val nulls = statsCols.map { c =>
-        val n = Some(encodeStat(r.getAs[Long](s"nulls_$c")))
-        (NullsPrefix + c) -> ((n, n))
-      }
-      rel -> (statsCols.map { c =>
-        val enc = (Option(r.getAs[Any](s"min_$c")),
-            Option(r.getAs[Any](s"max_$c"))) match {
-          case (Some(a), Some(b)) =>
-            val (lo, hi) = encodeBounds(a, b)
-            (Some(lo).filter(_.nonEmpty), Some(hi).filter(_.nonEmpty))
-          case (a, b) => (a.map(encodeStat), b.map(encodeStat))
-        }
-        c -> enc
-      }.toMap ++ blooms ++ ndvs ++ nulls + (RowsKey -> ((nrows, nrows))))
+      rel -> fileStatsOf(statsCols, bloomCols)(n => r.getAs[Any](n))
     }.toMap
     // a ZERO-ROW file yields no input_file_name group, so the scan above
-    // cannot emit its entry — synthesize rows=0 (+ zero null counts) for
-    // every committed file the scan saw no rows from. The scan read every
-    // listed file with no predicate, so absence ⇔ empty; recording it
-    // makes metadata COUNT folds exact on tables carrying empty files and
-    // lets [[prunedRels]] skip them at plan time (converted Delta/Iceberg
-    // lakes routinely carry task-0 empty files).
-    val zeroRows = Some(encodeStat(0L))
-    val emptyEntry: FileStats =
-      statsCols.map(c => (NullsPrefix + c) -> ((zeroRows, zeroRows))).toMap +
-        (RowsKey -> ((zeroRows, zeroRows)))
+    // cannot emit its entry: the scan read every listed file with no
+    // predicate, so absence ⇔ empty
+    val emptyEntry = emptyFileStats(statsCols)
     scanned ++ rels.filterNot(scanned.contains).map(_ -> emptyEntry)
   }
 
@@ -1982,8 +2009,8 @@ object ManifestTable {
   /** Reserved pseudo-column prefix for a stats column's per-file NULL
     * COUNT (min == max == count, the RowsKey trick) — what `IS NULL`
     * skips on (null-free files) and `IS NOT NULL` skips on (all-null
-    * files), and what lets `COUNT(col)` answer from metadata. Rides the
-    * one commit stats pass; absent on older manifests (conservative
+    * files), and what lets `COUNT(col)` answer from metadata. One of
+    * the [[statsAggs]]; absent on older manifests (conservative
     * keep). Parquet/Iceberg/Delta all carry the same counter. */
   private[sources] val NullsPrefix = "_nulls:"
   private[sources] val NdvLgK = 9
@@ -2821,7 +2848,7 @@ object ManifestTable {
     }
 
   /** Metadata-only COUNT(*): Some(total) when every file of the current
-    * snapshot carries a row count (recorded by the stats pass at commit
+    * snapshot carries a row count (recorded with the file's stats at commit
     * time — tables must opt into `statsCols`), None when any file predates
     * row counting or the table has no stats. Zero data IO: at 100 TB the
     * difference between answering instantly from the manifest and a
@@ -3095,25 +3122,22 @@ object ManifestTable {
 
   // ----------------------------------------------------------------- writes
 
-  /** Write df's files under `data/` with a commit-unique name prefix and
-    * return their table-relative paths. Files are produced by executors into
-    * a scratch dir, then renamed into the shared hive layout (rename = a
-    * metadata op on any real filesystem; partition dirs must be shared so
-    * readers get partition inference under one basePath).
+  /** Write `df` (physical names) under `data/` with a commit-unique name
+    * prefix, `tracker` riding the write job, and return each file as
+    * (path under the scratch dir, table-relative path). Files are produced
+    * by executors into a scratch dir, then renamed into the shared hive
+    * layout (rename = a metadata op on any real filesystem; partition dirs
+    * must be shared so readers get partition inference under one
+    * basePath).
     */
-  private def writeDataFiles(spark: SparkSession, path: String, df0: DataFrame,
+  private def writeDataFiles(spark: SparkSession, path: String, df: DataFrame,
                              partitionCols: Seq[String],
-                             colmap: Map[String, String]): Seq[String] = {
-    // batches arrive LOGICAL-named; files are written physical so every
-    // vintage shares one on-disk naming regardless of later renames
-    val df = toPhysical(df0, colmap)
+                             tracker: Option[WriteStats.Tracker]): Seq[(String, String)] = {
     val commit = java.util.UUID.randomUUID().toString.replace("-", "").take(16)
     val f = fs(spark, path)
     val tmp = new Path(path, s"_tmp/$commit")
     val t0 = System.nanoTime()
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp.toString)
+    TrackedParquetWrite.run(df, tmp.toString, partitionCols, tracker.toSeq)
     val t1 = System.nanoTime()
 
     // the move is N driver-side metadata ops; through the CHECKSUMMED
@@ -3175,19 +3199,21 @@ object ManifestTable {
       }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(16, math.max(1, found.size)))
-    val moved: Seq[String] =
+    def inDir(relDir: String, name: String): String =
+      if (relDir.isEmpty) name else s"$relDir/$name"
+    val moved: Seq[(String, String)] =
       try {
         // the commit-idx prefix makes file NAMES table-unique, not just
         // rel paths: one task writing several partition dirs emits the
         // same part-xxxxx name in each, and deletion vectors key by name
-        val tasks: Seq[java.util.concurrent.Callable[String]] =
+        val tasks: Seq[java.util.concurrent.Callable[(String, String)]] =
           found.toSeq.zipWithIndex.map { case (src, idx) =>
             () => {
               val relDir = relDirOf(src)
               val destDir = destDirOf(relDir)
               val dest = new Path(destDir, s"$commit-$idx-${src.getName}")
               if (!mv.rename(src, dest)) sys.error(s"could not place $dest")
-              if (relDir.isEmpty) dest.getName else s"$relDir/${dest.getName}"
+              (inDir(relDir, src.getName), inDir(relDir, dest.getName))
             }
           }
         import scala.jdk.CollectionConverters._
@@ -3451,14 +3477,16 @@ object ManifestTable {
     sys.error("unreachable")
   }
 
-  /** New data files of one operation, with stats collected under the
-    * stats and Bloom declarations of `under` — the snapshot whose layout
-    * they were written in. */
+  /** Data files one operation adds, with their stats under the stats and
+    * Bloom declarations of `under` — the snapshot whose layout they were
+    * written in (new files: from the write job; staged or branch files:
+    * as their manifest recorded them). */
   private case class Written(rels: Seq[String], stats: Map[String, FileStats],
                              under: Manifest) {
-    /** The stats for landing on `on`: re-collected when a rebase landed
-      * on a head that declares other stats or Bloom columns, so the
-      * head's declarations cover the new files too. */
+    /** The stats for landing on `on`: `stats` when `on` declares the same
+      * stats and Bloom columns as `under`; otherwise a rebase landed on a
+      * head that declares others, and the files' stats are collected
+      * again under the head's declarations so they cover these files too. */
     def statsOn(spark: SparkSession, path: String, on: Manifest): Map[String, FileStats] =
       if (on.statsCols == under.statsCols && on.bloomCols == under.bloomCols) stats
       else collectStats(spark, path, rels, on.schema, on.partitionCols,
@@ -3466,13 +3494,24 @@ object ManifestTable {
   }
 
   /** The one write step for new data files: write `df` in `under`'s
-    * layout and physical names, then collect the files' stats under its
-    * declarations. */
+    * layout and physical names, one Spark job that also computes every
+    * file's stats under `under`'s declarations ([[WriteStats]]) — no
+    * read-back. */
   private def writeFiles(spark: SparkSession, path: String, df: DataFrame,
                          under: Manifest): Written = {
-    val rels = writeDataFiles(spark, path, df, under.partitionCols, under.colmap)
-    Written(rels, collectStats(spark, path, rels, under.schema,
-      under.partitionCols, under.statsCols, under.bloomCols), under)
+    // batches arrive LOGICAL-named; files are written physical so every
+    // vintage shares one on-disk naming regardless of later renames
+    val physical = toPhysical(df, under.colmap)
+    val tracker = WriteStats.tracker(spark, physical, under)
+    val moved = writeDataFiles(spark, path, physical, under.partitionCols, tracker)
+    val stats = tracker.fold(Map.empty[String, FileStats]) { t =>
+      val byScratch = t.files
+      moved.map { case (scratch, rel) =>
+        rel -> byScratch.getOrElse(scratch,
+          sys.error(s"the write job reported no stats for $scratch"))
+      }.toMap
+    }
+    Written(moved.map(_._2), stats, under)
   }
 
   private def dirOf(rel: String): String =
@@ -4302,6 +4341,18 @@ object ManifestTable {
           s"e.g. by row ${bad(0)}")
     }
 
+  /** Gate files an operation adds against `head`'s CHECK constraints when
+    * they differ from `on`'s — the set the files were already checked
+    * against (a constraint that landed mid-write never saw the batch, and
+    * the interloper's own validation read only the files it could see).
+    * Scans exactly `rels`, under the head, and only when the sets differ.
+    */
+  private def recheckConstraints(spark: SparkSession, path: String, rels: Seq[String],
+                                 on: Manifest, head: Manifest, op: String): Unit =
+    if (head.constraints != on.constraints)
+      enforceConstraints(toLogical(rawScan(spark, path, head, rels), head.colmap),
+        head.constraints, op)
+
   /** Type with every nullability flag forced, recursively — schema
     * comparisons here are nullability-insensitive BY DOCUMENTED CONTRACT,
     * but bare `DataType ==` compares `containsNull`/field nullability
@@ -4639,7 +4690,7 @@ object ManifestTable {
         val w = writeFiles(spark, path, clusterForWrite(batchW, m),
           m.copy(schema = schema0, colmap = colmap0))
         val idWm = identityWmUpdate(spark, path, m, w.rels, w.stats, idObs)
-        val committed = commitRebasing(spark, path, m) { (_, head) =>
+        val committed = commitRebasing(spark, path, m) { (on, head) =>
           require(head.partitionCols == m.partitionCols,
             s"table partitioning changed concurrently: " +
               s"${m.partitionCols} -> ${head.partitionCols}")
@@ -4657,6 +4708,7 @@ object ManifestTable {
             throw new java.util.ConcurrentModificationException(
               s"append to $path lost to a rename/drop commit — the batch's " +
                 "files were written under the old physical names; re-run")
+          recheckConstraints(spark, path, w.rels, on, head, "append")
         } { on =>
           val (schema, colmap2) = evolveSchema(batch, on, "append")
           val landing = on.copy(schema = schema, colmap = colmap2)
@@ -4812,26 +4864,23 @@ object ManifestTable {
     val st = readStagedManifest(spark, path, id)
     val m = readManifest(spark, path,
       currentVersion(spark, path).getOrElse(sys.error(s"no manifest table at $path")))
-    def check(head: Manifest): Unit = {
+    def check(was: Manifest, head: Manifest): Unit = {
       require(head.partitionCols == st.partitionCols &&
         head.transforms == st.transforms && head.colmap == st.colmap &&
         head.schema.json == st.schema.json,
         s"publishStaged: table layout changed since stage $id was written " +
           "(schema/partitioning/column mapping differ) — audit again and re-stage")
-      // constraints added/changed BETWEEN stage and publish must gate the
-      // staged bytes too, or the stage becomes a constraint bypass: re-run
-      // the CHECK pass over exactly the staged files against the CURRENT
-      // constraint set (one batch-bounded scan, and only when they differ
-      // — the stage itself already validated the set it was written under)
-      if (head.constraints != st.constraints)
-        enforceConstraints(
-          readRels(spark, path, head.copy(files = st.files, stats = st.stats),
-            st.files),
-          head.constraints, s"publishStaged($id)")
+      // constraints added/changed since the staged bytes were last checked
+      // must gate them too, or the stage becomes a constraint bypass
+      recheckConstraints(spark, path, st.files, was, head, s"publishStaged($id)")
     }
-    check(m)
-    val v = commitRebasing(spark, path, m)((_, head) => check(head)) { on =>
-      commit(spark, path, on.version + 1, on, on.files ++ st.files, st.stats)
+    check(st, m)
+    // the stage recorded stats under ITS declarations; a head that
+    // declares others gets them collected again
+    val staged = Written(st.files, st.stats, st)
+    val v = commitRebasing(spark, path, m)(check) { on =>
+      commit(spark, path, on.version + 1, on, on.files ++ st.files,
+        staged.statsOn(spark, path, on))
     }
     fs(spark, path).delete(new Path(manifestDir(path), stagedName(id)), false)
     v
@@ -5291,14 +5340,15 @@ object ManifestTable {
     }
     def undo(): Unit =
       movedPairs.foreach { case (src, dst) => f.rename(dst, src): Unit }
+    // the branch's stats were collected under the BRANCH's declarations;
+    // a main that declares others since gets them collected again
+    val picked = Written(newRels, newStats, bm)
     val v = commitRebasing(spark, path, mm0, () => undo()) { (on, head) =>
       checkAgainst(head)
-      if (head.constraints != on.constraints)
-        enforceConstraints(toLogical(rawScan(spark, path, head, newRels), head.colmap),
-          head.constraints, "CHERRY-PICK")
+      recheckConstraints(spark, path, newRels, on, head, "CHERRY-PICK")
     } { on =>
-      commit(spark, path, on.version + 1, on, on.files ++ newRels, newStats,
-        op = Some("cherry-pick"))
+      commit(spark, path, on.version + 1, on, on.files ++ newRels,
+        picked.statsOn(spark, path, on), op = Some("cherry-pick"))
     }
     dropBranch(spark, path, name)
     v
@@ -5360,7 +5410,7 @@ object ManifestTable {
 
   /** The watermark property update for a commit that just wrote `added`
     * files through [[fillIdentity]]: the real max of the identity column
-    * over the NEW files — free from the commit's own stats pass when the
+    * over the NEW files — free from the write job's own stats when the
     * column carries zone maps, otherwise one single-column scan of the
     * batch's files (batch-bounded, never the table). Empty when the
     * table declares no identity column. */
@@ -5552,11 +5602,12 @@ object ManifestTable {
     enforceConstraints(batch, m.constraints, "overwritePartitions")
     val w = writeFiles(spark, path, clusterForWrite(batch, m), m)
     val replacedDirs = w.rels.map(dirOf).toSet
-    commitRebasing(spark, path, m) { (_, head) =>
+    commitRebasing(spark, path, m) { (on, head) =>
       require(head.partitionCols == m.partitionCols,
         s"table partitioning changed concurrently: " +
           s"${m.partitionCols} -> ${head.partitionCols}")
       requireCompatible(batch, head, "overwritePartitions")
+      recheckConstraints(spark, path, w.rels, on, head, "overwritePartitions")
     } { on =>
       val kept = on.files.filterNot(rel => replacedDirs.contains(dirOf(rel)))
       commit(spark, path, on.version + 1, on, kept ++ w.rels, w.statsOn(spark, path, on))
@@ -5610,7 +5661,7 @@ object ManifestTable {
     val w = writeFiles(spark, path, clusterForWrite(batchW, m),
       m.copy(schema = schema0, colmap = colmap0, statsCols = withExtraStats(m)))
     val idWm = identityWmUpdate(spark, path, m, w.rels, w.stats, idObs)
-    commitRebasing(spark, path, m) { (_, head) =>
+    commitRebasing(spark, path, m) { (on, head) =>
       basePin.foreach(p => throw new java.util.ConcurrentModificationException(
         s"$path moved past version $p during the rewrite — re-run"))
       require(head.partitionCols == m.partitionCols,
@@ -5625,6 +5676,7 @@ object ManifestTable {
         throw new java.util.ConcurrentModificationException(
           s"identity allocation on $path lost to a concurrent write — the " +
             "batch's generated ids were minted from a stale watermark; re-run")
+      recheckConstraints(spark, path, w.rels, on, head, "overwrite")
     } { on =>
       // the head's definition carries: its schema evolves by the batch,
       // its stats declarations gain the extra ones
@@ -5797,10 +5849,10 @@ object ManifestTable {
     * counts alone (statless imports gain manifest-answered COUNT(*)).
     *
     * Cost shape: one column-pruned scan of exactly the named columns
-    * (plus the grouping on `input_file_name`), the identical pass every
-    * stats-carrying commit already runs — never a full-width read. The
-    * stats merge rides the driver bounded by the manifest (same class as
-    * compaction's stats pass); commit re-spills to the sidecar past the
+    * (plus the grouping on `input_file_name`) evaluating the same
+    * aggregates a write job computes for its new files ([[collectStats]])
+    * — never a full-width read. The stats merge rides the driver bounded
+    * by the manifest; commit re-spills to the sidecar past the
     * threshold as usual. Columns are LOGICAL names; already-analyzed
     * columns are skipped idempotently. No-op (current version) when
     * nothing new would be recorded and every file already has stats.
@@ -6886,7 +6938,7 @@ object ManifestTable {
 
   /** Commit a snapshot that replaces `touched` files with their rows NOT
     * matching `pred` (null-safe: NULL keeps). Untouched files keep their
-    * stats entries verbatim; rewritten files get a fresh stats pass.
+    * stats entries verbatim; rewritten files get stats from their write job.
     */
   private def rewriteWithout(spark: SparkSession, path: String, v: Long,
                              m: Manifest, touched: Seq[String],

@@ -14,7 +14,12 @@ import java.nio.file.Files
   * and merge-on-read refuse, equality deletes land both), and an ANALYZE
   * that declares a new stats column (the declaration must survive the
   * merge's commit). The remaining cases drive every other retrying write
-  * through one lost race against an appender.
+  * through one lost race against an appender; check that publish and
+  * cherry-pick land their files with stats for a column main declared
+  * after the stage or fork; and race append, overwritePartitions and
+  * overwriteData against an interloper that adds a CHECK constraint,
+  * which must refuse a violating batch with nothing committed and let a
+  * conforming one land.
   */
 class CommitRebaseSpec extends SparkSpec {
   import spark.implicits._
@@ -217,6 +222,71 @@ class CommitRebaseSpec extends SparkSpec {
     assert(v === v0 + 2)
     assert(rows(path) === (base ++ disjoint ++ branched).sorted)
     assert(ManifestTable.branches(spark, path).isEmpty)
+  }
+
+  test("publishStaged lands staged files with stats for a column ANALYZEd after the stage") {
+    val path = table("publish_analyze")
+    val staged = Seq((60L, "s60", 600, 0))
+    val id = ManifestTable.stageAppend(spark, path, staged.toDF("id", "v", "n", "part"))
+    ManifestTable.analyzeStats(spark, path, Seq("n"))
+    ManifestTable.publishStaged(spark, path, id)
+    val m = head(path)
+    assert(m.statsCols === Seq("id", "n"))
+    assert(m.files.forall(rel => m.stats.get(rel).exists(_.contains("n"))),
+      "the staged files carry stats for the column main declared since")
+    assert(rows(path) === (base ++ staged).sorted)
+  }
+
+  test("cherryPick lands branch files with stats for a column ANALYZEd on main since the fork") {
+    val path = table("cherry_analyze")
+    ManifestTable.createBranch(spark, path, "exp")
+    val branched = Seq((70L, "b70", 700, 2))
+    append(ManifestTable.branchPath(path, "exp"), branched)
+    ManifestTable.analyzeStats(spark, path, Seq("n"))
+    ManifestTable.cherryPick(spark, path, "exp")
+    val m = head(path)
+    assert(m.statsCols === Seq("id", "n"))
+    assert(m.files.forall(rel => m.stats.get(rel).exists(_.contains("n"))),
+      "the picked files carry stats for the column main declared since")
+    assert(rows(path) === (base ++ branched).sorted)
+  }
+
+  /** Each write whose batch lands as new files, against an interloper
+    * that adds `n < 1000`: `n` is the batch's value of that column. */
+  private val constrained: Seq[(String, (String, Int) => Unit, Seq[R] => Seq[R])] = Seq(
+    ("append", (path, n) => append(path, Seq((30L, "m30", n, 2))),
+      mine => (base ++ mine).sorted),
+    ("overwritePartitions", (path, n) => ManifestTable.overwritePartitions(spark, path,
+      Seq((40L, "m40", n, 0)).toDF("id", "v", "n", "part")): Unit,
+      mine => (base.filterNot(_._4 == 0) ++ mine).sorted),
+    ("overwriteData", (path, n) => ManifestTable.overwriteData(spark, path,
+      Seq((50L, "m50", n, 1)).toDF("id", "v", "n", "part")): Unit,
+      mine => mine))
+
+  for ((op, write, expected) <- constrained) {
+    test(s"$op refuses, with nothing committed, a batch a concurrently added CHECK rejects") {
+      val path = table(s"${op}_check_bad")
+      val v0 = ManifestTable.currentVersion(spark, path).get
+      val e = intercept[RuntimeException] {
+        racing(ManifestTable.addConstraint(spark, path, "n_small", "n < 1000"): Unit)(
+          write(path, 5000))
+      }
+      assert(e.getMessage.contains("n_small"), e.getMessage)
+      assert(ManifestTable.currentVersion(spark, path).contains(v0 + 1))
+      assert(head(path).constraints.map(_._1) === Seq("n_small"))
+      assert(rows(path) === base)
+    }
+
+    test(s"$op lands a batch a concurrently added CHECK accepts") {
+      val path = table(s"${op}_check_ok")
+      val v0 = ManifestTable.currentVersion(spark, path).get
+      racing(ManifestTable.addConstraint(spark, path, "n_small", "n < 1000"): Unit)(
+        write(path, 300))
+      assert(ManifestTable.currentVersion(spark, path).contains(v0 + 2))
+      assert(head(path).constraints.map(_._1) === Seq("n_small"))
+      val mine = rows(path).filter(_._3 == 300)
+      assert(mine.size === 1 && rows(path) === expected(mine))
+    }
   }
 
   test("foldEqdelCounts recounts once past an interloper append") {
