@@ -24,10 +24,4 @@ object VectorFunctions {
   def norm2(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm2(a) * norm2(b))
-
-  /** Cosine given precomputed norms — the form the ANN operators use so each
-    * vector's norm is computed once, not once per candidate pair.
-    */
-  def cosinePrenormed(dotAB: Column, normA: Column, normB: Column): Column =
-    dotAB / (normA * normB)
 }

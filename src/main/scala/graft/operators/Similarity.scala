@@ -454,8 +454,6 @@ object Similarity {
     // left-to-right double fold, same null semantics)
     def dotD(a: Column, b: Column): Column =
       graft.functions.VectorDistances.dotProduct(a, b)
-    def l2D(a: Column, b: Column): Column =
-      graft.functions.VectorDistances.l2Squared(a, b)
     val sv = subSplit(base, "embedding")
     // nearest code per (vector, subspace): min L2, ties → lowest code id.
     // Same argmin-over-broadcast-array shape as [[assignCells]]: the

@@ -56,12 +56,15 @@ object GraftDeleteRule extends Rule[LogicalPlan] {
   * fresh read) — sound because a graft snapshot read exposes exactly the
   * table's columns, so names are unambiguous.
   *
-  * Mechanism is session-selectable: `spark.graft.delete.mode = vectorized`
-  * routes the SAME statement through merge-on-read deletion vectors
-  * (`ManifestTable.deleteVectorized` — position sidecars, no file
-  * rewrite) instead of the default copy-on-write rewrite. Both land on
-  * identical visible rows; the conf chooses the write-amplification
-  * trade, exactly like Delta's table-level DV toggle.
+  * The encoding follows the session's one DML knob,
+  * `spark.graft.dml.mode` (`ManifestTable.DmlModeKey`), read up front so
+  * a mistyped value fails before any work: `cow` (the default) rewrites
+  * the touched files (`ManifestTable.delete`); `mor` and `eq` record the
+  * deleted rows' positions as deletion vectors with no file rewrite
+  * (`ManifestTable.deleteVectorized`) — a DELETE must read the rows it
+  * matches, so positions are the cheapest removal eq can record too,
+  * exactly as for UPDATE. Both land on identical visible rows through
+  * the same landing step; the knob chooses the write-amplification trade.
   */
 case class GraftDeleteCommand(path: String, condition: Expression)
     extends LeafRunnableCommand {
@@ -72,10 +75,9 @@ case class GraftDeleteCommand(path: String, condition: Expression)
       case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
     }
     val pred = org.apache.spark.sql.graft.bridge.toColumn(byName)
-    val vectorized = spark.conf
-      .getOption("spark.graft.delete.mode").contains("vectorized")
-    if (vectorized) graft.sources.ManifestTable.deleteVectorized(spark, path, pred): Unit
-    else graft.sources.ManifestTable.delete(spark, path, pred): Unit
+    val table = graft.sources.ManifestTable
+    if (table.dmlMode(spark) == "cow") table.delete(spark, path, pred): Unit
+    else table.deleteVectorized(spark, path, pred): Unit
     // same invalidation as GraftRelation.insert: cached catalog relations
     // pin their snapshot; the next query must re-resolve to a fresh one
     spark.sessionState.catalog.invalidateAllCachedTables()

@@ -18,14 +18,4 @@ import org.apache.spark.sql.types.StructType
 object Json {
   def read(spark: SparkSession, schema: StructType, paths: String*): DataFrame =
     spark.read.schema(schema).option("mode", "FAILFAST").json(paths: _*)
-
-  /** Permissive variant for exploratory loads: corrupt rows land in
-    * `_corrupt_record` instead of failing the job.
-    */
-  def readPermissive(spark: SparkSession, schema: StructType, paths: String*): DataFrame =
-    spark.read
-      .schema(schema.add("_corrupt_record", org.apache.spark.sql.types.StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(paths: _*)
 }

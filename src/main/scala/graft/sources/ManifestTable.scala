@@ -499,6 +499,14 @@ object ManifestTable {
     }
   }
 
+  /** The current version of the table at `path` and its manifest; fails
+    * when no table exists there. */
+  private def readHead(spark: SparkSession, path: String): (Long, Manifest) = {
+    val v = currentVersion(spark, path)
+      .getOrElse(sys.error(s"no manifest table at $path"))
+    (v, readManifest(spark, path, v))
+  }
+
   private[sources] def readManifest(spark: SparkSession, path: String,
                                     version: Long): Manifest =
     parseManifest(path, readManifestText(spark, path, manifestName(version)),
@@ -2721,24 +2729,27 @@ object ManifestTable {
     }
   }
 
-  /** `spark.graft.dml.mode` — the encoding UPDATE and MERGE write in
-    * (results are identical across modes, oracle- and fuzz-pinned). The
-    * value is trimmed and case-insensitive; any other value fails the
+  /** `spark.graft.dml.mode` — the one knob for the encoding a row-level
+    * change lands in (results are identical across modes, oracle- and
+    * fuzz-pinned): UPDATE, MERGE and SQL DELETE read it, and every
+    * encoding ends in the same landing step ([[landChange]]). The value
+    * is trimmed and case-insensitive; any other value fails the
     * statement ([[dmlMode]]) rather than silently running copy-on-write.
-    * DELETE does not consult it: [[delete]] is copy-on-write and
-    * [[deleteVectorized]] the merge-on-read face.
+    * The Scala API's [[delete]] stays copy-on-write and
+    * [[deleteVectorized]] is its deletion-vector face.
     *
     *  - unset or `cow` (default): COPY-ON-WRITE — touched files rewrite in
     *    full; simplest read path, the right default for read-heavy tables;
     *  - `mor`: MERGE-ON-READ — UPDATE and MERGE record touched rows as
-    *    deletion-vector entries plus a match-bounded append; write cost
-    *    O(matched rows) instead of O(touched files' bytes) (repricing one
-    *    row in a 1 GB file writes a few KB, not a gigabyte) — the daily
-    *    CDC batch shape at 100 TB;
+    *    deletion-vector entries plus a match-bounded append, SQL DELETE
+    *    as deletion-vector entries alone; write cost O(matched rows)
+    *    instead of O(touched files' bytes) (repricing one row in a 1 GB
+    *    file writes a few KB, not a gigabyte) — the daily CDC batch shape
+    *    at 100 TB;
     *  - `eq`: EQUALITY DELETES — MERGE writes a key sidecar and appends,
-    *    READING NOTHING (O(batch) total; UPDATE still routes MOR — its
-    *    SET reads the old row regardless) — the high-frequency streaming
-    *    CDC shape. The read-side key anti-join is PER-REL routed (only
+    *    READING NOTHING (O(batch) total; UPDATE and SQL DELETE route MOR —
+    *    they must read the rows they match) — the high-frequency
+    *    streaming CDC shape. The read-side key anti-join is PER-REL routed (only
     *    files sequenced before an entry pay it); metadata fast-counts
     *    decline until [[foldEqdelCounts]]/ANALYZE folds the matched
     *    totals; CDF across the commit refuses by default
@@ -2751,7 +2762,7 @@ object ManifestTable {
   val DmlModeKey = "spark.graft.dml.mode"
 
   /** The session's DML encoding: `cow` (also when unset), `mor` or `eq`. */
-  private def dmlMode(spark: SparkSession): String =
+  private[graft] def dmlMode(spark: SparkSession): String =
     spark.conf.getOption(DmlModeKey) match {
       case None => "cow"
       case Some(raw) => raw.trim.toLowerCase(java.util.Locale.ROOT) match {
@@ -3432,11 +3443,19 @@ object ManifestTable {
       // this commit, which the winner's chain may still reference
       if (reuseSidecar.isEmpty)
         sidecarName.foreach(n => f.delete(new Path(manifestDir(path), n), true): Unit)
-      throw new java.util.ConcurrentModificationException(
-        s"version $expected of $path was committed concurrently")
+      throw new java.util.ConcurrentModificationException(lostRace(path, expected))
     }
     expected
   }
+
+  private def lostRace(path: String, version: Long): String =
+    s"version $version of $path was committed concurrently"
+
+  /** The conflict rule of an operation whose change derives from exactly
+    * the snapshot it read: every lost race refuses, with [[commit]]'s own
+    * message. */
+  private def refuse(path: String)(on: Manifest, head: Manifest): Unit =
+    throw new java.util.ConcurrentModificationException(lostRace(path, on.version + 1))
 
   /** Rebase budget for losing committers. Each retry re-reads the winner's
     * manifest and re-validates, so retries only exhaust under sustained
@@ -5214,25 +5233,24 @@ object ManifestTable {
     // their old seqs would compare wrongly against the re-keyed file
     // sequences.
     val mm = readManifest(spark, path, mv)
-    val v =
-      try commit(spark, path, mv + 1,
+    // a writer that slips in between the base check and the commit is
+    // refused exactly like the up-front check would have; the moves
+    // (metadata renames) are undone first, so the branch stays intact and
+    // main's next VACUUM cannot sweep its bytes
+    val v = commitRebasing(spark, path, mm,
+        () => movedPairs.foreach { case (src, dst) => f.rename(dst, src): Unit }) {
+      (on, _) => throw new java.util.ConcurrentModificationException(
+        s"FAST FORWARD: $path advanced during the publish of branch " +
+          s"'$name' — the branch is intact; re-branch from the current " +
+          s"version and replay (${lostRace(path, on.version + 1)})")
+    } { _ =>
+      commit(spark, path, mv + 1,
         bm.copy(files = Nil, stats = Map.empty, sidecar = mm.sidecar,
           dvs = Map.empty, eqdels = Nil, txns = mm.txns, ingests = mm.ingests,
           props = mm.props, ts = mm.ts),
         newFiles, newStats, dvs = newDvs, props = bm.props - BranchBaseProp,
         eqdels = newEqdels, fseqExplicit = newFseq)
-      catch {
-        // a writer slipped in between the base check and the commit:
-        // UNDO the moves (metadata renames) so the branch stays intact
-        // and main's next VACUUM cannot sweep its bytes, then refuse
-        // exactly like the up-front check would have
-        case e: java.util.ConcurrentModificationException =>
-          movedPairs.foreach { case (src, dst) => f.rename(dst, src): Unit }
-          throw new java.util.ConcurrentModificationException(
-            s"FAST FORWARD: $path advanced during the publish of branch " +
-              s"'$name' — the branch is intact; re-branch from the current " +
-              s"version and replay (${e.getMessage})")
-      }
+    }
     dropBranch(spark, path, name)
     v
   }
@@ -5567,16 +5585,8 @@ object ManifestTable {
       val target = m.props.get("graft.targetFileRows").map(_.toLong)
         .getOrElse(1L << 20)
       val dirs = added.map(dirOf).toSet
-      val f = fs(spark, path)
-      val small = m.files.filter(rel => dirs.contains(dirOf(rel)) && {
-        try f.getFileStatus(filePath(path, rel)).getLen < smaller
-        catch { case _: java.io.IOException => false }
-      })
-      if (small.size < minFiles) return
-      val sized = graft.operators.Maintenance.sizedRepartition(
-        readRels(spark, path, m, small), m.partitionCols, target)
-        .localCheckpoint(true)
-      commitRewrite(spark, path, v, m, small, sized): Unit
+      packSmall(spark, path, m, m.files.filter(rel => dirs.contains(dirOf(rel))),
+        smaller, minFiles, target): Unit
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[graft] auto-compact of $path skipped: ${e.getMessage}")
     }
@@ -5752,28 +5762,38 @@ object ManifestTable {
           a.name
       }.toSet
       if (refs.isEmpty || !refs.subsetOf(m.partitionCols.toSet)) return None
-      val byDir: Map[String, Seq[String]] = m.files.groupBy(dirOf)
-      val tuples = byDir.keys.toSeq.sorted.map { dir =>
-        val segs = dir.split("/")
-        if (segs.length != m.partitionCols.length) return None
-        val vals = segs.zip(m.partitionCols).map { case (seg, c) =>
-          val i = seg.indexOf('=')
-          if (i <= 0 || seg.substring(0, i) != c) return None
-          parsePartitionValue(spark, seg.substring(i + 1), m.schema(c).dataType)
-            .getOrElse(return None)
-        }
-        (dir, vals)
-      }
-      val partSchema = StructType(m.partitionCols.map(c => m.schema(c)).toArray)
-      val dirDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          tuples.map { case (dir, vals) => Row.fromSeq(vals.toSeq :+ dir) }, 1),
-        StructType(partSchema.fields :+
-          StructField("__dir", StringType, nullable = false)))
-      val matching = dirDf.filter(coalesce(predicate, lit(false)))
-        .select(col("__dir")).collect().map(_.getString(0)).toSet
-      Some(m.files.filter(rel => matching.contains(dirOf(rel))))
+      filesInPartitions(spark, m, predicate)
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The files of `m` in the partition directories whose VALUES satisfy
+    * `predicate` (a Column over partition columns; NULL selects nothing):
+    * the distinct directories parse back to typed tuples and the predicate
+    * runs over them as a partition-count-bounded local frame — no data is
+    * read. None when a directory does not parse into `m`'s partition
+    * columns, so the predicate cannot be evaluated safely. */
+  private def filesInPartitions(spark: SparkSession, m: Manifest,
+                                predicate: Column): Option[Seq[String]] = {
+    val tuples = m.files.map(dirOf).distinct.sorted.map { dir =>
+      val segs = dir.split("/")
+      if (segs.length != m.partitionCols.length) return None
+      val vals = segs.zip(m.partitionCols).map { case (seg, c) =>
+        val i = seg.indexOf('=')
+        if (i <= 0 || seg.substring(0, i) != c) return None
+        parsePartitionValue(spark, seg.substring(i + 1), m.schema(c).dataType)
+          .getOrElse(return None)
+      }
+      (dir, vals)
+    }
+    val partSchema = StructType(m.partitionCols.map(c => m.schema(c)).toArray)
+    val dirDf = spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        tuples.map { case (dir, vals) => Row.fromSeq(vals.toSeq :+ dir) }, 1),
+      StructType(partSchema.fields :+
+        StructField("__dir", StringType, nullable = false)))
+    val matching = dirDf.filter(coalesce(predicate, lit(false)))
+      .select(col("__dir")).collect().map(_.getString(0)).toSet
+    Some(m.files.filter(rel => matching.contains(dirOf(rel))))
+  }
 
   /** Delta's replaceWhere: atomically replace exactly the rows matching
     * `predicate` with `df` — ONE commit in which files fully inside the
@@ -5790,9 +5810,7 @@ object ManifestTable {
     * re-run against the winner. */
   def overwriteWhere(spark: SparkSession, path: String, df: DataFrame,
                      predicate: Column): Long = {
-    val v = currentVersion(spark, path)
-      .getOrElse(sys.error(s"no manifest table at $path"))
-    val m = readManifest(spark, path, v)
+    val (v, m) = readHead(spark, path)
     requireMutable(m, path, "REPLACE WHERE")
     val batch = fillIdentity(m, fillDefaults(m, withDerived(
       df.drop(m.transforms.map(_.derived): _*), m.transforms, Some(m.schema))),
@@ -5820,8 +5838,8 @@ object ManifestTable {
       else readRels(spark, path, m, touched)
         .filter(!coalesce(predicate, lit(false)))
         .unionByName(batch)
-    commitRewrite(spark, path, v, m, touched,
-      clusterForWrite(kept, m), op = Some("overwrite"))
+    landChange(spark, path, m, Rewritten(touched), Some(clusterForWrite(kept, m)),
+      op = Some("overwrite"))(refuse(path))
   }
 
   /** Stats value types the manifest can encode exactly ([[encodeStat]]):
@@ -5903,21 +5921,44 @@ object ManifestTable {
 
   /** Keyed MERGE (upsert): rows whose `keys` match existing rows replace
     * them, new keys are appended, and any key in `deleteKeys` is removed
-    * outright (the CDC-apply / `WHEN MATCHED THEN DELETE` leg). Only
-    * partitions touched by the update batch — including partitions holding
-    * the OLD copy of a moved or deleted key — are rewritten; a partition
-    * drained to zero rows just drops out of the manifest. Semantics mirror
-    * [[graft.operators.MergeUpsert]] (reference `etl.py`'s dedup-insert,
-    * §7.4.4) with a transactional commit.
+    * outright (the CDC-apply / `WHEN MATCHED THEN DELETE` leg). Semantics
+    * mirror [[graft.operators.MergeUpsert]] (reference `etl.py`'s
+    * dedup-insert, §7.4.4) with a transactional commit.
     *
-    * Concurrency: a merge's rewritten rows are DERIVED from the snapshot it
-    * read, so a lost commit race rebases only when the winner's delta
-    * provably cannot interact with this merge — pure-append (no file this
-    * merge read was removed), nothing added inside the rewritten
-    * partitions, and no appended row sharing a merge key. Anything else
-    * throws `ConcurrentModificationException`: the caller must re-run the
-    * merge against the winner's snapshot. Orphaned data files from the
-    * losing attempt are unreferenced and swept by [[vacuum]].
+    * The change is computed once — the touched keys are the batch's keys
+    * ∪ `deleteKeys` — and encoded per [[DmlModeKey]]: copy-on-write
+    * rewrites the partitions holding a touched key ([[mergeCow]]),
+    * merge-on-read records their old copies as deletion vectors
+    * ([[mergeMor]]), and equality deletes record the keys themselves.
+    * All three land through [[landChange]] with the batch as the added
+    * rows.
+    *
+    * EQUALITY DELETES (`eq` — Iceberg v2's eq-deletes / the Flink CDC
+    * writer re-derived) upsert and delete WITHOUT READING THE TABLE AT
+    * ALL. The touched keys land as a key sidecar (`_eqd/<name>`), the
+    * manifest records (keyCols, seq=commit version, count), and every
+    * reader anti-joins files SEQUENCED BEFORE the delete against the key
+    * set — total write cost O(batch), where even MOR pays a (pruned)
+    * key-cut scan per merge. The trade: at-risk reads carry the anti-join
+    * until OPTIMIZE … PURGE materializes (post-entry files keep the plain
+    * plan — [[readRels]] routes per rel), metadata fast-counts decline
+    * until [[foldEqdelCounts]] (or ANALYZE) pays the matched-row count
+    * once, and CDF across the commit refuses unless
+    * `spark.graft.cdf.eqdels=compute` opts into the keyed-scan delta.
+    * CLONE, branch and FAST FORWARD renumber sequences across version
+    * domains, so the zero-copy lifecycle never demands a PURGE. Its
+    * rebase is UNCONDITIONAL except definition changes ([[mergeRebase]]):
+    * appends, rewrites and other merges all commute — the retry
+    * re-sequences the entry at the new head, which IS the CDC
+    * linearization by commit order. A concurrent constraint add re-gates
+    * the batch on retry.
+    *
+    * Concurrency: a lost race rebases only past a winner that provably
+    * cannot interact with this merge (each encoding states its rule);
+    * anything else throws `ConcurrentModificationException` and the
+    * caller must re-run the merge against the winner's snapshot. Orphaned
+    * data files from the losing attempt are unreferenced and swept by
+    * [[vacuum]].
     */
   def merge(spark: SparkSession, path: String, updates: DataFrame,
             keys: Seq[String], partitionCols: Seq[String] = Nil,
@@ -5935,99 +5976,116 @@ object ManifestTable {
       case Some(v) =>
         val m = readManifest(spark, path, v)
         requireMutable(m, path, "MERGE")
-        val batch = fillDefaults(m, withDerived(
+        val shaped = fillDefaults(m, withDerived(
           updates.drop(m.transforms.map(_.derived): _*), m.transforms,
           Some(m.schema)))
-        requireCompatible(batch, m, "merge")
-        enforceConstraints(batch, m.constraints, "merge")
-        mode match {
-          case "mor" => return mergeMor(spark, path, v, m, batch, keys, deleteKeys, txn)
-          case "eq" => return mergeEq(spark, path, v, m, batch, keys, deleteKeys, txn)
-          case _ =>
-        }
-        val existing = readVersion(spark, path, v)
-        val ordered = existing.columns.map(col).toSeq
+        requireCompatible(shaped, m, "merge")
+        enforceConstraints(shaped, m.constraints, "merge")
+        // the batch in table column order. Merge-on-read and equality
+        // deletes consume it twice (the key cut or key sidecar, and the
+        // data write, which lands inside the directory the key cut scans),
+        // so they materialize it once
+        val ordered = shaped.select(
+          logicalSchema(m).fieldNames.toSeq.map(n => col(s"`$n`")): _*)
+        val batch = if (mode == "cow") ordered else ordered.localCheckpoint(true)
         // every key this merge removes from the current snapshot: keys being
         // replaced by an update row, plus keys deleted outright (MERGE's
-        // WHEN MATCHED THEN DELETE). One key set drives the anti-join cut,
-        // the affected-partition discovery, and the rebase overlap check —
-        // a deleted key races with a concurrent append exactly like an
-        // updated one does.
+        // WHEN MATCHED THEN DELETE) — a deleted key races with a concurrent
+        // append exactly like an updated one does
         val touchKeys = deleteKeys.foldLeft(batch.select(keys.map(col): _*))(
           (u, dk) => u.unionByName(dk.select(keys.map(col): _*)))
-        // NULL-SAFE key cut: rows reached through a MATCHED clause always
-        // carry non-null keys (ON equality can't match null), but MERGE's
-        // NOT MATCHED BY SOURCE clauses legitimately update/delete
-        // null-keyed target rows — a plain equality anti-join would keep
-        // the old null-keyed copy alongside its replacement (duplicate) or
-        // fail to delete it. <=> matches the project's composite-key dedup
-        // convention (Core.scala J5b).
-        def cutByKeys(left: DataFrame, rightKeys: DataFrame, joinType: String,
-                      bcastRight: Boolean): DataFrame = {
-          val rk0 = rightKeys.toDF(rightKeys.columns.map("__mk_" + _).toIndexedSeq: _*)
-          val rk = if (bcastRight) broadcast(rk0) else rk0
-          left.join(rk,
-            keys.map(k => left(k) <=> rk("__mk_" + k)).reduce(_ && _), joinType)
+        mode match {
+          case "mor" => mergeMor(spark, path, m, batch, keys, touchKeys, txn)
+          case "eq" =>
+            // an eq-merge reads nothing: its rebase refuses only a
+            // definition change
+            val phKeys = keys.map(k => m.colmap.getOrElse(k, k))
+            phKeys.foreach(k => m.schema.find(_.name == k)
+              .getOrElse(sys.error(s"merge key '$k' not in schema of $path")))
+            landChange(spark, path, m, Keys(touchKeys.distinct().toDF(phKeys: _*)),
+              Option.when(!batch.isEmpty)(clusterForWrite(batch, m)),
+              op = Some("merge"), opCols = keys, txn = txn,
+              identityWm = false)(mergeRebase(path, m, batch, _, _))
+          case _ => mergeCow(spark, path, m, batch, keys, touchKeys, txn)
         }
-        if (m.partitionCols.isEmpty) {
-          val kept = cutByKeys(existing, touchKeys, "left_anti", bcastRight = false)
-          val next = kept.unionByName(batch.select(ordered: _*)).localCheckpoint(true)
-          val w = writeFiles(spark, path, next, m)
-          // full-table rewrite: ANY concurrent commit invalidates the
-          // snapshot this merge rewrote — no rebase path exists.
-          // Landing on m carries table properties, sink txn watermarks and
-          // the COPY ledger through the rewrite (dropped-file stats/DV
-          // entries are filtered by the new file set inside commit);
-          // without them an unpartitioned merge silently SHED the table's
-          // props and every other sink's exactly-once watermark.
-          commit(spark, path, v + 1, m, w.rels, w.stats,
-            op = Some("merge"), opCols = keys, txn = txn)
-        } else {
-          requireUniformLayout(m, "merge into a partitioned table")
-          val pCols = m.partitionCols.map(col)
-          // partitions named by the batch ∪ partitions holding old copies of
-          // the updated keys; bounded by the batch size, safe to collect
-          val affected = batch.select(pCols: _*)
-            .union(cutByKeys(existing, touchKeys.distinct(), "left_semi",
-                bcastRight = true)
-              .select(pCols: _*))
-            .distinct().collect().map(_.toSeq)
-          val affectedDf = spark.createDataFrame(
-            spark.sparkContext.parallelize(affected.map(Row.fromSeq).toSeq, 1),
-            existing.select(pCols: _*).schema)
-          val kept = cutByKeys(
-            existing.join(broadcast(affectedDf), m.partitionCols),
-            touchKeys, "left_anti", bcastRight = false)
-          val next = kept.unionByName(batch.select(ordered: _*)).localCheckpoint(true)
-          val w = writeFiles(spark, path, clusterForWrite(next, m), m)
-          // remove every affected partition's old entries (NOT just dirs the
-          // new files landed in — a drained partition writes no files)
-          val affectedDirs = affected.map(vals =>
-            m.partitionCols.zip(vals).map { case (c, value) =>
-              s"$c=${org.apache.spark.sql.graft.bridge.escapePathValue(value)}"
-            }.mkString("/")).toSet
-          // rebase is sound ONLY against a non-interacting delta
-          commitRebasing(spark, path, m) { (on, head) =>
-            mergeRebase(path, m, batch, on, head)
-            val removed = on.files.toSet -- head.files.toSet
-            if (removed.nonEmpty)
-              mergeLost(path, s"rewrote ${removed.size} file(s) this merge read")
-            // a concurrent deleteVectorized changed file CONTENT without
-            // changing the file list — the rows this merge derived are
-            // stale exactly as if the file had been rewritten
-            if (head.dvs != on.dvs) mergeLost(path, "changed deletion vectors")
-            val fresh = head.files.filterNot(on.files.toSet)
-            if (fresh.exists(rel => affectedDirs.contains(dirOf(rel))))
-              mergeLost(path, "wrote into a partition this merge rewrites")
-            if (fresh.nonEmpty && holdsKeys(spark, path, head, fresh, keys,
-                touchKeys.distinct().toDF(keys.map("__mk_" + _): _*)))
-              mergeLost(path, "appended rows sharing this merge's keys")
-          } { on =>
-            commit(spark, path, on.version + 1, on,
-              on.files.filterNot(rel => affectedDirs.contains(dirOf(rel))) ++ w.rels,
-              w.statsOn(spark, path, on), op = Some("merge"), opCols = keys, txn = txn)
-          }
-        }
+    }
+  }
+
+  /** Copy-on-write MERGE: every partition touched by the batch — including
+    * partitions holding the OLD copy of a moved or deleted key — rewrites
+    * without the touched keys and with the batch; a partition drained to
+    * zero rows just drops out of the manifest. An unpartitioned table
+    * rewrites whole, so any concurrent commit refuses it. A partitioned
+    * rewrite rebases past a pure append (no file this merge read was
+    * removed) that adds nothing inside the rewritten partitions and no
+    * row sharing a merge key. */
+  private def mergeCow(spark: SparkSession, path: String, m: Manifest,
+                       batch: DataFrame, keys: Seq[String],
+                       touchKeys: DataFrame, txn: Option[(String, Long)]): Long = {
+    val existing = readVersion(spark, path, m.version)
+    // NULL-SAFE key cut: rows reached through a MATCHED clause always
+    // carry non-null keys (ON equality can't match null), but MERGE's
+    // NOT MATCHED BY SOURCE clauses legitimately update/delete
+    // null-keyed target rows — a plain equality anti-join would keep
+    // the old null-keyed copy alongside its replacement (duplicate) or
+    // fail to delete it. <=> matches the project's composite-key dedup
+    // convention (Core.scala J5b).
+    def cutByKeys(left: DataFrame, rightKeys: DataFrame, joinType: String,
+                  bcastRight: Boolean): DataFrame = {
+      val rk0 = rightKeys.toDF(rightKeys.columns.map("__mk_" + _).toIndexedSeq: _*)
+      val rk = if (bcastRight) broadcast(rk0) else rk0
+      left.join(rk,
+        keys.map(k => left(k) <=> rk("__mk_" + k)).reduce(_ && _), joinType)
+    }
+    if (m.partitionCols.isEmpty) {
+      val kept = cutByKeys(existing, touchKeys, "left_anti", bcastRight = false)
+      val next = kept.unionByName(batch).localCheckpoint(true)
+      // full-table rewrite: ANY concurrent commit invalidates the
+      // snapshot this merge rewrote — no rebase path exists
+      return landChange(spark, path, m, Rewritten(m.files), Some(next),
+        op = Some("merge"), opCols = keys, txn = txn, identityWm = false)(refuse(path))
+    }
+    requireUniformLayout(m, "merge into a partitioned table")
+    val pCols = m.partitionCols.map(col)
+    // partitions named by the batch ∪ partitions holding old copies of
+    // the updated keys; bounded by the batch size, safe to collect
+    val affected = batch.select(pCols: _*)
+      .union(cutByKeys(existing, touchKeys.distinct(), "left_semi",
+          bcastRight = true)
+        .select(pCols: _*))
+      .distinct().collect().map(_.toSeq)
+    val affectedDf = spark.createDataFrame(
+      spark.sparkContext.parallelize(affected.map(Row.fromSeq).toSeq, 1),
+      existing.select(pCols: _*).schema)
+    val kept = cutByKeys(
+      existing.join(broadcast(affectedDf), m.partitionCols),
+      touchKeys, "left_anti", bcastRight = false)
+    val next = kept.unionByName(batch).localCheckpoint(true)
+    // every affected partition's old files leave (NOT just the dirs the
+    // new files land in — a drained partition writes no files)
+    val affectedDirs = affected.map(vals =>
+      m.partitionCols.zip(vals).map { case (c, value) =>
+        s"$c=${org.apache.spark.sql.graft.bridge.escapePathValue(value)}"
+      }.mkString("/")).toSet
+    landChange(spark, path, m,
+      Rewritten(m.files.filter(rel => affectedDirs.contains(dirOf(rel)))),
+      Some(clusterForWrite(next, m)), op = Some("merge"), opCols = keys,
+      txn = txn, identityWm = false) { (on, head) =>
+      // rebase is sound ONLY against a non-interacting delta
+      mergeRebase(path, m, batch, on, head)
+      val removed = on.files.toSet -- head.files.toSet
+      if (removed.nonEmpty)
+        mergeLost(path, s"rewrote ${removed.size} file(s) this merge read")
+      // a concurrent deleteVectorized changed file CONTENT without
+      // changing the file list — the rows this merge derived are
+      // stale exactly as if the file had been rewritten
+      if (head.dvs != on.dvs) mergeLost(path, "changed deletion vectors")
+      val fresh = head.files.filterNot(on.files.toSet)
+      if (fresh.exists(rel => affectedDirs.contains(dirOf(rel))))
+        mergeLost(path, "wrote into a partition this merge rewrites")
+      if (fresh.nonEmpty && holdsKeys(spark, path, head, fresh, keys,
+          touchKeys.distinct().toDF(keys.map("__mk_" + _): _*)))
+        mergeLost(path, "appended rows sharing this merge's keys")
     }
   }
 
@@ -6076,17 +6134,10 @@ object ManifestTable {
     * `op=merge`+keys gives CDF the four-type refinement; a lost version
     * race rebases past a winner that cannot interact and otherwise
     * throws with the sidecar cleaned up. */
-  private def mergeMor(spark: SparkSession, path: String, v: Long,
-                       m: Manifest, batch: DataFrame, keys: Seq[String],
-                       deleteKeys: Option[DataFrame],
-                       txn: Option[(String, Long)]): Long = {
-    val ordered = logicalSchema(m).fieldNames.toSeq
-    // materialized once: consumed by the key cut and the data write, and
-    // the write lands inside the directory the key cut scans
-    val b = batch.select(ordered.map(n => col(s"`$n`")): _*).localCheckpoint(true)
-    val touchKeys = deleteKeys.foldLeft(b.select(keys.map(col): _*))(
-        (u, dk) => u.unionByName(dk.select(keys.map(col): _*)))
-      .distinct().toDF(keys.map("__mk_" + _): _*)
+  private def mergeMor(spark: SparkSession, path: String, m: Manifest,
+                       batch: DataFrame, keys: Seq[String],
+                       touchKeys0: DataFrame, txn: Option[(String, Long)]): Long = {
+    val touchKeys = touchKeys0.distinct().toDF(keys.map("__mk_" + _): _*)
     // every live row holding a touched key: its position is the deletion.
     // The key set is the CDC delta — planner/AQE picks broadcast when it
     // is small; the corpus side never shuffles more than the semi-join
@@ -6102,37 +6153,23 @@ object ManifestTable {
         "left_semi")
       .select(col("__dv_fname").as("fname"), col("__dv_pos").as("pos"))
       .localCheckpoint(true)
-    val (dvName, newDvs) = writeDvEntries(spark, path, m, v, matchedPos)
-    val w = if (b.isEmpty) Written(Nil, Map.empty, m)
-            else writeFiles(spark, path, clusterForWrite(b, m), m)
-    if (newDvs.isEmpty && w.rels.isEmpty) return v
-    def cleanup(): Unit = dvName.foreach(n =>
-      fs(spark, path).delete(new Path(dvDir(path), n), true): Unit)
     // rebase: appends COMMUTE with a MOR merge unless they carry the
     // merge's keys — same discipline as the COW rebase, but the stakes
     // differ (our DV entries reference the files we READ, so any change
-    // to those files' identity or DVs is a stale-read conflict)
-    commitRebasing(spark, path, m, () => cleanup()) { (on, head) =>
-      mergeRebase(path, m, b, on, head)
-      val removed = on.files.toSet -- head.files.toSet
+    // to those files' identity or DVs is a stale-read conflict; the
+    // landing step refuses a re-vectored one)
+    landChange(spark, path, m, Positions(matchedPos),
+      Option.when(!batch.isEmpty)(clusterForWrite(batch, m)),
+      op = Some("merge"), opCols = keys, txn = txn, identityWm = false) { (on, head) =>
+      mergeRebase(path, m, batch, on, head)
       // a removed file OUTSIDE the candidate set was proven key-free
       // (pruning layers only KEEP extra files) and none of our DV
       // entries reference it — its rewrite commutes with this merge
-      if (removed.exists(rel => candidateSet.contains(rel) ||
-          newDvs.contains(rel)))
+      if ((on.files.toSet -- head.files.toSet).exists(candidateSet))
         mergeLost(path, "rewrote file(s) this merge read or deletion-vectored")
-      // our sidecar merged the PRIOR positions of exactly the files it
-      // touches; a concurrent DV change on one of them would be
-      // silently dropped by the entry replacement
-      if (newDvs.keys.exists(rel => head.dvs.get(rel) != m.dvs.get(rel)))
-        mergeLost(path, "changed deletion vectors on file(s) this merge re-vectors")
       val fresh = head.files.filterNot(on.files.toSet)
       if (fresh.nonEmpty && holdsKeys(spark, path, head, fresh, keys, touchKeys))
         mergeLost(path, "appended rows sharing this merge's keys")
-    } { on =>
-      commit(spark, path, on.version + 1, on, on.files ++ w.rels,
-        w.statsOn(spark, path, on), dvs = newDvs,
-        op = Some("merge"), opCols = keys, txn = txn)
     }
   }
 
@@ -6185,71 +6222,16 @@ object ManifestTable {
     Some(prunedRels(spark, path, m, Map(ph -> ((Some(mn), Some(mx)))), points))
   }
 
-  /** EQUALITY-DELETE MERGE (`spark.graft.dml.mode=eq` — Iceberg v2's
-    * eq-deletes / the Flink CDC writer re-derived): upsert `batch` and
-    * delete `deleteKeys` WITHOUT READING THE TABLE AT ALL. The touched
-    * keys land as a key sidecar (`_eqd/<name>`), the manifest records
-    * (keyCols, seq=commit version, count), and every reader anti-joins
-    * files SEQUENCED BEFORE the delete against the key set — total write
-    * cost O(batch), where even MOR pays a (pruned) key-cut scan per
-    * merge. The trade: at-risk reads carry the anti-join until
-    * OPTIMIZE … PURGE materializes (post-entry files keep the plain
-    * plan — [[readRels]] routes per rel), metadata fast-counts decline
-    * until [[foldEqdelCounts]] (or ANALYZE) pays the matched-row count
-    * once, and CDF across the commit refuses unless
-    * `spark.graft.cdf.eqdels=compute` opts into the keyed-scan delta.
-    * CLONE, branch and FAST FORWARD renumber sequences across version
-    * domains, so the zero-copy lifecycle never demands a PURGE. Rebase is
-    * UNCONDITIONAL except definition changes ([[mergeRebase]]): an
-    * eq-merge reads nothing, so appends/rewrites/other
-    * merges all commute — the retry re-sequences the entry at the new
-    * head, which IS the CDC linearization by commit order. A concurrent
-    * constraint add re-gates the batch on retry. */
-  private def mergeEq(spark: SparkSession, path: String, v: Long,
-                      m: Manifest, batch: DataFrame, keys: Seq[String],
-                      deleteKeys: Option[DataFrame],
-                      txn: Option[(String, Long)]): Long = {
-    val ordered = logicalSchema(m).fieldNames.toSeq
-    val b = batch.select(ordered.map(n => col(s"`$n`")): _*).localCheckpoint(true)
-    val phKeys = keys.map(k => m.colmap.getOrElse(k, k))
-    val touchKeys = deleteKeys.foldLeft(b.select(keys.map(col): _*))(
-        (u, dk) => u.unionByName(dk.select(keys.map(col): _*)))
-      .distinct().toDF(phKeys: _*)
-    phKeys.foreach(k => m.schema.find(_.name == k)
-      .getOrElse(sys.error(s"merge key '$k' not in schema of $path")))
-    val name = f"eq$v%012d-${java.util.UUID.randomUUID().toString.take(8)}"
-    // ONE pass, parallel: the key count rides the write itself as an
-    // observed metric — no single-task coalesce (a mass-backfill merge's
-    // millions of keys write across the cluster; AQE sizes the distinct's
-    // output so a streaming micro-batch still lands one small file) and
-    // no second read to count. The read side globs the entry directory,
-    // so the file count is free to vary.
-    val obs = org.apache.spark.sql.Observation()
-    touchKeys.observe(obs,
-        org.apache.spark.sql.functions.count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(new Path(eqdDir(path), name).toString)
-    val count = obs.get("n").asInstanceOf[Long]
-    def cleanup(): Unit =
-      fs(spark, path).delete(new Path(eqdDir(path), name), true): Unit
-    val w = if (b.isEmpty) Written(Nil, Map.empty, m)
-            else writeFiles(spark, path, clusterForWrite(b, m), m)
-    if (count == 0L && w.rels.isEmpty) { cleanup(); return v }
-    commitRebasing(spark, path, m, () => cleanup())(mergeRebase(path, m, b, _, _)) { on =>
-      val nv = on.version + 1
-      commit(spark, path, nv, on, on.files ++ w.rels, w.statsOn(spark, path, on),
-        op = Some("merge"), opCols = keys, txn = txn,
-        eqdels = if (count == 0L) Nil
-                 else Seq(EqDelete(name, phKeys, nv, count)))
-    }
-  }
-
   /** Row-level DELETE, copy-on-write: rewrite ONLY the files that hold
     * matching rows; every other file carries into the new snapshot
-    * untouched — same bytes, same recorded stats. Readers of prior
-    * versions are unaffected (old files live until [[vacuum]]); losing the
-    * version race to a concurrent commit throws rather than clobbers.
-    * Returns the new version, or the current one when nothing matched.
+    * untouched — same bytes, same recorded stats. The change lands through
+    * [[landChange]] as the touched files plus their surviving rows.
+    * Readers of prior versions are unaffected (old files live until
+    * [[vacuum]]); losing the version race to a concurrent commit throws
+    * rather than clobbers. Returns the new version, or the current one
+    * when nothing matched. This API face stays copy-on-write whatever
+    * [[DmlModeKey]] says; [[deleteVectorized]] is its deletion-vector
+    * face, and SQL DELETE picks between them by the knob.
     *
     * SQL DELETE null semantics: rows where `predicate` is NULL are KEPT
     * (only predicate=true deletes).
@@ -6259,9 +6241,7 @@ object ManifestTable {
     * that for stats columns.
     */
   def delete(spark: SparkSession, path: String, predicate: Column): Long = {
-    val v = currentVersion(spark, path)
-      .getOrElse(sys.error(s"no manifest table at $path"))
-    val m = readManifest(spark, path, v)
+    val (v, m) = readHead(spark, path)
     requireMutable(m, path, "DELETE")
     if (m.files.isEmpty) return v
     // a partition-only predicate deletes WHOLE directories: decide from
@@ -6270,23 +6250,24 @@ object ManifestTable {
     // undecidable predicates keep the row-level rewrite
     matchingPartitionFiles(spark, m, predicate) match {
       case Some(matching) =>
-        if (matching.isEmpty) return v
-        val doomed = matching.toSet
-        commit(spark, path, v + 1, m, m.files.filterNot(doomed))
+        landChange(spark, path, m, Rewritten(matching), None)(refuse(path))
       case None =>
-        rewriteWithout(spark, path, v, m,
+        rewriteWithout(spark, path, m,
           touchedFiles(spark, path, m.files, m, predicate), predicate)
     }
   }
 
   /** Row-level DELETE, merge-on-read: instead of rewriting the files that
     * hold matching rows, record their POSITIONS in a deletion-vector
-    * sidecar and commit a snapshot whose readers skip them. Write cost is
-    * proportional to the number of DELETED rows, not the number of touched
-    * FILES' bytes — the difference between a point delete writing a few KB
-    * and copy-on-write rewriting a gigabyte file to remove one row; at
-    * 100 TB, a stream of small deletes under copy-on-write rewrites the
-    * lake ([[graft.sources]] SCALE.md §Deletion vectors).
+    * sidecar and commit a snapshot whose readers skip them — the change
+    * lands through [[landChange]] as positions with no added rows. Write
+    * cost is proportional to the number of DELETED rows, not the number
+    * of touched FILES' bytes — the difference between a point delete
+    * writing a few KB and copy-on-write rewriting a gigabyte file to
+    * remove one row; at 100 TB, a stream of small deletes under
+    * copy-on-write rewrites the lake ([[graft.sources]] SCALE.md
+    * §Deletion vectors). SQL DELETE takes this path when
+    * [[DmlModeKey]] is `mor` or `eq`.
     *
     * Every reader honors DVs transparently (snapshot/pruned/range/point
     * reads, the SQL datasource, CDF, MV refresh); metadata counts stay
@@ -6297,23 +6278,18 @@ object ManifestTable {
     *
     * A new DV for a file REPLACES its old one and therefore merges the old
     * positions in. Same null semantics as [[delete]] (predicate NULL
-    * keeps); losing the version race throws — re-run against the winner.
+    * keeps); losing the version race throws with the sidecar removed —
+    * re-run against the winner.
     */
   def deleteVectorized(spark: SparkSession, path: String, predicate: Column): Long = {
-    val v = currentVersion(spark, path)
-      .getOrElse(sys.error(s"no manifest table at $path"))
-    val m = readManifest(spark, path, v)
+    val (v, m) = readHead(spark, path)
     requireMutable(m, path, "DELETE")
     if (m.files.isEmpty) return v
     // ONE meta scan finds the touched files AND their fresh deleted
-    // positions — previously a `touchedFiles` discovery pass scanned the
-    // predicate columns of every file, then a SECOND meta scan of the
-    // touched subset re-read them for positions. Both passes are narrow
-    // (predicate columns + generated metadata), so they fuse: the touched
-    // set is exactly the distinct file names of the matching rows, which
-    // [[writeDvEntries]] derives from the positions themselves. The
-    // checkpoint is deleted-rows-sized; the DV write and the fname probe
-    // read its blocks, not the table.
+    // positions: the touched set is exactly the distinct file names of
+    // the matching rows, which [[writeDvEntries]] derives from the
+    // positions themselves. The checkpoint is deleted-rows-sized; the DV
+    // write and the fname probe read its blocks, not the table.
     // rawScan materializes the metadata columns per layout group BEFORE
     // the logical rename; the predicate then filters logical names.
     // The raw scan may re-flag rows an earlier DV already removed; the
@@ -6324,17 +6300,9 @@ object ManifestTable {
       .filter(coalesce(predicate, lit(false)))
       .select(col("__dv_fname").as("fname"), col("__dv_pos").as("pos"))
       .localCheckpoint()
-    try {
-      val (dvName, newDvs) = writeDvEntries(spark, path, m, v, fresh)
-      if (dvName.isEmpty) return v
-      try commit(spark, path, v + 1, m, m.files, dvs = newDvs)
-      catch { case e: java.util.ConcurrentModificationException =>
-        dvName.foreach(n => fs(spark, path).delete(new Path(dvDir(path), n), true))
-        throw e
-      }
-    } finally org.apache.spark.sql.graft.bridge.releaseCheckpoint(fresh)
+    try landChange(spark, path, m, Positions(fresh), None)(refuse(path))
+    finally org.apache.spark.sql.graft.bridge.releaseCheckpoint(fresh)
   }
-
   /** Materialize accumulated deletion vectors: rewrite every DV'd file
     * without its deleted rows and drop the DV entries — the maintenance
     * half of merge-on-read (Delta's PURGE / Iceberg's rewrite-position-
@@ -6355,9 +6323,7 @@ object ManifestTable {
                      minDeletedFraction: Double = 0.0): Long = {
     require(minDeletedFraction >= 0.0 && minDeletedFraction <= 1.0,
       s"minDeletedFraction must be in [0, 1], got $minDeletedFraction")
-    val v = currentVersion(spark, path)
-      .getOrElse(sys.error(s"no manifest table at $path"))
-    val m = readManifest(spark, path, v)
+    val (v, m) = readHead(spark, path)
     if (m.dvs.isEmpty && m.eqdels.isEmpty) return v
     // one stats fold only when the threshold needs per-file row counts
     lazy val allStats = statsFor(spark, path, m)
@@ -6402,15 +6368,11 @@ object ManifestTable {
           })
       }
     }
-    if (affected.isEmpty && exonerated.isEmpty) return v
-    if (affected.isEmpty)
-      // every affected file exonerated (the keys matched nothing still
-      // live): retire the entries in one METADATA-ONLY commit
-      return commit(spark, path, v + 1, m, m.files,
-        fseqExplicit = exonerated.iterator.map(_ -> (v + 1)).toMap)
-    commitRewrite(spark, path, v, m, affected,
-      readRels(spark, path, m, affected),
-      fseqExplicit = exonerated.iterator.map(_ -> (v + 1)).toMap)
+    // when every affected file is exonerated (the keys matched nothing
+    // still live) the entries retire in one METADATA-ONLY commit
+    landChange(spark, path, m, Rewritten(affected),
+      Option.when(affected.nonEmpty)(readRels(spark, path, m, affected)),
+      fseqExplicit = exonerated.iterator.map(_ -> (v + 1)).toMap)(refuse(path))
   }
 
   /** The files entry `e`'s keys MAY touch, by the same conservative
@@ -6894,15 +6856,13 @@ object ManifestTable {
     */
   def deleteRange(spark: SparkSession, path: String, colName: String,
                   lo: Any, hi: Any): Long = {
-    val v = currentVersion(spark, path)
-      .getOrElse(sys.error(s"no manifest table at $path"))
-    val m = readManifest(spark, path, v)
+    val (v, m) = readHead(spark, path)
     if (m.files.isEmpty) return v
     val pred = col(colName) >= lit(lo) && col(colName) <= lit(hi)
     val candidates =
       prunedRels(spark, path, m, Map(colName -> ((Some(lo), Some(hi)))), Map.empty)
     if (candidates.isEmpty) return v
-    rewriteWithout(spark, path, v, m,
+    rewriteWithout(spark, path, m,
       touchedFiles(spark, path, candidates, m, pred), pred)
   }
 
@@ -6940,41 +6900,50 @@ object ManifestTable {
     * matching `pred` (null-safe: NULL keeps). Untouched files keep their
     * stats entries verbatim; rewritten files get stats from their write job.
     */
-  private def rewriteWithout(spark: SparkSession, path: String, v: Long,
-                             m: Manifest, touched: Seq[String],
-                             pred: Column): Long = {
-    if (touched.isEmpty) return v
+  private def rewriteWithout(spark: SparkSession, path: String, m: Manifest,
+                             touched: Seq[String], pred: Column): Long = {
+    if (touched.isEmpty) return m.version
     // readRels applies the touched files' deletion vectors: without it a
     // copy-on-write rewrite would RESURRECT rows a prior deleteVectorized
     // removed (the rewrite also materializes those DVs away — commit drops
     // the replaced files' entries)
     val kept = readRels(spark, path, m, touched)
       .filter(!coalesce(pred, lit(false)))
-    commitRewrite(spark, path, v, m, touched, kept)
+    landChange(spark, path, m, Rewritten(touched), Some(kept))(refuse(path))
   }
 
-  /** Row-level UPDATE, copy-on-write: rewrite ONLY the files holding rows
-    * matching `predicate`, replacing each assigned column with its new
-    * expression WHERE the predicate holds (SQL semantics: a NULL predicate
+  /** Row-level UPDATE: replace each assigned column with its new
+    * expression WHERE `predicate` holds (SQL semantics: a NULL predicate
     * leaves the row unchanged; every right-hand side reads the OLD row).
-    * Untouched files carry into the new snapshot byte-identical, prior
-    * versions stay readable, losing the version race throws. New values
-    * cast to the column's declared type, so the table schema is invariant.
-    * Updating a partition column is allowed — rewritten rows land in their
-    * new partition directories. Returns the new version (unchanged when
-    * nothing matched).
+    * New values cast to the column's declared type, so the table schema
+    * is invariant; generated partition columns re-derive, DEFAULT columns
+    * fill, and CHECK constraints gate the new rows before any byte is
+    * written. Updating a partition column is allowed — updated rows land
+    * in their new partition directories. Prior versions stay readable and
+    * losing the version race throws. Returns the new version (unchanged
+    * when nothing matched).
+    *
+    * The change lands through [[landChange]] in the encoding
+    * [[DmlModeKey]] selects:
+    *  - `cow`: the files holding a match rewrite in full; every other file
+    *    carries into the new snapshot byte-identical;
+    *  - `mor` and `eq`: matched rows' positions become deletion-vector
+    *    entries and ONLY the matched rows re-write — an append bounded by
+    *    the match count (at 100 TB a point update under COW rewrites
+    *    gigabytes to change one row). An UPDATE's SET reads the old row
+    *    regardless, so position deletes are the best eq can do too.
+    *    Readers, CDF (`op=update` pairs the DV'd pre-images with the
+    *    appended post-images), fastCount and zone maps honor the DVs as
+    *    for [[deleteVectorized]]; [[rewriteDeletes]] materializes them.
     */
   def update(spark: SparkSession, path: String, predicate: Column,
              sets: Seq[(String, Column)]): Long = {
     val mode = dmlMode(spark) // a mistyped mode fails before any work
-    val v = currentVersion(spark, path)
-      .getOrElse(sys.error(s"no manifest table at $path"))
-    val m = readManifest(spark, path, v)
+    val (v, m) = readHead(spark, path)
     requireMutable(m, path, "UPDATE")
     if (m.files.isEmpty) return v
     val logical = logicalSchema(m)
-    val fields = logical.fields.map(f => f.name -> f).toMap
-    val bad = sets.collect { case (n, _) if !fields.contains(n) => n }
+    val bad = sets.collect { case (n, _) if !logical.fieldNames.contains(n) => n }
     require(bad.isEmpty,
       s"UPDATE of $path assigns unknown column(s) ${bad.mkString(", ")} — " +
         s"table columns: ${logical.fieldNames.mkString(", ")}")
@@ -6993,121 +6962,141 @@ object ManifestTable {
     val touched = touchedFiles(spark, path, m.files, m, predicate)
     if (touched.isEmpty) return v
     val hit = coalesce(predicate, lit(false))
-    // eq mode routes UPDATE through MOR too: an UPDATE's SET reads the
-    // old row regardless, so position deletes are the best it can do —
-    // a user who opted out of COW write amplification gets it everywhere
-    if (mode != "cow")
-      return updateMor(spark, path, v, m, touched, hit, sets)
-    val setMap = sets.toMap
-    val replaced = logical.fields.map { f =>
-      setMap.get(f.name) match {
-        case Some(e) => when(hit, e.cast(f.dataType))
-          .otherwise(col(s"`${f.name}`")).as(f.name)
-        case None => col(s"`${f.name}`")
-      }
-    }
-    // DV-applied read: see rewriteWithout — an update must not resurrect
-    // previously-deleted rows
-    // re-derive generated partition columns AFTER the SET projection: an
-    // update of a transform's SOURCE column must move the row's partition
+    // `rows` with the SET applied where `mask` holds. Generated partition
+    // columns re-derive AFTER the SET projection: an update of a
+    // transform's SOURCE column must move the row's partition.
     // fillDefaults: a SET that evaluates to NULL in a DEFAULT column must
     // materialize the default, not a physical NULL — otherwise the new
     // file's zone map records all-null and bound pruning would skip it
     // for `WHERE dcol = <default>` while the read coalesce says the rows
-    // match (the documented "post-add NULL becomes the default" contract)
-    val rewritten = fillDefaults(m, withDerived(
-      readRels(spark, path, m, touched).select(replaced.toSeq: _*)
-        .drop(m.transforms.map(_.derived): _*), m.transforms, Some(m.schema)))
-      .select(logical.fieldNames.toSeq.map(n => col(s"`$n`")): _*)
-    // the SET right-hand sides can produce violating values — gate the
-    // rewritten rows like any other write batch
-    enforceConstraints(rewritten, m.constraints, "update")
+    // match (the documented "post-add NULL becomes the default" contract).
+    // The SET right-hand sides can produce violating values, so the
+    // updated rows are gated like any other write batch.
+    def updated(rows: DataFrame, mask: Column): DataFrame = {
+      val setMap = sets.toMap
+      val replaced = logical.fields.map { f =>
+        setMap.get(f.name) match {
+          case Some(e) => when(mask, e.cast(f.dataType))
+            .otherwise(col(s"`${f.name}`")).as(f.name)
+          case None => col(s"`${f.name}`")
+        }
+      }
+      val out = fillDefaults(m, withDerived(
+        rows.select(replaced.toSeq: _*)
+          .drop(m.transforms.map(_.derived): _*), m.transforms, Some(m.schema)))
+        .select(logical.fieldNames.toSeq.map(n => col(s"`$n`")): _*)
+      enforceConstraints(out, m.constraints, "update")
+      out
+    }
     // op=update: every delete+insert the change feed diffs out of this
     // commit IS an update pair — the four-type CDF refinement
-    commitRewrite(spark, path, v, m, touched, rewritten, op = Some("update"))
-  }
-
-  /** Merge-on-read UPDATE (`spark.graft.dml.mode=mor`): matched rows'
-    * positions become deletion-vector entries on their source files and
-    * ONLY the matched rows re-write — an append bounded by the match
-    * count, while every untouched-row file (and every untouched row of a
-    * touched file) carries byte-identical. Copy-on-write rewrites the
-    * full bytes of every touched file; at 100 TB a point update under
-    * COW rewrites gigabytes to change one row. Readers, CDF (`op=update`
-    * pairs the DV'd pre-images with the appended post-images), fastCount
-    * and zone maps all honor the DVs exactly as for [[deleteVectorized]];
-    * [[rewriteDeletes]] materializes the tax away. Losing the version
-    * race throws (the orphaned sidecar and data files are vacuum-swept) —
-    * parity with [[deleteVectorized]], no rebase. */
-  private def updateMor(spark: SparkSession, path: String, v: Long,
-                        m: Manifest, touched: Seq[String], hit: Column,
-                        sets: Seq[(String, Column)]): Long = {
-    val logical = logicalSchema(m)
-    // DV-applied read WITH positions: a previously-deleted row must not
-    // resurrect as an updated copy, and each matched live row's position
-    // is exactly what the new DV records
-    val matched = liveRowsWithPos(spark, path, m, touched).filter(hit)
-      .localCheckpoint(true) // one materialization feeds positions AND rows
-    if (matched.isEmpty) return v
-    val setMap = sets.toMap
-    val replaced = logical.fields.map { f =>
-      setMap.get(f.name) match {
-        case Some(e) => e.cast(f.dataType).as(f.name)
-        case None => col(s"`${f.name}`")
-      }
-    }
-    // re-derive generated partition columns AFTER the SET projection: an
-    // update of a transform's SOURCE column must move the row's partition
-    // (the new copy lands in the new directory; the DV removes the old)
-    // fillDefaults: same discipline as the COW path — a NULL-producing
-    // SET in a DEFAULT column materializes the default so the appended
-    // file's stats/Bloom stay prunable-exact
-    val rewritten = fillDefaults(m, withDerived(
-      matched.select(replaced.toSeq: _*)
-        .drop(m.transforms.map(_.derived): _*), m.transforms, Some(m.schema)))
-      .select(logical.fieldNames.toSeq.map(n => col(s"`$n`")): _*)
-    // constraints gate the SET results BEFORE any sidecar/data write — a
-    // violating update leaves zero bytes behind
-    enforceConstraints(rewritten, m.constraints, "update")
-    val freshPos = matched
-      .select(col("__dv_fname").as("fname"), col("__dv_pos").as("pos"))
-    val (dvName, newDvs) = writeDvEntries(spark, path, m, v, freshPos)
-    val w = writeFiles(spark, path, clusterForWrite(rewritten, m), m)
-    try commit(spark, path, v + 1, m, m.files ++ w.rels, w.stats, dvs = newDvs,
-      op = Some("update"),
-      props = identityWmUpdate(spark, path, m, w.rels, w.stats))
-    catch { case e: java.util.ConcurrentModificationException =>
-      dvName.foreach(n => fs(spark, path).delete(new Path(dvDir(path), n), true))
-      throw e
+    if (mode == "cow")
+      // DV-applied read: see rewriteWithout — an update must not resurrect
+      // previously-deleted rows
+      landChange(spark, path, m, Rewritten(touched),
+        Some(updated(readRels(spark, path, m, touched), hit)),
+        op = Some("update"))(refuse(path))
+    else {
+      // DV-applied read WITH positions: a previously-deleted row must not
+      // resurrect as an updated copy, and each matched live row's position
+      // is exactly what the new DV records
+      val matched = liveRowsWithPos(spark, path, m, touched).filter(hit)
+        .localCheckpoint(true) // one materialization feeds positions AND rows
+      if (matched.isEmpty) return v
+      landChange(spark, path, m,
+        Positions(matched.select(col("__dv_fname").as("fname"), col("__dv_pos").as("pos"))),
+        Some(clusterForWrite(updated(matched, lit(true)), m)),
+        op = Some("update"))(refuse(path))
     }
   }
 
-  /** Shared tail of the copy-on-write row-level commands: write
-    * `replacement` (the new content of the `touched` files), refresh stats
-    * for the new files only, and commit them alongside the untouched files
-    * (whose stats entries carry verbatim).
-    */
-  private def commitRewrite(spark: SparkSession, path: String, v: Long,
-                            m: Manifest, touched: Seq[String],
-                            replacement: DataFrame,
-                            op: Option[String] = None,
-                            fseqExplicit: Map[String, Long] = Map.empty): Long = {
-    val touchedSet = touched.toSet
-    val untouched = m.files.filterNot(touchedSet)
-    val w = writeFiles(spark, path, replacement, m)
-    // a fully-drained rewrite can emit a ROW-LESS parquet file; the stats
-    // pass records it as an explicit rows=0 entry — drop it from the
-    // commit and let vacuum sweep the orphaned bytes.
-    val newFiles = if (m.statsCols.nonEmpty || m.bloomCols.nonEmpty)
-                     w.rels.filterNot(rel =>
-                       w.stats.get(rel).exists(isZeroRowEntry))
-                   else w.rels
-    // identity tables self-sync the watermark past everything the rewrite
+  /** How a row-level change encodes the rows it removes. */
+  private sealed trait Removed
+  /** Copy-on-write: the `touched` files leave the snapshot; their
+    * surviving rows ride in the change's added rows. */
+  private case class Rewritten(touched: Seq[String]) extends Removed
+  /** Deletion vectors: the (`fname`, `pos`) positions of the removed rows,
+    * materialized by the caller ([[writeDvEntries]] reads them twice). */
+  private case class Positions(fresh: DataFrame) extends Removed
+  /** Equality deletes: the removed rows' key values, one column per key,
+    * physical-named. */
+  private case class Keys(keys: DataFrame) extends Removed
+
+  /** The one landing step every row-level change ends in — DELETE,
+    * UPDATE, MERGE, REPLACE WHERE and the rewrites of compaction and
+    * purge. The change arrives computed: `removed` in one of the three
+    * encodings and `added`, the rows it adds (None when it adds none). In
+    * order, the step
+    *  1. writes the removal's DV or eq-key sidecar;
+    *  2. writes `added` once through [[writeFiles]];
+    *  3. lands through [[commitRebasing]] under the caller's conflict rule
+    *     `rebase` (often [[refuse]]);
+    *  4. deletes the sidecar when the commit is refused.
+    *
+    * Rewritten files leave the landing snapshot and added files that hold
+    * no rows never enter it. A DV entry replaces its file's old one, so a
+    * rebase also refuses a head that dropped or re-vectored a file this
+    * change vectors. An eq-delete entry is sequenced at the version it
+    * lands as. A change that removes, adds and re-sequences nothing
+    * commits nothing and returns `m`'s version. The other arguments pass
+    * to [[commit]]; `identityWm` advances the identity watermark past the
+    * added rows ([[identityWmUpdate]]). */
+  private def landChange(spark: SparkSession, path: String, m: Manifest,
+                         removed: Removed, added: Option[DataFrame],
+                         op: Option[String] = None, opCols: Seq[String] = Nil,
+                         txn: Option[(String, Long)] = None,
+                         identityWm: Boolean = true,
+                         fseqExplicit: Map[String, Long] = Map.empty)(
+                         rebase: (Manifest, Manifest) => Unit): Long = {
+    val v = m.version
+    val (touched, sidecar, dvs, eqdel) = removed match {
+      case Rewritten(rels) => (rels.toSet, None, Map.empty[String, (String, Long)], None)
+      case Positions(fresh) =>
+        val (name, dvs) = writeDvEntries(spark, path, m, v, fresh)
+        (Set.empty[String], name.map(new Path(dvDir(path), _)), dvs, None)
+      case Keys(keys) =>
+        val dir = new Path(eqdDir(path),
+          f"eq$v%012d-${java.util.UUID.randomUUID().toString.take(8)}")
+        // ONE pass, parallel: the key count rides the write itself as an
+        // observed metric — no single-task coalesce (a mass-backfill
+        // merge's millions of keys write across the cluster; AQE sizes the
+        // distinct's output so a streaming micro-batch still lands one
+        // small file) and no second read to count. The read side globs the
+        // entry directory, so the file count is free to vary.
+        val obs = org.apache.spark.sql.Observation()
+        keys.observe(obs, count(lit(1)).as("n"))
+          .write.mode(SaveMode.Overwrite).parquet(dir.toString)
+        val n = obs.get("n").asInstanceOf[Long]
+        (Set.empty[String], Some(dir), Map.empty[String, (String, Long)],
+          Option.when(n > 0L)((dir.getName, keys.columns.toSeq, n)))
+    }
+    def cleanup(): Unit = sidecar.foreach(fs(spark, path).delete(_, true): Unit)
+    val w = added.fold(Written(Nil, Map.empty, m))(writeFiles(spark, path, _, m))
+    if (touched.isEmpty && dvs.isEmpty && eqdel.isEmpty && w.rels.isEmpty &&
+        fseqExplicit.isEmpty) { cleanup(); return v }
+    val fresh = w.rels.filterNot(rel => w.stats.get(rel).exists(isZeroRowEntry))
+    // identity tables self-sync the watermark past everything the change
     // wrote (REPLACE WHERE mints fresh ids; delete/update rewrites carry
     // old ones, whose max never exceeds the current watermark — harmless)
-    commit(spark, path, v + 1, m, untouched ++ newFiles, w.stats, op = op,
-      props = identityWmUpdate(spark, path, m, newFiles, w.stats),
-      fseqExplicit = fseqExplicit)
+    val props = if (identityWm) identityWmUpdate(spark, path, m, fresh, w.stats)
+                else Map.empty[String, String]
+    commitRebasing(spark, path, m, () => cleanup()) { (on, head) =>
+      rebase(on, head)
+      // our sidecar merged the PRIOR positions of exactly the files it
+      // touches; a concurrent change to one of them would be silently
+      // dropped by the entry replacement
+      val live = head.files.toSet
+      if (dvs.keys.exists(rel => !live(rel) || head.dvs.get(rel) != m.dvs.get(rel)))
+        throw new java.util.ConcurrentModificationException(
+          s"a concurrent commit to $path removed or re-vectored file(s) this " +
+            "change deletion-vectors — re-run against the new snapshot")
+    } { on =>
+      val nv = on.version + 1
+      commit(spark, path, nv, on, on.files.filterNot(touched) ++ fresh,
+        w.statsOn(spark, path, on), dvs = dvs, op = op, opCols = opCols,
+        txn = txn, props = props, fseqExplicit = fseqExplicit,
+        eqdels = eqdel.map { case (name, cols, n) => EqDelete(name, cols, nv, n) }.toSeq)
+    }
   }
 
   /** Rewrite the current snapshot into ~`targetRowsPerFile`-row files —
@@ -7132,38 +7121,9 @@ object ManifestTable {
   def compact(spark: SparkSession, path: String, targetRowsPerFile: Long,
               zorderBy: Seq[String] = Nil): Long = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
-    val v = currentVersion(spark, path)
-      .getOrElse(sys.error(s"no manifest table at $path"))
-    val m = readManifest(spark, path, v)
-    val logical = logicalSchema(m)
-    zorderBy.foreach(c => require(logical.fieldNames.contains(c),
-      s"zorderBy: no column '$c' on $path"))
-    val current = readVersion(spark, path, v)
-    val sized = (if (zorderBy.nonEmpty) {
-      val total = current.count()
-      val n = math.max(1, math.ceil(total.toDouble / targetRowsPerFile).toInt)
-      val bits = graft.functions.ZOrder.defaultBits(zorderBy.length)
-      current.withColumn("__zv", graft.functions.ZOrder.interleaveN(
-          zorderBy.map(c => col(s"`$c`")), bits))
-        .repartitionByRange(n, (m.partitionCols :+ "__zv").map(col): _*)
-        .drop("__zv")
-    } else if (m.props.get(SortOrderProp).exists(_.trim.nonEmpty) ||
-               m.statsCols.nonEmpty) {
-      // partition cols lead the range key so rows stay grouped per output
-      // directory; within a partition, files tile the clustering range.
-      // A declared write sort order (graft.write.sortOrder) IS the
-      // table's clustering intent — OPTIMIZE honors it over the default
-      // stats-column key, so maintenance re-clusters the same way
-      // ingestion does (Iceberg's sort-order-aware rewrite)
-      val orderCols = m.props.get(SortOrderProp)
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .filter(_.nonEmpty).getOrElse(m.statsCols)
-      val total = current.count()
-      val n = math.max(1, math.ceil(total.toDouble / targetRowsPerFile).toInt)
-      current.repartitionByRange(n, (m.partitionCols ++ orderCols).map(col): _*)
-    } else graft.operators.Maintenance.sizedRepartition(
-      current, m.partitionCols, targetRowsPerFile))
-      .localCheckpoint(true) // materialize before writing (self-read safety)
+    val (v, m) = readHead(spark, path)
+    val sized = compactLayout(path, m, readVersion(spark, path, v),
+      targetRowsPerFile, zorderBy)
     val w = writeFiles(spark, path, sized, m)
     // landing on m: table-level metadata (TBLPROPERTIES, streaming txn
     // watermarks, the COPY ledger) must survive maintenance — dropping the
@@ -7173,6 +7133,39 @@ object ManifestTable {
     // through the landing: every old file is rewritten out of the file
     // set, and commit() filters carried DVs to surviving files.
     commit(spark, path, v + 1, m, w.rels, w.stats)
+  }
+
+  /** `rows` of `m` laid out for a compaction into ~`targetRowsPerFile`-row
+    * files and materialized (self-read safety: the write lands in the
+    * directories the rows are read from). `zorderBy` ranges on the
+    * N-column Morton curve. Otherwise a declared write sort order
+    * (graft.write.sortOrder) — the table's clustering intent, so
+    * maintenance re-clusters the way ingestion does (Iceberg's
+    * sort-order-aware rewrite) — or else the stats columns are the range
+    * key. Partition columns lead the range key so rows stay grouped per
+    * output directory, and within a partition the files tile the range.
+    * With none of these the rows round-robin into sized files. */
+  private def compactLayout(path: String, m: Manifest, rows: DataFrame,
+                            targetRowsPerFile: Long,
+                            zorderBy: Seq[String]): DataFrame = {
+    zorderBy.foreach(c => require(logicalSchema(m).fieldNames.contains(c),
+      s"zorderBy: no column '$c' on $path"))
+    def fileCount: Int =
+      math.max(1, math.ceil(rows.count().toDouble / targetRowsPerFile).toInt)
+    val orderCols = m.props.get(SortOrderProp)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .filter(_.nonEmpty).getOrElse(m.statsCols)
+    (if (zorderBy.nonEmpty) {
+      val bits = graft.functions.ZOrder.defaultBits(zorderBy.length)
+      rows.withColumn("__zv", graft.functions.ZOrder.interleaveN(
+          zorderBy.map(c => col(s"`$c`")), bits))
+        .repartitionByRange(fileCount, (m.partitionCols :+ "__zv").map(col): _*)
+        .drop("__zv")
+    } else if (orderCols.nonEmpty)
+      rows.repartitionByRange(fileCount, (m.partitionCols ++ orderCols).map(col): _*)
+    else graft.operators.Maintenance.sizedRepartition(
+      rows, m.partitionCols, targetRowsPerFile))
+      .localCheckpoint(true)
   }
 
   /** BIN-PACKING compaction: rewrite ONLY files smaller than
@@ -7190,19 +7183,26 @@ object ManifestTable {
                    targetRowsPerFile: Long): Long = {
     require(smallerThanBytes > 0 && targetRowsPerFile > 0,
       "compactSmall thresholds must be positive")
-    val v = currentVersion(spark, path)
-      .getOrElse(sys.error(s"no manifest table at $path"))
-    val m = readManifest(spark, path, v)
+    val (v, m) = readHead(spark, path)
+    packSmall(spark, path, m, m.files, smallerThanBytes, 2, targetRowsPerFile)
+  }
+
+  /** Rewrite the files of `rels` smaller than `smallerThan` bytes into
+    * ~`targetRows`-row files when at least `minFiles` of them exist. File
+    * sizes come from one metadata RPC per file. */
+  private def packSmall(spark: SparkSession, path: String, m: Manifest,
+                        rels: Seq[String], smallerThan: Long, minFiles: Int,
+                        targetRows: Long): Long = {
     val f = fs(spark, path)
-    val touched = m.files.filter { rel =>
-      try f.getFileStatus(filePath(path, rel)).getLen < smallerThanBytes
+    val small = rels.filter { rel =>
+      try f.getFileStatus(filePath(path, rel)).getLen < smallerThan
       catch { case _: java.io.IOException => false }
     }
-    if (touched.size < 2) return v
-    val scoped = readRels(spark, path, m, touched)
+    if (small.size < minFiles) return m.version
     val sized = graft.operators.Maintenance.sizedRepartition(
-      scoped, m.partitionCols, targetRowsPerFile).localCheckpoint(true)
-    commitRewrite(spark, path, v, m, touched, sized)
+      readRels(spark, path, m, small), m.partitionCols, targetRows)
+      .localCheckpoint(true)
+    landChange(spark, path, m, Rewritten(small), Some(sized))(refuse(path))
   }
 
   /** PARTITION-SCOPED compaction: rewrite only the partitions whose
@@ -7221,56 +7221,17 @@ object ManifestTable {
                    targetRowsPerFile: Long,
                    zorderBy: Seq[String] = Nil): Long = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
-    val v = currentVersion(spark, path)
-      .getOrElse(sys.error(s"no manifest table at $path"))
-    val m = readManifest(spark, path, v)
+    val (v, m) = readHead(spark, path)
     require(m.partitionCols.nonEmpty,
       s"compactWhere: $path is unpartitioned — use compact()")
     requireUniformLayout(m, "compactWhere")
-    // distinct partition tuples, parsed back to typed values; evaluate
-    // the predicate over them as a (partition-count-bounded) local frame
-    val partSchema = StructType(m.partitionCols.map(c => m.schema(c)).toArray)
-    val byDir: Map[String, Seq[String]] = m.files.groupBy(dirOf)
-    val tuples = byDir.keys.toSeq.sorted.map { dir =>
-      val vals = dir.split("/").zip(m.partitionCols).map { case (seg, c) =>
-        val i = seg.indexOf('=')
-        require(i > 0 && seg.substring(0, i) == c,
-          s"compactWhere: unexpected directory segment '$seg'")
-        parsePartitionValue(spark, seg.substring(i + 1), m.schema(c).dataType)
-          .getOrElse(sys.error(
-            s"compactWhere: cannot parse partition value '$seg' — " +
-              "the predicate cannot be evaluated safely"))
-      }
-      (dir, vals)
-    }
-    val dirDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        tuples.map { case (dir, vals) => Row.fromSeq(vals.toSeq :+ dir) }, 1),
-      StructType(partSchema.fields :+ StructField("__dir", StringType, nullable = false)))
-    val matching = dirDf.filter(coalesce(predicate, lit(false)))
-      .select(col("__dir")).collect().map(_.getString(0)).toSet
-    if (matching.isEmpty) return v
-    val touched = m.files.filter(rel => matching.contains(dirOf(rel)))
-    val scoped = readRels(spark, path, m, touched)
-    val sized = (if (zorderBy.nonEmpty) {
-      val logical = logicalSchema(m)
-      zorderBy.foreach(c => require(logical.fieldNames.contains(c),
-        s"zorderBy: no column '$c' on $path"))
-      val total = scoped.count()
-      val n = math.max(1, math.ceil(total.toDouble / targetRowsPerFile).toInt)
-      val bits = graft.functions.ZOrder.defaultBits(zorderBy.length)
-      scoped.withColumn("__zv", graft.functions.ZOrder.interleaveN(
-          zorderBy.map(c => col(s"`$c`")), bits))
-        .repartitionByRange(n, (m.partitionCols :+ "__zv").map(col): _*)
-        .drop("__zv")
-    } else if (m.statsCols.nonEmpty) {
-      val total = scoped.count()
-      val n = math.max(1, math.ceil(total.toDouble / targetRowsPerFile).toInt)
-      scoped.repartitionByRange(n, (m.partitionCols ++ m.statsCols).map(col): _*)
-    } else graft.operators.Maintenance.sizedRepartition(
-      scoped, m.partitionCols, targetRowsPerFile))
-      .localCheckpoint(true)
-    commitRewrite(spark, path, v, m, touched, sized)
+    val touched = filesInPartitions(spark, m, predicate).getOrElse(sys.error(
+      s"compactWhere: a partition directory of $path does not parse — " +
+        "the predicate cannot be evaluated safely"))
+    if (touched.isEmpty) return v
+    val sized = compactLayout(path, m, readRels(spark, path, m, touched),
+      targetRowsPerFile, zorderBy)
+    landChange(spark, path, m, Rewritten(touched), Some(sized))(refuse(path))
   }
 
   /** ROLL BACK the table to a prior version's state — Delta's RESTORE:

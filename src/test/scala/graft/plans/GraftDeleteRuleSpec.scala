@@ -100,7 +100,7 @@ class GraftDeleteRuleSpec extends SparkSpec {
     } finally s.sql("DROP TABLE IF EXISTS del_all"): Unit
   }
 
-  test("spark.graft.delete.mode=vectorized routes SQL DELETE through deletion vectors") {
+  test("spark.graft.dml.mode=mor routes SQL DELETE through deletion vectors") {
     val s = extSpark
     import s.implicits._
     val path = Files.createTempDirectory("sqldelv").toString + "/t"
@@ -108,7 +108,7 @@ class GraftDeleteRuleSpec extends SparkSpec {
       .repartitionByRange(10, col("id"))
     ManifestTable.overwrite(s, path, df, statsCols = Seq("id"))
     s.sql(s"CREATE TABLE del_vec USING graft OPTIONS (path '$path')")
-    s.conf.set("spark.graft.delete.mode", "vectorized")
+    s.conf.set(ManifestTable.DmlModeKey, "mor")
     try {
       val before = filesOf(path, 1L)
       s.sql("DELETE FROM del_vec WHERE id % 100 = 7")
@@ -118,11 +118,11 @@ class GraftDeleteRuleSpec extends SparkSpec {
         .as[Long].head() === 0L)
       // ...but NO data file was rewritten — merge-on-read kept all ten
       assert(filesOf(path, 2L) === before,
-        "vectorized DELETE must not rewrite data files")
+        "merge-on-read DELETE must not rewrite data files")
       // prior version reads the deleted rows (time travel unaffected)
       assert(ManifestTable.readVersion(s, path, 1L).count() === 1000L)
     } finally {
-      s.conf.unset("spark.graft.delete.mode")
+      s.conf.unset(ManifestTable.DmlModeKey)
       s.sql("DROP TABLE IF EXISTS del_vec"): Unit
     }
   }

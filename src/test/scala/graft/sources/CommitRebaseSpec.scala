@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.functions.{col, lit}
 import java.nio.file.Files
 
 /** Deterministic commit races. A one-shot hooked [[CommitStore]] lands an
@@ -13,7 +14,10 @@ import java.nio.file.Files
   * disjoint keys (both land), an append sharing a merge key (copy-on-write
   * and merge-on-read refuse, equality deletes land both), and an ANALYZE
   * that declares a new stats column (the declaration must survive the
-  * merge's commit). The remaining cases drive every other retrying write
+  * merge's commit). The row-level changes that cannot rebase
+  * (deleteVectorized, MOR and COW update, COW delete) and fastForward each
+  * refuse one lost race with nothing committed and no sidecar or moved
+  * file left behind. The remaining cases drive every other retrying write
   * through one lost race against an appender; check that publish and
   * cherry-pick land their files with stats for a column main declared
   * after the stage or fork; and race append, overwritePartitions and
@@ -72,6 +76,16 @@ class CommitRebaseSpec extends SparkSpec {
     ManifestTable.readManifest(spark, path,
       ManifestTable.currentVersion(spark, path).get)
 
+  /** Entries under the table's `_dv/` directory. */
+  private def dvSidecars(path: String): Long = {
+    val dv = java.nio.file.Paths.get(path, "_dv")
+    if (!Files.exists(dv)) 0L
+    else {
+      val left = Files.list(dv)
+      try left.count() finally left.close()
+    }
+  }
+
   private def append(path: String, rs: Seq[R]): Unit =
     ManifestTable.append(spark, path, rs.toDF("id", "v", "n", "part")): Unit
 
@@ -112,11 +126,7 @@ class CommitRebaseSpec extends SparkSpec {
         assert(ManifestTable.currentVersion(spark, path).contains(v0 + 1))
         assert(rows(path) === (base ++ sharing).sorted)
         // the refused merge-on-read attempt leaves no DV sidecar behind
-        val dv = java.nio.file.Paths.get(path, "_dv")
-        if (Files.exists(dv)) {
-          val left = Files.list(dv)
-          try assert(left.count() === 0L) finally left.close()
-        }
+        assert(dvSidecars(path) === 0L)
       }
     }
 
@@ -147,6 +157,52 @@ class CommitRebaseSpec extends SparkSpec {
       assert(head(path).partitionCols === Seq("n"))
       assert(rows(path) === base)
     }
+  }
+
+  /** Row-level changes that derive from exactly the snapshot they read:
+    * each refuses a lost race to an appender. */
+  private val refusing: Seq[(String, String => Unit)] = Seq(
+    ("deleteVectorized", path =>
+      ManifestTable.deleteVectorized(spark, path, col("id") === 3L): Unit),
+    ("MOR update", path => withMode("mor")(
+      ManifestTable.update(spark, path, col("id") === 3L, Seq("v" -> lit("u3")))): Unit),
+    ("COW update", path =>
+      ManifestTable.update(spark, path, col("id") === 3L, Seq("v" -> lit("u3"))): Unit),
+    ("COW delete", path =>
+      ManifestTable.delete(spark, path, col("id") === 3L): Unit))
+
+  for ((op, change) <- refusing) {
+    test(s"$op refuses a lost race: nothing committed, no DV sidecar left") {
+      val path = table(op.replace(' ', '_'))
+      val v0 = ManifestTable.currentVersion(spark, path).get
+      intercept[java.util.ConcurrentModificationException] {
+        racing(append(path, disjoint))(change(path))
+      }
+      assert(ManifestTable.currentVersion(spark, path).contains(v0 + 1))
+      assert(rows(path) === (base ++ disjoint).sorted)
+      assert(dvSidecars(path) === 0L)
+    }
+  }
+
+  test("fastForward refuses a lost race, undoes its moves and leaves the branch readable") {
+    val path = table("ff")
+    ManifestTable.createBranch(spark, path, "exp")
+    val bp = ManifestTable.branchPath(path, "exp")
+    val branched = Seq((70L, "b70", 700, 2))
+    append(bp, branched)
+    // a DV sidecar written on the branch moves with the publish too
+    ManifestTable.deleteVectorized(spark, bp, col("id") === 5L)
+    val v0 = ManifestTable.currentVersion(spark, path).get
+    val e = intercept[java.util.ConcurrentModificationException] {
+      racing(append(path, disjoint))(ManifestTable.fastForward(spark, path, "exp"))
+    }
+    assert(e.getMessage.contains("the branch is intact") &&
+      e.getMessage.contains(s"version ${v0 + 1} of $path was committed concurrently"),
+      e.getMessage)
+    assert(ManifestTable.currentVersion(spark, path).contains(v0 + 1))
+    assert(rows(path) === (base ++ disjoint).sorted)
+    assert(ManifestTable.branches(spark, path).map(_._1) === Seq("exp"))
+    assert(rows(bp) === (base ++ branched).filterNot(_._1 == 5L).sorted)
   }
 
   test("append rebases once past an interloper append") {

@@ -195,6 +195,31 @@ class ManifestTableSpec extends SparkSpec {
       ManifestTable.read(spark, flat).agg(sum("v")).head.getLong(0))
   }
 
+  test("compactWhere re-clusters a partition on the declared sort order, like compact") {
+    val path = tmpTable()
+    // k is uncorrelated with the stats column id, so only ranging on the
+    // declared sort order makes the compacted files tile k
+    def batch(lo: Long) = spark.range(lo, lo + 400)
+      .select(col("id"), ((col("id") * 7919) % 1000).as("k"), (col("id") % 2).as("p"))
+      .repartition(4)
+    ManifestTable.overwrite(spark, path, batch(0), partitionCols = Seq("p"),
+      statsCols = Seq("id"))
+    ManifestTable.append(spark, path, batch(400))
+    ManifestTable.setProperties(spark, path, Map(ManifestTable.SortOrderProp -> "k"))
+    val sumBefore = ManifestTable.read(spark, path).agg(sum("k")).head.getLong(0)
+    val v = ManifestTable.compactWhere(spark, path, col("p") === 0L, 100L)
+    val compacted = filesOf(path, v).filter(_.startsWith("p=0/"))
+    assert(compacted.size >= 3, s"partition p=0 should compact into several files: $compacted")
+    val ranges = compacted.map { rel =>
+      val r = spark.read.parquet(java.nio.file.Paths.get(path, "data", rel).toString)
+        .agg(min("k"), max("k")).head
+      (r.getLong(0), r.getLong(1))
+    }.sorted
+    ranges.zip(ranges.tail).foreach { case ((_, hi), (lo, _)) =>
+      assert(hi < lo, s"compacted files overlap on the sort column: $ranges") }
+    assert(ManifestTable.read(spark, path).agg(sum("k")).head.getLong(0) === sumBefore)
+  }
+
   test("graft.autoCompact: trickle appends self-pack; disabled tables accrete") {
     def trickle(path: String): Unit =
       (0 until 4).foreach(i => ManifestTable.append(spark, path,

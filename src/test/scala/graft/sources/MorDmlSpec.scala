@@ -317,6 +317,19 @@ class MorDmlSpec extends SparkSpec {
       assert(e.getMessage.contains(ManifestTable.DmlModeKey) && e.getMessage.contains("mro"))
       intercept[IllegalArgumentException](
         ManifestTable.update(spark, path, col("id") === 2L, Seq("v" -> lit("u"))))
+      // SQL DELETE reads the same knob
+      val s = MorDmlSpec.extSpark
+      s.sql("DROP TABLE IF EXISTS mor_mode_t")
+      s.sql(s"CREATE TABLE mor_mode_t USING graft OPTIONS (path '$path')")
+      s.conf.set(ManifestTable.DmlModeKey, "mro")
+      try {
+        val d = intercept[IllegalArgumentException](
+          s.sql("DELETE FROM mor_mode_t WHERE id = 2"))
+        assert(d.getMessage.contains(ManifestTable.DmlModeKey) && d.getMessage.contains("mro"))
+      } finally {
+        s.conf.unset(ManifestTable.DmlModeKey)
+        s.sql("DROP TABLE IF EXISTS mor_mode_t"): Unit
+      }
       assert(ManifestTable.currentVersion(spark, path) === before, "nothing committed")
       spark.conf.set(ManifestTable.DmlModeKey, " MoR ")
       merge()
