@@ -15,7 +15,7 @@ import org.apache.spark.sql.graft.bridge
   * own dynamic partition pruning / runtime filters never reach): when a
   * graft scan joins a build side small enough to broadcast, collect the
   * build side's distinct join keys AT PLAN TIME (capped — the
-  * `morMergeCandidates` discipline) and seed the graft side with the
+  * `mergeCandidates` discipline) and seed the graft side with the
   * implied key predicate. The predicate pushes into the scan through the
   * standard DSv1 filter surface, where zone maps prune whole FILES
   * (per-point zone test), Blooms prune by membership, and parquet

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType, MapType, Metadata, ShortType, StringType, StructField, StructType}
+import org.apache.spark.sql.graft.bridge.releaseCheckpoint
 import java.nio.charset.StandardCharsets
 
 /** A minimal snapshot-isolated table format over parquet — the manifest
@@ -2233,7 +2234,8 @@ object ManifestTable {
 
   private def rawScan(spark: SparkSession, path: String, m: Manifest,
                       rels: Seq[String], withMeta: Boolean = false): DataFrame = {
-    val metaCols = if (withMeta) Seq("__dv_fname", "__dv_pos") else Nil
+    val meta = if (withMeta) Seq(StructField("__dv_fname", StringType),
+      StructField("__dv_pos", LongType)) else Nil
     // external (shallow-cloned) refs scan in their OWN group anchored at
     // the source's data dir — partition-dir inference needs every file of
     // a load under its basePath
@@ -2271,8 +2273,9 @@ object ManifestTable {
             coalesce(col(s"`${f.name}`"), expr(sql).cast(f.dataType)).as(f.name)
           case None => col(s"`${f.name}`")
         }
-      } ++ metaCols.map(n => col(s"`$n`"))): _*)
-    }.reduce(_ unionByName _)
+      } ++ meta.map(f => col(s"`${f.name}`"))): _*)
+    }.reduceOption(_ unionByName _).getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], StructType(m.schema.fields ++ meta)))
   }
 
   /** Deleted-row count above which the DV anti-join is left to the
@@ -2314,55 +2317,51 @@ object ManifestTable {
         case (Some(a), Some(b)) => a.unionByName(b)
         case (Some(a), None) => a
         case (None, Some(b)) => b
-        case _ => sys.error("unreachable: rels is non-empty")
+        case _ => rawScan(spark, path, m, Nil) // no rels: the empty frame
       }
     }
+    val live = liveEqdels(m, rels)
     toLogical(
-      if (rels.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
+      if (live.isEmpty) plainOrDv(rels)
       else {
-        val live = liveEqdels(m, rels)
-        if (live.isEmpty) plainOrDv(rels)
-        else {
-          // PER-ENTRY-SET routing: a file's AFFECTING entries are the
-          // seq-ordered suffix with seq > fseq(file), so at-risk rels
-          // group by their suffix START — a file appended between entry 1
-          // and entry 2 anti-joins ONLY entry 2's keys, never the full
-          // union (the `__eq_seq > __fseq` condition always scoped it
-          // LOGICALLY; the grouping shrinks the joined key side and each
-          // arm's scan too). Files after the newest entry (suffix empty —
-          // at a CDC cadence quickly the bulk of the fleet) keep the
-          // plain/DV plan. Arm count is capped: past [[EqdelMaxReadArms]]
-          // distinct suffixes, adjacent groups merge DOWNWARD (toward the
-          // superset suffix — sound, the seq condition still scopes), so
-          // a long-unpurged entry chain can't explode the plan.
-          val bySeq = live.sortBy(e => (e.seq, e.name)).map(_.seq)
-          def suffixOf(fseq: Long): Int = bySeq.indexWhere(_ > fseq)
-          val grouped = rels.groupBy(r => suffixOf(m.fseq.getOrElse(r, 0L)))
-          val clean = grouped.getOrElse(-1, Nil)
-          val idx = grouped.keys.filter(_ >= 0).toSeq.sorted
-          val arms: Seq[Seq[String]] =
-            if (idx.size <= EqdelMaxReadArms) idx.map(grouped)
-            else {
-              // merge the TAIL suffixes into the last arm (they share the
-              // fewest entries; merging costs them extra logically-inert
-              // key rows, never extra files)
-              val (own, merged) = idx.splitAt(EqdelMaxReadArms - 1)
-              own.map(grouped) :+ merged.flatMap(grouped)
-            }
-          // each arm scans WITH metadata — the key anti-join needs each
-          // row's file (for its sequence), and the DV anti-join rides the
-          // same columns; row order: DV positions first (a position
-          // references the raw row index), then keys. applyEqDeletes
-          // derives each arm's entry suffix from the arm's own min fseq.
-          val eqd = arms.map { rs =>
-            val scan = rawScan(spark, path, m, rs, withMeta = true)
-            applyEqDeletes(spark, path, m,
-              applyDvAnti(spark, path, m, scan, rs), rs)
-              .select(m.schema.fieldNames.toSeq.map(n => col(s"`$n`")): _*)
-          }.reduce(_ unionByName _)
-          if (clean.isEmpty) eqd else eqd.unionByName(plainOrDv(clean))
-        }
+        // PER-ENTRY-SET routing: a file's AFFECTING entries are the
+        // seq-ordered suffix with seq > fseq(file), so at-risk rels
+        // group by their suffix START — a file appended between entry 1
+        // and entry 2 anti-joins ONLY entry 2's keys, never the full
+        // union (the `__eq_seq > __fseq` condition always scoped it
+        // LOGICALLY; the grouping shrinks the joined key side and each
+        // arm's scan too). Files after the newest entry (suffix empty —
+        // at a CDC cadence quickly the bulk of the fleet) keep the
+        // plain/DV plan. Arm count is capped: past [[EqdelMaxReadArms]]
+        // distinct suffixes, adjacent groups merge DOWNWARD (toward the
+        // superset suffix — sound, the seq condition still scopes), so
+        // a long-unpurged entry chain can't explode the plan.
+        val bySeq = live.sortBy(e => (e.seq, e.name)).map(_.seq)
+        def suffixOf(fseq: Long): Int = bySeq.indexWhere(_ > fseq)
+        val grouped = rels.groupBy(r => suffixOf(m.fseq.getOrElse(r, 0L)))
+        val clean = grouped.getOrElse(-1, Nil)
+        val idx = grouped.keys.filter(_ >= 0).toSeq.sorted
+        val arms: Seq[Seq[String]] =
+          if (idx.size <= EqdelMaxReadArms) idx.map(grouped)
+          else {
+            // merge the TAIL suffixes into the last arm (they share the
+            // fewest entries; merging costs them extra logically-inert
+            // key rows, never extra files)
+            val (own, merged) = idx.splitAt(EqdelMaxReadArms - 1)
+            own.map(grouped) :+ merged.flatMap(grouped)
+          }
+        // each arm scans WITH metadata — the key anti-join needs each
+        // row's file (for its sequence), and the DV anti-join rides the
+        // same columns; row order: DV positions first (a position
+        // references the raw row index), then keys. applyEqDeletes
+        // derives each arm's entry suffix from the arm's own min fseq.
+        val eqd = arms.map { rs =>
+          val scan = rawScan(spark, path, m, rs, withMeta = true)
+          applyEqDeletes(spark, path, m,
+            applyDvAnti(spark, path, m, scan, rs), rs)
+            .select(m.schema.fieldNames.toSeq.map(n => col(s"`$n`")): _*)
+        }.reduce(_ unionByName _)
+        if (clean.isEmpty) eqd else eqd.unionByName(plainOrDv(clean))
       }, m.colmap)
   }
 
@@ -2462,7 +2461,7 @@ object ManifestTable {
     val p2l = from.colmap.map(_.swap)
     def lg(ph: String) = p2l.getOrElse(ph, ph)
     var survivors = attachFseq(spark, to,
-      liveRowsWithPos(spark, path, from, atRisk), atRisk)
+      touchedRows(spark, path, from, atRisk, Left(lit(true)), masked = true), atRisk)
     val parts = added.groupBy(_.keyCols).toSeq
       .sortBy(_._1.mkString(",")).map { case (kc, entries) =>
         val keys0 = entries.map(e => eqdelKeys(spark, path, to, e)
@@ -2772,24 +2771,52 @@ object ManifestTable {
       }
     }
 
-  /** DV-applied scan of `rels` that KEEPS the (`__dv_fname`, `__dv_pos`)
-    * metadata columns, logical-named — the merge-on-read write paths need
-    * each LIVE row's position to record its deletion. Same broadcast
-    * discipline as [[readRels]]. */
-  private def liveRowsWithPos(spark: SparkSession, path: String, m: Manifest,
-                              rels: Seq[String]): DataFrame = {
-    if (rels.isEmpty) // an all-pruned key cut: zero candidates, zero rows
-      return toLogical(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        StructType(m.schema.fields ++ Array(
-          StructField("__dv_fname", StringType),
-          StructField("__dv_pos", LongType)))), m.colmap)
-    // DV positions first (they reference raw row indexes), then equality
-    // deletes (a MOR write on an eq-deleted table must not resurrect) —
-    // the same order readRels applies
+  /** The rows of `rels` a row-level change touches — the one scan every
+    * DML encoding finds its rows through: the raw metadata scan, logical-
+    * named, with each row's file name and position (`__dv_fname`,
+    * `__dv_pos`). `hit` is a predicate (NULL does not match) or a key set
+    * whose columns are `__mk_<key>`, matched NULL-SAFE (`<=>`) like every
+    * key cut. The raw scan can match rows an earlier DV or eq-delete
+    * already removed; a rewrite re-reads its files through [[readRels]],
+    * and [[writeDvEntries]] unions prior positions, so both absorb them.
+    * `masked` applies the DV-then-eq-delete anti-joins first, for callers
+    * that record or rewrite only live rows. */
+  private def touchedRows(spark: SparkSession, path: String, m: Manifest,
+                          rels: Seq[String], hit: Either[Column, DataFrame],
+                          masked: Boolean = false): DataFrame = {
     val scan = rawScan(spark, path, m, rels, withMeta = true)
-    toLogical(applyEqDeletes(spark, path, m,
-      applyDvAnti(spark, path, m, scan, rels), rels), m.colmap)
+    // DV positions first (they reference raw row indexes), then equality
+    // deletes — the order readRels applies
+    hitRows(toLogical(
+      if (!masked) scan
+      else applyEqDeletes(spark, path, m, applyDvAnti(spark, path, m, scan, rels), rels),
+      m.colmap), hit, touched = true)
+  }
+
+  /** The rows of `rows` that `hit` ([[touchedRows]]) touches, or with
+    * `touched = false` the rows it leaves. */
+  private def hitRows(rows: DataFrame, hit: Either[Column, DataFrame],
+                      touched: Boolean): DataFrame = hit match {
+    case Left(p) => rows.filter(if (touched) p else !coalesce(p, lit(false)))
+    case Right(ks) =>
+      rows.join(ks, ks.columns.toSeq.map(c => rows(c.stripPrefix("__mk_")) <=> ks(c))
+        .reduce(_ && _), if (touched) "left_semi" else "left_anti")
+  }
+
+  /** The files of `rels` holding a row `hit` touches: the distinct file
+    * names of [[touchedRows]], mapped back to rels. Names are table-unique
+    * (commit-prefixed); on a converted table whose names collide across
+    * directories every same-named file counts, a superset a rewrite
+    * absorbs. */
+  private def hitFiles(spark: SparkSession, path: String, m: Manifest,
+                       rels: Seq[String], hit: Either[Column, DataFrame]): Seq[String] = {
+    // de-duplicated per task: a shuffle for a global distinct would cost a
+    // job, and the driver holds at most one name per file per task
+    val names = touchedRows(spark, path, m, rels, hit).select("__dv_fname").rdd
+      .mapPartitions(_.map(_.getString(0)).toSet.iterator).collect().toSet
+    val byName = rels.map(fileNameOf).toSet
+    names.foreach(n => require(byName(n), s"matched file $n not among scanned files"))
+    rels.filter(rel => names(fileNameOf(rel)))
   }
 
   /** Write one DV sidecar holding `fresh` (fname, pos) positions merged
@@ -2815,12 +2842,10 @@ object ManifestTable {
       .agg(count_distinct(col("pos")).as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     if (freshCounts.isEmpty) return (None, Map.empty)
-    val fnames = freshCounts.keySet
     val fnameToRel = m.files.map(rel => fileNameOf(rel) -> rel).toMap
     require(fnameToRel.size == m.files.size,
       "duplicate data file names — commit-prefixed names must be table-unique")
-    val hitRels = m.files.filter(rel => fnames.contains(fileNameOf(rel)))
-    val priorRels = hitRels.filter(m.dvs.contains)
+    val priorRels = freshCounts.keys.toSeq.map(fnameToRel).filter(m.dvs.contains)
     val merged = (if (priorRels.isEmpty) fresh
                   else fresh.unionAll(dvPositions(spark, path, m, priorRels)))
       .distinct()
@@ -5803,11 +5828,12 @@ object ManifestTable {
     * validated BEFORE any data is written — the contract that makes a
     * backfill idempotent and stops "replaced January, inserted February"
     * from corrupting silently. Constraints gate the batch and identity
-    * columns fill, like every write. Touch cost is predicate-bounded:
-    * untouched files carry byte-identical with their stats (zone maps
-    * select the touched set, so a partition-aligned predicate never reads
-    * the rest of a 100 TB table). Losing the version race throws —
-    * re-run against the winner. */
+    * columns fill, like every write. Untouched files carry byte-identical
+    * with their stats. A predicate over partition columns alone decides
+    * the touched files from directory values and reads no data (the
+    * backfill shape); any other predicate scans every file for matching
+    * rows ([[hitFiles]]) and rewrites only the files holding one. Losing
+    * the version race throws — re-run against the winner. */
   def overwriteWhere(spark: SparkSession, path: String, df: DataFrame,
                      predicate: Column): Long = {
     val (v, m) = readHead(spark, path)
@@ -5831,12 +5857,11 @@ object ManifestTable {
     // VALUES alone (no scan — the 100 TB backfill shape); anything else
     // scans for matching files
     val touched = matchingPartitionFiles(spark, m, predicate)
-      .getOrElse(touchedFiles(spark, path, m.files, m, predicate))
+      .getOrElse(hitFiles(spark, path, m, m.files, Left(predicate)))
     // surviving rows of partially-matching files + the batch, one rewrite
     val kept =
       if (touched.isEmpty) batch
-      else readRels(spark, path, m, touched)
-        .filter(!coalesce(predicate, lit(false)))
+      else hitRows(readRels(spark, path, m, touched), Left(predicate), touched = false)
         .unionByName(batch)
     landChange(spark, path, m, Rewritten(touched), Some(clusterForWrite(kept, m)),
       op = Some("overwrite"))(refuse(path))
@@ -5867,7 +5892,7 @@ object ManifestTable {
     * counts alone (statless imports gain manifest-answered COUNT(*)).
     *
     * Cost shape: one column-pruned scan of exactly the named columns
-    * (plus the grouping on `input_file_name`) evaluating the same
+    * (plus a per-file grouping) evaluating the same
     * aggregates a write job computes for its new files ([[collectStats]])
     * — never a full-width read. The stats merge rides the driver bounded
     * by the manifest; commit re-spills to the sidecar past the
@@ -5925,40 +5950,44 @@ object ManifestTable {
     * mirror [[graft.operators.MergeUpsert]] (reference `etl.py`'s
     * dedup-insert, §7.4.4) with a transactional commit.
     *
-    * The change is computed once — the touched keys are the batch's keys
-    * ∪ `deleteKeys` — and encoded per [[DmlModeKey]]: copy-on-write
-    * rewrites the partitions holding a touched key ([[mergeCow]]),
-    * merge-on-read records their old copies as deletion vectors
-    * ([[mergeMor]]), and equality deletes record the keys themselves.
-    * All three land through [[landChange]] with the batch as the added
-    * rows.
+    * The touched keys are the batch's keys ∪ `deleteKeys`, matched
+    * NULL-SAFE: NOT MATCHED BY SOURCE legs update or delete null-keyed
+    * rows. The change is encoded per [[DmlModeKey]], and all three
+    * encodings land through [[landChange]] with the batch as the added
+    * rows. Copy-on-write and merge-on-read cut the scan to the files that
+    * may hold a touched key ([[mergeCandidates]]) and find the touched
+    * rows there ([[touchedRows]]). Copy-on-write then rewrites exactly the
+    * files holding one, without the touched keys (Delta's MERGE, Armbrust
+    * et al., VLDB 2020); every other file carries byte-identical, on any
+    * partition layout. Merge-on-read records the touched rows' live
+    * positions as deletion vectors and rewrites nothing.
     *
     * EQUALITY DELETES (`eq` — Iceberg v2's eq-deletes / the Flink CDC
     * writer re-derived) upsert and delete WITHOUT READING THE TABLE AT
     * ALL. The touched keys land as a key sidecar (`_eqd/<name>`), the
     * manifest records (keyCols, seq=commit version, count), and every
     * reader anti-joins files SEQUENCED BEFORE the delete against the key
-    * set — total write cost O(batch), where even MOR pays a (pruned)
-    * key-cut scan per merge. The trade: at-risk reads carry the anti-join
-    * until OPTIMIZE … PURGE materializes (post-entry files keep the plain
-    * plan — [[readRels]] routes per rel), metadata fast-counts decline
-    * until [[foldEqdelCounts]] (or ANALYZE) pays the matched-row count
-    * once, and CDF across the commit refuses unless
+    * set — total write cost O(batch), where the other encodings pay a
+    * (pruned) key-cut scan per merge. The trade: at-risk reads carry the
+    * anti-join until OPTIMIZE … PURGE materializes (post-entry files keep
+    * the plain plan — [[readRels]] routes per rel), metadata fast-counts
+    * decline until [[foldEqdelCounts]] (or ANALYZE) pays the matched-row
+    * count once, and CDF across the commit refuses unless
     * `spark.graft.cdf.eqdels=compute` opts into the keyed-scan delta.
     * CLONE, branch and FAST FORWARD renumber sequences across version
-    * domains, so the zero-copy lifecycle never demands a PURGE. Its
-    * rebase is UNCONDITIONAL except definition changes ([[mergeRebase]]):
-    * appends, rewrites and other merges all commute — the retry
-    * re-sequences the entry at the new head, which IS the CDC
-    * linearization by commit order. A concurrent constraint add re-gates
-    * the batch on retry.
+    * domains, so the zero-copy lifecycle never demands a PURGE.
     *
-    * Concurrency: a lost race rebases only past a winner that provably
-    * cannot interact with this merge (each encoding states its rule);
-    * anything else throws `ConcurrentModificationException` and the
-    * caller must re-run the merge against the winner's snapshot. Orphaned
-    * data files from the losing attempt are unreferenced and swept by
-    * [[vacuum]].
+    * Concurrency: every encoding refuses a winner that changed the table
+    * definition and re-gates the batch on a constraint added mid-merge
+    * ([[mergeRebase]]). An eq merge rebases past anything else — the
+    * retry re-sequences the entry at the new head, which IS the CDC
+    * linearization by commit order. Copy-on-write and merge-on-read
+    * rebase past a winner that removed no candidate file and appended no
+    * row sharing a touched key; [[landChange]] also refuses one that
+    * re-vectored a file they rewrite or vector. A refused merge throws
+    * `ConcurrentModificationException` and the caller must re-run it
+    * against the winner's snapshot. Orphaned data files from the losing
+    * attempt are unreferenced and swept by [[vacuum]].
     */
   def merge(spark: SparkSession, path: String, updates: DataFrame,
             keys: Seq[String], partitionCols: Seq[String] = Nil,
@@ -5984,108 +6013,51 @@ object ManifestTable {
         // the batch in table column order. Merge-on-read and equality
         // deletes consume it twice (the key cut or key sidecar, and the
         // data write, which lands inside the directory the key cut scans),
-        // so they materialize it once
+        // so they materialize it once. Copy-on-write reads it unmaterialized:
+        // a checkpoint would add a job to every copy-on-write merge
         val ordered = shaped.select(
           logicalSchema(m).fieldNames.toSeq.map(n => col(s"`$n`")): _*)
         val batch = if (mode == "cow") ordered else ordered.localCheckpoint(true)
         // every key this merge removes from the current snapshot: keys being
         // replaced by an update row, plus keys deleted outright (MERGE's
         // WHEN MATCHED THEN DELETE) — a deleted key races with a concurrent
-        // append exactly like an updated one does
+        // append exactly like an updated one does. Duplicates are harmless:
+        // the key set only semi- and anti-joins, and eq writes it distinct
         val touchKeys = deleteKeys.foldLeft(batch.select(keys.map(col): _*))(
           (u, dk) => u.unionByName(dk.select(keys.map(col): _*)))
-        mode match {
-          case "mor" => mergeMor(spark, path, m, batch, keys, touchKeys, txn)
-          case "eq" =>
-            // an eq-merge reads nothing: its rebase refuses only a
-            // definition change
-            val phKeys = keys.map(k => m.colmap.getOrElse(k, k))
-            phKeys.foreach(k => m.schema.find(_.name == k)
-              .getOrElse(sys.error(s"merge key '$k' not in schema of $path")))
-            landChange(spark, path, m, Keys(touchKeys.distinct().toDF(phKeys: _*)),
-              Option.when(!batch.isEmpty)(clusterForWrite(batch, m)),
-              op = Some("merge"), opCols = keys, txn = txn,
-              identityWm = false)(mergeRebase(path, m, batch, _, _))
-          case _ => mergeCow(spark, path, m, batch, keys, touchKeys, txn)
-        }
-    }
-  }
-
-  /** Copy-on-write MERGE: every partition touched by the batch — including
-    * partitions holding the OLD copy of a moved or deleted key — rewrites
-    * without the touched keys and with the batch; a partition drained to
-    * zero rows just drops out of the manifest. An unpartitioned table
-    * rewrites whole, so any concurrent commit refuses it. A partitioned
-    * rewrite rebases past a pure append (no file this merge read was
-    * removed) that adds nothing inside the rewritten partitions and no
-    * row sharing a merge key. */
-  private def mergeCow(spark: SparkSession, path: String, m: Manifest,
-                       batch: DataFrame, keys: Seq[String],
-                       touchKeys: DataFrame, txn: Option[(String, Long)]): Long = {
-    val existing = readVersion(spark, path, m.version)
-    // NULL-SAFE key cut: rows reached through a MATCHED clause always
-    // carry non-null keys (ON equality can't match null), but MERGE's
-    // NOT MATCHED BY SOURCE clauses legitimately update/delete
-    // null-keyed target rows — a plain equality anti-join would keep
-    // the old null-keyed copy alongside its replacement (duplicate) or
-    // fail to delete it. <=> matches the project's composite-key dedup
-    // convention (Core.scala J5b).
-    def cutByKeys(left: DataFrame, rightKeys: DataFrame, joinType: String,
-                  bcastRight: Boolean): DataFrame = {
-      val rk0 = rightKeys.toDF(rightKeys.columns.map("__mk_" + _).toIndexedSeq: _*)
-      val rk = if (bcastRight) broadcast(rk0) else rk0
-      left.join(rk,
-        keys.map(k => left(k) <=> rk("__mk_" + k)).reduce(_ && _), joinType)
-    }
-    if (m.partitionCols.isEmpty) {
-      val kept = cutByKeys(existing, touchKeys, "left_anti", bcastRight = false)
-      val next = kept.unionByName(batch).localCheckpoint(true)
-      // full-table rewrite: ANY concurrent commit invalidates the
-      // snapshot this merge rewrote — no rebase path exists
-      return landChange(spark, path, m, Rewritten(m.files), Some(next),
-        op = Some("merge"), opCols = keys, txn = txn, identityWm = false)(refuse(path))
-    }
-    requireUniformLayout(m, "merge into a partitioned table")
-    val pCols = m.partitionCols.map(col)
-    // partitions named by the batch ∪ partitions holding old copies of
-    // the updated keys; bounded by the batch size, safe to collect
-    val affected = batch.select(pCols: _*)
-      .union(cutByKeys(existing, touchKeys.distinct(), "left_semi",
-          bcastRight = true)
-        .select(pCols: _*))
-      .distinct().collect().map(_.toSeq)
-    val affectedDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(affected.map(Row.fromSeq).toSeq, 1),
-      existing.select(pCols: _*).schema)
-    val kept = cutByKeys(
-      existing.join(broadcast(affectedDf), m.partitionCols),
-      touchKeys, "left_anti", bcastRight = false)
-    val next = kept.unionByName(batch).localCheckpoint(true)
-    // every affected partition's old files leave (NOT just the dirs the
-    // new files land in — a drained partition writes no files)
-    val affectedDirs = affected.map(vals =>
-      m.partitionCols.zip(vals).map { case (c, value) =>
-        s"$c=${org.apache.spark.sql.graft.bridge.escapePathValue(value)}"
-      }.mkString("/")).toSet
-    landChange(spark, path, m,
-      Rewritten(m.files.filter(rel => affectedDirs.contains(dirOf(rel)))),
-      Some(clusterForWrite(next, m)), op = Some("merge"), opCols = keys,
-      txn = txn, identityWm = false) { (on, head) =>
-      // rebase is sound ONLY against a non-interacting delta
-      mergeRebase(path, m, batch, on, head)
-      val removed = on.files.toSet -- head.files.toSet
-      if (removed.nonEmpty)
-        mergeLost(path, s"rewrote ${removed.size} file(s) this merge read")
-      // a concurrent deleteVectorized changed file CONTENT without
-      // changing the file list — the rows this merge derived are
-      // stale exactly as if the file had been rewritten
-      if (head.dvs != on.dvs) mergeLost(path, "changed deletion vectors")
-      val fresh = head.files.filterNot(on.files.toSet)
-      if (fresh.exists(rel => affectedDirs.contains(dirOf(rel))))
-        mergeLost(path, "wrote into a partition this merge rewrites")
-      if (fresh.nonEmpty && holdsKeys(spark, path, head, fresh, keys,
-          touchKeys.distinct().toDF(keys.map("__mk_" + _): _*)))
-        mergeLost(path, "appended rows sharing this merge's keys")
+          .toDF(keys.map("__mk_" + _): _*)
+        val hit = Right(touchKeys)
+        lazy val candidates = mergeCandidates(spark, path, m, keys, touchKeys)
+        lazy val newRows = Option.when(!batch.isEmpty)(clusterForWrite(batch, m))
+        try {
+          val (removed, added) = mode match {
+            case "eq" =>
+              (Keys(touchKeys.distinct().toDF(keys.map(k => m.colmap.getOrElse(k, k)): _*)),
+                newRows)
+            case "mor" =>
+              (Positions(touchedRows(spark, path, m, candidates, hit, masked = true)), newRows)
+            case _ =>
+              val files = hitFiles(spark, path, m, candidates, hit)
+              (Rewritten(files), Some(clusterForWrite(
+                hitRows(readRels(spark, path, m, files), hit, touched = false)
+                  .unionByName(batch), m)))
+          }
+          landChange(spark, path, m, removed, added, op = Some("merge"),
+              opCols = keys, txn = txn, identityWm = false) { (on, head) =>
+            mergeRebase(path, m, batch, on, head)
+            // an eq merge read nothing. The others rebase only past a
+            // winner that cannot interact: a removed file OUTSIDE the
+            // candidate set was proven key-free (pruning layers only KEEP
+            // extra files), and appended rows must not carry a touched key
+            if (mode != "eq") {
+              if ((on.files.toSet -- head.files.toSet).exists(candidates.toSet))
+                mergeLost(path, "rewrote file(s) this merge read")
+              val fresh = head.files.filterNot(on.files.toSet)
+              if (fresh.nonEmpty && !touchedRows(spark, path, head, fresh, hit).isEmpty)
+                mergeLost(path, "appended rows sharing this merge's keys")
+            }
+          }
+        } finally if (mode != "cow") releaseCheckpoint(batch)
     }
   }
 
@@ -6109,105 +6081,41 @@ object ManifestTable {
       s"merge of $path lost to a concurrent commit that $what — " +
         "re-run against the new snapshot")
 
-  /** Does any row of `rels` carry a key of `touchKeys` (columns
-    * `__mk_<key>`)? NULL-SAFE (<=>) like the merge key cut itself: a
-    * concurrent append of null-keyed rows conflicts with a null-keyed
-    * tombstone exactly as a non-null key would. */
-  private def holdsKeys(spark: SparkSession, path: String, m: Manifest,
-                        rels: Seq[String], keys: Seq[String],
-                        touchKeys: DataFrame): Boolean = {
-    val rows = readRels(spark, path, m, rels)
-    !rows.join(broadcast(touchKeys),
-      keys.map(k => rows(k) <=> touchKeys("__mk_" + k)).reduce(_ && _),
-      "left_semi").isEmpty
-  }
-
-  /** Merge-on-read MERGE (`spark.graft.dml.mode=mor`): the old copies of
-    * every key the merge touches (updated OR deleted) become deletion-
-    * vector entries on their source files, and the batch appends as new
-    * files — write cost is batch-bounded, where copy-on-write rewrites
-    * every affected partition's full bytes (or, unpartitioned, the whole
-    * table). The daily-CDC-upsert shape at 100 TB is exactly this: a few
-    * million changed keys against billions of resident rows must not
-    * re-write the resident bytes. Same null-safe `<=>` key cut as the
-    * COW path (NOT MATCHED BY SOURCE legs may delete null-keyed rows);
-    * `op=merge`+keys gives CDF the four-type refinement; a lost version
-    * race rebases past a winner that cannot interact and otherwise
-    * throws with the sidecar cleaned up. */
-  private def mergeMor(spark: SparkSession, path: String, m: Manifest,
-                       batch: DataFrame, keys: Seq[String],
-                       touchKeys0: DataFrame, txn: Option[(String, Long)]): Long = {
-    val touchKeys = touchKeys0.distinct().toDF(keys.map("__mk_" + _): _*)
-    // every live row holding a touched key: its position is the deletion.
-    // The key set is the CDC delta — planner/AQE picks broadcast when it
-    // is small; the corpus side never shuffles more than the semi-join
-    // demands, and never re-writes. Zone maps + Blooms first cut the scan
-    // to the files that MAY hold a touched key ([[morMergeCandidates]]):
-    // at 100 TB the difference between scanning the fleet and scanning
-    // the working set.
-    val candidates = morMergeCandidates(spark, path, m, keys, touchKeys)
-    val candidateSet = candidates.toSet
-    val live = liveRowsWithPos(spark, path, m, candidates)
-    val matchedPos = live.join(touchKeys,
-        keys.map(k => live(k) <=> touchKeys("__mk_" + k)).reduce(_ && _),
-        "left_semi")
-      .select(col("__dv_fname").as("fname"), col("__dv_pos").as("pos"))
-      .localCheckpoint(true)
-    // rebase: appends COMMUTE with a MOR merge unless they carry the
-    // merge's keys — same discipline as the COW rebase, but the stakes
-    // differ (our DV entries reference the files we READ, so any change
-    // to those files' identity or DVs is a stale-read conflict; the
-    // landing step refuses a re-vectored one)
-    landChange(spark, path, m, Positions(matchedPos),
-      Option.when(!batch.isEmpty)(clusterForWrite(batch, m)),
-      op = Some("merge"), opCols = keys, txn = txn, identityWm = false) { (on, head) =>
-      mergeRebase(path, m, batch, on, head)
-      // a removed file OUTSIDE the candidate set was proven key-free
-      // (pruning layers only KEEP extra files) and none of our DV
-      // entries reference it — its rewrite commutes with this merge
-      if ((on.files.toSet -- head.files.toSet).exists(candidateSet))
-        mergeLost(path, "rewrote file(s) this merge read or deletion-vectored")
-      val fresh = head.files.filterNot(on.files.toSet)
-      if (fresh.nonEmpty && holdsKeys(spark, path, head, fresh, keys, touchKeys))
-        mergeLost(path, "appended rows sharing this merge's keys")
-    }
-  }
-
-  /** Candidate files for a MOR merge's key cut: [[keyCandidates]] on the
-    * LEADING merge key. Composite keys prune on the leading column alone
-    * — a (tenant, id) CDC key cuts to the touched tenants' files, a
-    * conservative SUPERSET of the true match set (the key cut's join
-    * decides exactly). An unknowable candidate set (NULL leading keys,
-    * uncollectable sets, statless columns) falls back to every file. */
-  private[sources] def morMergeCandidates(spark: SparkSession, path: String,
-                                          m: Manifest, keys: Seq[String],
-                                          touchKeys: DataFrame): Seq[String] = {
-    // composite keys: the leading column's DISTINCT values can sit under
-    // the cap even when the full key set does not
+  /** Candidate files for a merge's key cut: [[keyCandidates]] on the
+    * LEADING merge key of `touchKeys` (columns `__mk_<key>`). Composite
+    * keys prune on the leading column alone — a (tenant, id) CDC key cuts
+    * to the touched tenants' files, a conservative SUPERSET of the true
+    * match set (the key cut's join decides exactly). An unknowable
+    * candidate set (NULL leading keys, uncollectable sets, statless
+    * columns) falls back to every file. */
+  private[sources] def mergeCandidates(spark: SparkSession, path: String,
+                                       m: Manifest, keys: Seq[String],
+                                       touchKeys: DataFrame): Seq[String] =
     keyCandidates(spark, path, m, m.colmap.getOrElse(keys.head, keys.head),
-      if (keys.length == 1) touchKeys
-      else touchKeys.select(touchKeys.columns.head).distinct())
-      .getOrElse(m.files)
-  }
+      if (keys.length == 1) touchKeys.distinct() else touchKeys).getOrElse(m.files)
 
-  /** The key-candidate prune shared by the MOR key cut and eqdel
-    * exoneration: the files of `m` that may hold a value of `lead`'s
-    * first column, a key column stored as physical column `ph`. Zone maps
+  /** The key-candidate prune shared by the merge key cut and eqdel
+    * exoneration: the files of `m` that may hold a value of the leading
+    * column of `keys`, a key column stored as physical column `ph`.
+    * Composite keys prune on the leading column's DISTINCT values, which
+    * can sit under the cap even when the full key set does not. Zone maps
     * bound the files to the values' [min, max]; Blooms (for sets ≤ 4096,
     * where per-file probing stays cheap) drop files holding none of them.
     * Conservative — every layer only ever KEEPS extra files. None when
     * the set is unknowable: `ph` carries neither stats nor a Bloom, the
     * values (or `count`, when the caller knows it) pass
     * `spark.graft.mor.keyPruneMax` (default 100 000), or a value is NULL
-    * (null-safe equality matches rows zone maps cannot see). `lead` is
+    * (null-safe equality matches rows zone maps cannot see). `keys` is
     * only evaluated once those cheap checks pass. */
   private def keyCandidates(spark: SparkSession, path: String, m: Manifest,
-                            ph: String, lead: => DataFrame,
+                            ph: String, keys: => DataFrame,
                             count: Option[Long] = None): Option[Seq[String]] = {
     if (!m.statsCols.contains(ph) && !m.bloomCols.contains(ph)) return None
     val cap = spark.conf.getOption("spark.graft.mor.keyPruneMax")
       .map(_.toInt).getOrElse(100000)
     if (count.exists(_ > cap)) return None
+    val ks = keys
+    val lead = if (ks.columns.length == 1) ks else ks.select(ks.columns.head).distinct()
     val rows = lead.limit(cap + 1).collect()
     if (rows.length > cap || rows.exists(_.isNullAt(0))) return None
     val vals = rows.map(_.get(0)).toSeq
@@ -6236,9 +6144,10 @@ object ManifestTable {
     * SQL DELETE null semantics: rows where `predicate` is NULL are KEPT
     * (only predicate=true deletes).
     *
-    * Touched-file discovery is one column-pruned scan (`input_file_name`
-    * grouping over the predicate's columns); [[deleteRange]] skips even
-    * that for stats columns.
+    * A predicate over partition columns alone drops whole directories
+    * with no data read. Any other predicate finds the touched files with
+    * one scan of every file ([[hitFiles]]); [[deleteRange]] first cuts
+    * that scan to the zone-map candidates.
     */
   def delete(spark: SparkSession, path: String, predicate: Column): Long = {
     val (v, m) = readHead(spark, path)
@@ -6251,9 +6160,7 @@ object ManifestTable {
     matchingPartitionFiles(spark, m, predicate) match {
       case Some(matching) =>
         landChange(spark, path, m, Rewritten(matching), None)(refuse(path))
-      case None =>
-        rewriteWithout(spark, path, m,
-          touchedFiles(spark, path, m.files, m, predicate), predicate)
+      case None => rewriteMatching(spark, path, m, m.files, predicate)()
     }
   }
 
@@ -6285,23 +6192,12 @@ object ManifestTable {
     val (v, m) = readHead(spark, path)
     requireMutable(m, path, "DELETE")
     if (m.files.isEmpty) return v
-    // ONE meta scan finds the touched files AND their fresh deleted
+    // ONE unmasked scan finds the touched files AND their fresh deleted
     // positions: the touched set is exactly the distinct file names of
     // the matching rows, which [[writeDvEntries]] derives from the
-    // positions themselves. The checkpoint is deleted-rows-sized; the DV
-    // write and the fname probe read its blocks, not the table.
-    // rawScan materializes the metadata columns per layout group BEFORE
-    // the logical rename; the predicate then filters logical names.
-    // The raw scan may re-flag rows an earlier DV already removed; the
-    // union-distinct with the prior positions (inside writeDvEntries)
-    // absorbs them.
-    val fresh = toLogical(rawScan(spark, path, m, m.files, withMeta = true),
-      m.colmap)
-      .filter(coalesce(predicate, lit(false)))
-      .select(col("__dv_fname").as("fname"), col("__dv_pos").as("pos"))
-      .localCheckpoint()
-    try landChange(spark, path, m, Positions(fresh), None)(refuse(path))
-    finally org.apache.spark.sql.graft.bridge.releaseCheckpoint(fresh)
+    // positions themselves
+    landChange(spark, path, m, Positions(touchedRows(spark, path, m, m.files,
+      Left(predicate))), None)(refuse(path))
   }
   /** Materialize accumulated deletion vectors: rewrite every DV'd file
     * without its deleted rows and drop the DV entries — the maintenance
@@ -6376,7 +6272,7 @@ object ManifestTable {
   }
 
   /** The files entry `e`'s keys MAY touch, by the same conservative
-    * zone-map/Bloom discipline as the MOR key cut ([[morMergeCandidates]])
+    * zone-map/Bloom discipline as the merge key cut ([[mergeCandidates]])
     * — composite keys prune on the LEADING column's distinct values (a
     * deleted row matches on EVERY key column, so a file whose zone
     * map/Bloom excludes all lead values is key-disjoint regardless of
@@ -6386,14 +6282,10 @@ object ManifestTable {
     * which case callers must treat every file as a candidate. */
   private def eqdelCandidates(spark: SparkSession, path: String,
                               m: Manifest, e: EqDelete): Option[Seq[String]] = {
-    val ph = e.keyCols.head
     // single-key: the sidecar count is exact, short-circuit past the cap
-    // without opening it; composite: the LEAD's distinct count can sit
-    // under the cap even when the full key set does not
-    def keys0 = eqdelKeys(spark, path, m, e).select(col("__eqk_" + ph))
-    keyCandidates(spark, path, m, ph,
-      if (e.keyCols.length == 1) keys0 else keys0.distinct(),
-      if (e.keyCols.length == 1) Some(e.count) else None)
+    // without opening it
+    keyCandidates(spark, path, m, e.keyCols.head, eqdelKeys(spark, path, m, e),
+      Option.when(e.keyCols.length == 1)(e.count))
   }
 
   /** Commit history straight from the manifest chain — the DESCRIBE
@@ -6837,8 +6729,9 @@ object ManifestTable {
       m.files)
   }
 
-  /** Directory-based partition arithmetic (replaced-dirs, affected-dirs)
-    * is only sound when every file lies in the CURRENT spec's layout. */
+  /** Directory-based partition arithmetic (the replaced directories of
+    * overwritePartitions, the compacted ones of compactWhere) is only
+    * sound when every file lies in the CURRENT spec's layout. */
   private def requireUniformLayout(m: Manifest, op: String): Unit = {
     val bad = m.files.find(rel => pathSpec(rel) != m.partitionCols)
     require(bad.isEmpty,
@@ -6857,59 +6750,27 @@ object ManifestTable {
   def deleteRange(spark: SparkSession, path: String, colName: String,
                   lo: Any, hi: Any): Long = {
     val (v, m) = readHead(spark, path)
-    if (m.files.isEmpty) return v
     val pred = col(colName) >= lit(lo) && col(colName) <= lit(hi)
     val candidates =
       prunedRels(spark, path, m, Map(colName -> ((Some(lo), Some(hi)))), Map.empty)
     if (candidates.isEmpty) return v
-    rewriteWithout(spark, path, m,
-      touchedFiles(spark, path, candidates, m, pred), pred)
+    rewriteMatching(spark, path, m, candidates, pred)()
   }
 
-  /** The subset of `rels` whose files contain at least one predicate match —
-    * one scan grouped by `input_file_name`, column-pruned to the predicate's
-    * references. Driver memory is bounded by the file count, which the
-    * manifest already holds.
-    */
-  private def touchedFiles(spark: SparkSession, path: String, rels: Seq[String],
-                           m: Manifest, predicate: Column): Seq[String] = {
-    if (rels.isEmpty) return Nil
-    val f = fs(spark, path)
-    // refs resolve through filePath (a shallow clone's external files live
-    // under the SOURCE's data dir) — attribute matches by exact resolved
-    // location, never by prefix arithmetic
-    val byResolved: Map[String, String] = rels.map(rel =>
-      f.makeQualified(filePath(path, rel)).toUri.getPath -> rel).toMap
-    // predicates arrive in LOGICAL names; the files are physical (and may
-    // span layout generations — rawScan groups them)
-    toLogical(rawScan(spark, path, m, rels), m.colmap)
-      .filter(predicate)
-      .select(input_file_name().as("_f")).distinct().collect()
-      .map { r =>
-        // same decode discipline as the stats pass: input_file_name is
-        // URI-encoded, manifest rels are literal on-disk names
-        val u = r.getString(0)
-        val p = try new java.net.URI(u).getPath
-                catch { case _: java.net.URISyntaxException => u }
-        byResolved.getOrElse(p,
-          sys.error(s"matched file $u not among scanned files"))
-      }.toSeq
-  }
-
-  /** Commit a snapshot that replaces `touched` files with their rows NOT
-    * matching `pred` (null-safe: NULL keeps). Untouched files keep their
-    * stats entries verbatim; rewritten files get stats from their write job.
-    */
-  private def rewriteWithout(spark: SparkSession, path: String, m: Manifest,
-                             touched: Seq[String], pred: Column): Long = {
-    if (touched.isEmpty) return m.version
-    // readRels applies the touched files' deletion vectors: without it a
-    // copy-on-write rewrite would RESURRECT rows a prior deleteVectorized
-    // removed (the rewrite also materializes those DVs away — commit drops
-    // the replaced files' entries)
-    val kept = readRels(spark, path, m, touched)
-      .filter(!coalesce(pred, lit(false)))
-    landChange(spark, path, m, Rewritten(touched), Some(kept))(refuse(path))
+  /** Copy-on-write change of the rows of `rels` matching `pred` (NULL
+    * does not match): the files holding one ([[hitFiles]]) leave, and
+    * `rewrite` of their rows lands in their place — read through
+    * [[readRels]], deletion vectors applied, so a rewrite never resurrects
+    * a row a prior deleteVectorized removed. The default drops the
+    * matching rows: a DELETE. A lost race refuses. */
+  private def rewriteMatching(spark: SparkSession, path: String, m: Manifest,
+                              rels: Seq[String], pred: Column, op: Option[String] = None)(
+                              rewrite: DataFrame => DataFrame =
+                                hitRows(_, Left(pred), touched = false)): Long = {
+    val files = hitFiles(spark, path, m, rels, Left(pred))
+    if (files.isEmpty) m.version
+    else landChange(spark, path, m, Rewritten(files),
+      Some(rewrite(readRels(spark, path, m, files))), op = op)(refuse(path))
   }
 
   /** Row-level UPDATE: replace each assigned column with its new
@@ -6959,9 +6820,6 @@ object ManifestTable {
       s"UPDATE of $path assigns GENERATED column(s) " +
         s"${sets.map(_._1).filter(genCols).mkString(", ")} — their values " +
         "derive from the declared expression; update the source column instead")
-    val touched = touchedFiles(spark, path, m.files, m, predicate)
-    if (touched.isEmpty) return v
-    val hit = coalesce(predicate, lit(false))
     // `rows` with the SET applied where `mask` holds. Generated partition
     // columns re-derive AFTER the SET projection: an update of a
     // transform's SOURCE column must move the row's partition.
@@ -6991,33 +6849,32 @@ object ManifestTable {
     // op=update: every delete+insert the change feed diffs out of this
     // commit IS an update pair — the four-type CDF refinement
     if (mode == "cow")
-      // DV-applied read: see rewriteWithout — an update must not resurrect
-      // previously-deleted rows
-      landChange(spark, path, m, Rewritten(touched),
-        Some(updated(readRels(spark, path, m, touched), hit)),
-        op = Some("update"))(refuse(path))
+      rewriteMatching(spark, path, m, m.files, predicate, Some("update"))(
+        updated(_, coalesce(predicate, lit(false))))
     else {
-      // DV-applied read WITH positions: a previously-deleted row must not
-      // resurrect as an updated copy, and each matched live row's position
-      // is exactly what the new DV records
-      val matched = liveRowsWithPos(spark, path, m, touched).filter(hit)
+      // the LIVE touched rows: a previously-deleted row must not resurrect
+      // as an updated copy, and each matched live row's position is
+      // exactly what the new DV records
+      val matched = touchedRows(spark, path, m, m.files, Left(predicate), masked = true)
         .localCheckpoint(true) // one materialization feeds positions AND rows
-      if (matched.isEmpty) return v
-      landChange(spark, path, m,
-        Positions(matched.select(col("__dv_fname").as("fname"), col("__dv_pos").as("pos"))),
-        Some(clusterForWrite(updated(matched, lit(true)), m)),
-        op = Some("update"))(refuse(path))
+      try if (matched.isEmpty) v else landChange(spark, path, m, Positions(matched),
+        Some(clusterForWrite(updated(matched, lit(true)), m)), op = Some("update"))(refuse(path))
+      finally releaseCheckpoint(matched)
     }
   }
 
-  /** How a row-level change encodes the rows it removes. */
+  /** How a row-level change encodes the rows it removes. The
+    * copy-on-write and deletion-vector encodings both derive from the
+    * change's [[touchedRows]]. */
   private sealed trait Removed
-  /** Copy-on-write: the `touched` files leave the snapshot; their
-    * surviving rows ride in the change's added rows. */
+  /** Copy-on-write: the `touched` files leave the snapshot — the files
+    * holding a touched row ([[hitFiles]]), or for a partition-scoped change
+    * the files of the matching directories; their surviving rows ride in
+    * the change's added rows. */
   private case class Rewritten(touched: Seq[String]) extends Removed
-  /** Deletion vectors: the (`fname`, `pos`) positions of the removed rows,
-    * materialized by the caller ([[writeDvEntries]] reads them twice). */
-  private case class Positions(fresh: DataFrame) extends Removed
+  /** Deletion vectors: the removed rows as [[touchedRows]] yields them;
+    * their file name and position columns are the DV entries. */
+  private case class Positions(rows: DataFrame) extends Removed
   /** Equality deletes: the removed rows' key values, one column per key,
     * physical-named. */
   private case class Keys(keys: DataFrame) extends Removed
@@ -7027,17 +6884,20 @@ object ManifestTable {
     * purge. The change arrives computed: `removed` in one of the three
     * encodings and `added`, the rows it adds (None when it adds none). In
     * order, the step
-    *  1. writes the removal's DV or eq-key sidecar;
+    *  1. writes the removal's DV or eq-key sidecar (DV positions are
+    *     materialized for the write and released after it);
     *  2. writes `added` once through [[writeFiles]];
     *  3. lands through [[commitRebasing]] under the caller's conflict rule
     *     `rebase` (often [[refuse]]);
     *  4. deletes the sidecar when the commit is refused.
     *
     * Rewritten files leave the landing snapshot and added files that hold
-    * no rows never enter it. A DV entry replaces its file's old one, so a
-    * rebase also refuses a head that dropped or re-vectored a file this
-    * change vectors. An eq-delete entry is sequenced at the version it
-    * lands as. A change that removes, adds and re-sequences nothing
+    * no rows never enter it. A rewrite re-reads its files' live rows and a
+    * DV entry replaces its file's old one, so a rebase also refuses a head
+    * that dropped or re-vectored a file this change rewrites or vectors,
+    * and a rewrite refuses a head with a new eq-delete entry (its rows
+    * would land sequenced after the entry and escape it). An eq-delete
+    * entry is sequenced at the version it lands as. A change that removes, adds and re-sequences nothing
     * commits nothing and returns `m`'s version. The other arguments pass
     * to [[commit]]; `identityWm` advances the identity watermark past the
     * added rows ([[identityWmUpdate]]). */
@@ -7051,8 +6911,13 @@ object ManifestTable {
     val v = m.version
     val (touched, sidecar, dvs, eqdel) = removed match {
       case Rewritten(rels) => (rels.toSet, None, Map.empty[String, (String, Long)], None)
-      case Positions(fresh) =>
-        val (name, dvs) = writeDvEntries(spark, path, m, v, fresh)
+      case Positions(rows) =>
+        // positions materialize once: the sidecar write reads them twice.
+        // The checkpoint is removed-rows-sized and released once written
+        val fresh = rows.select(col("__dv_fname").as("fname"), col("__dv_pos").as("pos"))
+          .localCheckpoint()
+        val (name, dvs) =
+          try writeDvEntries(spark, path, m, v, fresh) finally releaseCheckpoint(fresh)
         (Set.empty[String], name.map(new Path(dvDir(path), _)), dvs, None)
       case Keys(keys) =>
         val dir = new Path(eqdDir(path),
@@ -7072,9 +6937,13 @@ object ManifestTable {
     }
     def cleanup(): Unit = sidecar.foreach(fs(spark, path).delete(_, true): Unit)
     val w = added.fold(Written(Nil, Map.empty, m))(writeFiles(spark, path, _, m))
-    if (touched.isEmpty && dvs.isEmpty && eqdel.isEmpty && w.rels.isEmpty &&
-        fseqExplicit.isEmpty) { cleanup(); return v }
     val fresh = w.rels.filterNot(rel => w.stats.get(rel).exists(isZeroRowEntry))
+    if (touched.isEmpty && dvs.isEmpty && eqdel.isEmpty && fresh.isEmpty &&
+        fseqExplicit.isEmpty) {
+      // the write may have left zero-row files no snapshot will reference
+      w.rels.foreach(rel => fs(spark, path).delete(filePath(path, rel), false))
+      cleanup(); return v
+    }
     // identity tables self-sync the watermark past everything the change
     // wrote (REPLACE WHERE mints fresh ids; delete/update rewrites carry
     // old ones, whose max never exceeds the current watermark — harmless)
@@ -7082,14 +6951,17 @@ object ManifestTable {
                 else Map.empty[String, String]
     commitRebasing(spark, path, m, () => cleanup()) { (on, head) =>
       rebase(on, head)
-      // our sidecar merged the PRIOR positions of exactly the files it
-      // touches; a concurrent change to one of them would be silently
-      // dropped by the entry replacement
+      // our rewrite or sidecar carries the rows or PRIOR positions of
+      // exactly the files it touches as of `m`; a concurrent change to one
+      // of them would be silently dropped
       val live = head.files.toSet
-      if (dvs.keys.exists(rel => !live(rel) || head.dvs.get(rel) != m.dvs.get(rel)))
+      if ((touched ++ dvs.keys).exists(rel =>
+            !live(rel) || head.dvs.get(rel) != m.dvs.get(rel)) ||
+          touched.nonEmpty && head.eqdels.exists(e => !m.eqdels.contains(e)))
         throw new java.util.ConcurrentModificationException(
-          s"a concurrent commit to $path removed or re-vectored file(s) this " +
-            "change deletion-vectors — re-run against the new snapshot")
+          s"a concurrent commit to $path removed, re-vectored or eq-deleted " +
+            "from file(s) this change rewrites or deletion-vectors — re-run " +
+            "against the new snapshot")
     } { on =>
       val nv = on.version + 1
       commit(spark, path, nv, on, on.files.filterNot(touched) ++ fresh,
@@ -7124,7 +6996,7 @@ object ManifestTable {
     val (v, m) = readHead(spark, path)
     val sized = compactLayout(path, m, readVersion(spark, path, v),
       targetRowsPerFile, zorderBy)
-    val w = writeFiles(spark, path, sized, m)
+    val w = try writeFiles(spark, path, sized, m) finally releaseCheckpoint(sized)
     // landing on m: table-level metadata (TBLPROPERTIES, streaming txn
     // watermarks, the COPY ledger) must survive maintenance — dropping the
     // txn line here would make the sink REPLAY its last batch after the
@@ -7138,7 +7010,8 @@ object ManifestTable {
   /** `rows` of `m` laid out for a compaction into ~`targetRowsPerFile`-row
     * files and materialized (self-read safety: the write lands in the
     * directories the rows are read from). `zorderBy` ranges on the
-    * N-column Morton curve. Otherwise a declared write sort order
+    * N-column Morton curve. The caller releases the checkpoint once the
+    * rows are written. Otherwise a declared write sort order
     * (graft.write.sortOrder) — the table's clustering intent, so
     * maintenance re-clusters the way ingestion does (Iceberg's
     * sort-order-aware rewrite) — or else the stats columns are the range
@@ -7202,7 +7075,8 @@ object ManifestTable {
     val sized = graft.operators.Maintenance.sizedRepartition(
       readRels(spark, path, m, small), m.partitionCols, targetRows)
       .localCheckpoint(true)
-    landChange(spark, path, m, Rewritten(small), Some(sized))(refuse(path))
+    try landChange(spark, path, m, Rewritten(small), Some(sized))(refuse(path))
+    finally releaseCheckpoint(sized)
   }
 
   /** PARTITION-SCOPED compaction: rewrite only the partitions whose
@@ -7231,7 +7105,8 @@ object ManifestTable {
     if (touched.isEmpty) return v
     val sized = compactLayout(path, m, readRels(spark, path, m, touched),
       targetRowsPerFile, zorderBy)
-    landChange(spark, path, m, Rewritten(touched), Some(sized))(refuse(path))
+    try landChange(spark, path, m, Rewritten(touched), Some(sized))(refuse(path))
+    finally releaseCheckpoint(sized)
   }
 
   /** ROLL BACK the table to a prior version's state — Delta's RESTORE:

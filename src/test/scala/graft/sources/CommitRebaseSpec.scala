@@ -14,7 +14,9 @@ import java.nio.file.Files
   * disjoint keys (both land), an append sharing a merge key (copy-on-write
   * and merge-on-read refuse, equality deletes land both), and an ANALYZE
   * that declares a new stats column (the declaration must survive the
-  * merge's commit). The row-level changes that cannot rebase
+  * merge's commit). Copy-on-write MERGE also lands past a disjoint append
+  * into a partition it rewrites and into an unpartitioned table, and
+  * refuses a concurrent eq-delete. The row-level changes that cannot rebase
   * (deleteVectorized, MOR and COW update, COW delete) and fastForward each
   * refuse one lost race with nothing committed and no sidecar or moved
   * file left behind. The remaining cases drive every other retrying write
@@ -157,6 +159,43 @@ class CommitRebaseSpec extends SparkSpec {
       assert(head(path).partitionCols === Seq("n"))
       assert(rows(path) === base)
     }
+  }
+
+  /** A copy-on-write MERGE rewrites only the files holding a touched key,
+    * so an append of other keys commutes with it wherever it lands: in a
+    * partition the merge rewrites, or in an unpartitioned table. */
+  test("cow MERGE rebases past a disjoint append into the partition it rewrites; both land") {
+    val path = table("cow_same_part")
+    val v0 = ManifestTable.currentVersion(spark, path).get
+    val samePart: Seq[R] = Seq((16L, "a16", 160, 0))
+    val v = withMode("cow")(racing(append(path, samePart))(merge(path)))
+    assert(v === v0 + 2)
+    assert(rows(path) === merged(base ++ samePart))
+  }
+
+  test("unpartitioned cow MERGE rebases past a disjoint append; both land") {
+    val path = Files.createTempDirectory("rebase_cow_flat").toString + "/t"
+    ManifestTable.overwrite(spark, path, base.toDF("id", "v", "n", "part").repartition(2),
+      statsCols = Seq("id"))
+    val v0 = ManifestTable.currentVersion(spark, path).get
+    val v = withMode("cow")(racing(append(path, disjoint))(merge(path)))
+    assert(v === v0 + 2)
+    assert(rows(path) === merged(base ++ disjoint))
+  }
+
+  /** An eq-delete entry applies to files sequenced before it. A rewrite
+    * landing after it would re-sequence the rows it deletes and
+    * resurrect them, so copy-on-write refuses such a head. */
+  test("cow MERGE refuses a concurrent eq-delete; the deleted key stays deleted") {
+    val path = table("cow_eqdel")
+    val v0 = ManifestTable.currentVersion(spark, path).get
+    intercept[java.util.ConcurrentModificationException] {
+      withMode("cow")(racing(withMode("eq")(ManifestTable.merge(spark, path,
+        Seq.empty[R].toDF("id", "v", "n", "part"), keys = Seq("id"),
+        deleteKeys = Some(Seq(8L).toDF("id")))): Unit)(merge(path)))
+    }
+    assert(ManifestTable.currentVersion(spark, path).contains(v0 + 1))
+    assert(rows(path) === base.filterNot(_._1 == 8L))
   }
 
   /** Row-level changes that derive from exactly the snapshot they read:

@@ -488,6 +488,80 @@ class ManifestTableSpec extends SparkSpec {
     assert(after.count() === 4)
   }
 
+  test("copy-on-write MERGE on an unpartitioned zone-mapped table keeps every untouched file and its stats") {
+    val path = tmpTable()
+    ManifestTable.overwrite(spark, path,
+      spark.range(400).select(col("id"), concat(lit("v"), col("id")).as("v"))
+        .repartitionByRange(8, col("id")), statsCols = Seq("id"))
+    val m0 = ManifestTable.readManifest(spark, path,
+      ManifestTable.currentVersion(spark, path).get)
+    // ids 10 and 20 share the lowest-range file; id 1000 is new
+    ManifestTable.merge(spark, path,
+      Seq((10L, "u10"), (20L, "u20"), (1000L, "n")).toDF("id", "v"), keys = Seq("id"))
+    val m1 = ManifestTable.readManifest(spark, path,
+      ManifestTable.currentVersion(spark, path).get)
+    val kept = m0.files.filter(m1.files.contains)
+    assert(kept.size === m0.files.size - 1,
+      s"only the file holding ids 10 and 20 rewrites: ${m0.files} -> ${m1.files}")
+    val (st0, st1) = (ManifestTable.statsFor(spark, path, m0),
+      ManifestTable.statsFor(spark, path, m1))
+    kept.foreach(rel => assert(st1(rel) === st0(rel), rel))
+    val got = ManifestTable.read(spark, path).as[(Long, String)].collect().toMap
+    assert(got.size === 401 && got(10L) === "u10" && got(20L) === "u20" &&
+      got(1000L) === "n" && got(30L) === "v30")
+  }
+
+  test("REPLACE WHERE with an empty batch that matches nothing commits nothing and adds no file") {
+    val path = tmpTable()
+    // unpartitioned with stats: an empty batch writes one zero-row file
+    ManifestTable.overwrite(spark, path, Seq((1L, "a"), (2L, "b")).toDF("id", "s"),
+      statsCols = Seq("id"))
+    val v0 = ManifestTable.currentVersion(spark, path).get
+    val onDisk = graft.operators.Maintenance.fileCount(spark, path + "/data")
+    val v = ManifestTable.overwriteWhere(spark, path,
+      Seq.empty[(Long, String)].toDF("id", "s"), col("id") > 100L)
+    assert(v === v0)
+    assert(ManifestTable.currentVersion(spark, path).contains(v0))
+    assert(graft.operators.Maintenance.fileCount(spark, path + "/data") === onDisk)
+  }
+
+  test("row-level changes and compaction release every checkpoint they take") {
+    def cached: Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val path = tmpTable()
+    ManifestTable.overwrite(spark, path,
+      spark.range(40).select(col("id"), concat(lit("v"), col("id")).as("v"),
+        (col("id") % 4).as("part")), Seq("part"), statsCols = Seq("id"))
+    def withMode(mode: String)(body: => Unit): Unit = {
+      spark.conf.set(ManifestTable.DmlModeKey, mode)
+      try body finally spark.conf.unset(ManifestTable.DmlModeKey)
+    }
+    def upsert(id: Long): Unit = ManifestTable.merge(spark, path,
+      Seq((id, s"u$id", id % 4), (100L + id, "n", id % 4)).toDF("id", "v", "part"),
+      keys = Seq("id")): Unit
+    val ops: Seq[(String, () => Unit)] = Seq(
+      "cow MERGE" -> (() => withMode("cow")(upsert(1L))),
+      "mor MERGE" -> (() => withMode("mor")(upsert(2L))),
+      "eq MERGE" -> (() => withMode("eq")(upsert(3L))),
+      "mor UPDATE" -> (() => withMode("mor")(ManifestTable.update(spark, path,
+        col("id") === 5L, Seq("v" -> lit("u5"))): Unit)),
+      "deleteVectorized" -> (() =>
+        ManifestTable.deleteVectorized(spark, path, col("id") === 6L): Unit),
+      "compactWhere" -> (() =>
+        ManifestTable.compactWhere(spark, path, col("part") === 1L, 1000L): Unit),
+      "compactSmall" -> (() =>
+        ManifestTable.compactSmall(spark, path, 1L << 30, 1000L): Unit),
+      "compact" -> (() => ManifestTable.compact(spark, path, 1000L): Unit))
+    for ((op, run) <- ops) {
+      val before = cached
+      val v0 = ManifestTable.currentVersion(spark, path).get
+      run()
+      assert(ManifestTable.currentVersion(spark, path).exists(_ > v0), s"$op committed nothing")
+      val left = cached -- before
+      assert(left.isEmpty, s"$op left ${left.size} cached RDD(s) behind")
+    }
+    assert(ManifestTable.read(spark, path).count() === 42L)
+  }
+
   test("compact shrinks file count; vacuum removes unreferenced files") {
     val path = tmpTable()
     val df = (1 to 400).map(i => (i.toLong, s"v$i", i % 2)).toDF("id", "v", "part")

@@ -370,7 +370,7 @@ class MorDmlSpec extends SparkSpec {
     val touch = cdc(spark).select("tenant", "id")
       .unionByName(Seq((7L, 710L)).toDF("tenant", "id")).distinct()
       .toDF("__mk_tenant", "__mk_id")
-    val cand = ManifestTable.morMergeCandidates(spark, mor,
+    val cand = ManifestTable.mergeCandidates(spark, mor,
       m, Seq("tenant", "id"), touch)
     assert(cand.size < m.files.size,
       s"composite-key prune must cut below the fleet (${cand.size} of ${m.files.size})")
@@ -385,7 +385,7 @@ class MorDmlSpec extends SparkSpec {
     // and the null-keyed tombstone still deletes nothing here (no null rows)
     val nullTouch = Seq((Option.empty[Long], Option(1L)))
       .toDF("__mk_tenant", "__mk_id")
-    assert(ManifestTable.morMergeCandidates(spark, mor,
+    assert(ManifestTable.mergeCandidates(spark, mor,
       ManifestTable.readManifest(spark, mor,
         ManifestTable.currentVersion(spark, mor).get),
       Seq("tenant", "id"), nullTouch).size ===

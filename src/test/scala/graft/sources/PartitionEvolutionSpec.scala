@@ -77,8 +77,14 @@ class PartitionEvolutionSpec extends SparkSpec {
         hourly(80).filter(col("k") === 1))
     }
     assert(e.getMessage.contains("compact"))
-    // …while row-level deletes span the layouts freely: the COW delete
-    // migrates the touched flat file into the new layout as a side effect
+    // …while row-level changes span the layouts freely. A copy-on-write
+    // MERGE rewrites only the files holding a touched key, here the flat
+    // file and one partitioned file, into the new layout
+    val before = ManifestTable.read(spark, path).orderBy("id").collect().toSeq
+    ManifestTable.merge(spark, path, hourly(80).filter(col("id").isin(12, 50)),
+      keys = Seq("id"))
+    assert(ManifestTable.read(spark, path).orderBy("id").collect().toSeq === before)
+    // the COW delete, likewise
     ManifestTable.delete(spark, path, col("id") < 10)
     ManifestTable.deleteVectorized(spark, path, col("id") >= 70)
     assert(ManifestTable.read(spark, path).select("id").as[Long].collect().sorted

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Model-based fuzzing of the table format: random DML sequences
-  * (append / COW delete / DV delete / update / merge / compact / rename /
-  * partition evolution / restore) run against both the real table and an
+  * (append / COW delete / DV delete / update / merge / REPLACE WHERE /
+  * compact / rename / partition evolution / restore) run against both the real table and an
   * in-memory model of its rows; after EVERY operation the table must
   * equal the model exactly, the metadata fast paths must agree where
   * defined, and a PRUNED point read through the relation face must find
@@ -72,7 +72,7 @@ class TableFuzzSpec extends SparkSpec {
       // model's single vName); remember restorable checkpoints
       var checkpoints = List.empty[(Long, Map[Long, Long], String, Boolean)]
       for (step <- 1 to 14) {
-        rnd.nextInt(11) match {
+        rnd.nextInt(12) match {
           case 10 => // branch lifecycle: fork, mutate the branch (append +
             // sometimes an eq-merge that leaves LIVE entries), publish
             // back via fastForward — the sequence-renumbering path under
@@ -144,31 +144,16 @@ class TableFuzzSpec extends SparkSpec {
               val dels = model.toSeq.sorted.take(2)
               val addC = fresh(2)
               spark.conf.set(ManifestTable.DmlModeKey, "mor")
-              try {
-                try ManifestTable.merge(spark, path, df(addC),
-                  keys = Seq("id", vName), deleteKeys = Some(df(dels)))
-                catch {
-                  case e: IllegalArgumentException
-                      if e.getMessage.contains("uniform partition layout") =>
-                    ManifestTable.compact(spark, path, 64L)
-                    ManifestTable.merge(spark, path, df(addC),
-                      keys = Seq("id", vName), deleteKeys = Some(df(dels)))
-                }
-              } finally spark.conf.unset(ManifestTable.DmlModeKey)
+              try ManifestTable.merge(spark, path, df(addC),
+                keys = Seq("id", vName), deleteKeys = Some(df(dels)))
+              finally spark.conf.unset(ManifestTable.DmlModeKey)
               model = model -- dels.map(_._1) ++ addC
               check(s"$step merge(mor, composite)")
             } else {
             mode.foreach(spark.conf.set(ManifestTable.DmlModeKey, _))
+            // every encoding merges across mixed layouts after an evolution
             try if (batch.nonEmpty) {
-              try ManifestTable.merge(spark, path, df(batch), keys = Seq("id"))
-              catch {
-                // partition-scoped rewrites legitimately reject a mixed
-                // layout after an evolution — heal as directed and retry
-                case e: IllegalArgumentException
-                    if e.getMessage.contains("uniform partition layout") =>
-                  ManifestTable.compact(spark, path, 64L)
-                  ManifestTable.merge(spark, path, df(batch), keys = Seq("id"))
-              }
+              ManifestTable.merge(spark, path, df(batch), keys = Seq("id"))
               model = model ++ batch.toMap
             } finally mode.foreach(_ => spark.conf.unset(ManifestTable.DmlModeKey))
             check(s"$step merge(${mode.getOrElse("cow")})")
@@ -207,6 +192,15 @@ class TableFuzzSpec extends SparkSpec {
                 ManifestTable.compactWhere(spark, path, col("id_b") === b.toLong, 32L)
             }
             check(s"$step compactWhere id_b=$b")
+          case 11 => // REPLACE WHERE: the rows matching the predicate give
+            // way to a batch inside it — re-valued matches plus fresh ids
+            val m = 2 + rnd.nextInt(4); val r = rnd.nextInt(m)
+            val revalued = model.keys.filter(_ % m == r).toSeq.sorted.take(2)
+              .map(id => (id, rnd.nextInt(1000).toLong))
+            val batch = revalued ++ fresh(2 * m).filter { case (id, _) => id % m == r }
+            ManifestTable.overwriteWhere(spark, path, df(batch), col("id") % m === r)
+            model = model.filterNot { case (id, _) => id % m == r } ++ batch
+            check(s"$step replaceWhere %$m==$r")
           case _ => // RESTORE to a remembered checkpoint (same-name only)
             checkpoints.find { case (_, _, n, e) => n == vName && e == evolved } match {
               case Some((v, snap, _, _)) =>
