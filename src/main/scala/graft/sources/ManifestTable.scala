@@ -5854,16 +5854,13 @@ object ManifestTable {
         s"predicate (e.g. ${offender.headOption.getOrElse("")}) — a " +
         "replace must only write rows it is replacing")
     // partition-only predicates decide the touched set from DIRECTORY
-    // VALUES alone (no scan — the 100 TB backfill shape); anything else
-    // scans for matching files
-    val touched = matchingPartitionFiles(spark, m, predicate)
-      .getOrElse(hitFiles(spark, path, m, m.files, Left(predicate)))
-    // surviving rows of partially-matching files + the batch, one rewrite
-    val kept =
-      if (touched.isEmpty) batch
-      else hitRows(readRels(spark, path, m, touched), Left(predicate), touched = false)
-        .unionByName(batch)
-    landChange(spark, path, m, Rewritten(touched), Some(clusterForWrite(kept, m)),
+    // VALUES alone: every row of those files matches, so they drop whole
+    // and nothing is read (the 100 TB backfill shape). Anything else
+    // rewrites the matching files' surviving rows with the batch
+    val (gone, added) = matchingPartitionFiles(spark, m, predicate)
+      .map(matching => (Rewritten(matching), Some(batch)))
+      .getOrElse(rewriteMatching(spark, path, m, m.files, Left(predicate), Some(batch))())
+    landChange(spark, path, m, gone, added.map(clusterForWrite(_, m)),
       op = Some("overwrite"))(refuse(path))
   }
 
@@ -6037,10 +6034,8 @@ object ManifestTable {
             case "mor" =>
               (Positions(touchedRows(spark, path, m, candidates, hit, masked = true)), newRows)
             case _ =>
-              val files = hitFiles(spark, path, m, candidates, hit)
-              (Rewritten(files), Some(clusterForWrite(
-                hitRows(readRels(spark, path, m, files), hit, touched = false)
-                  .unionByName(batch), m)))
+              val (gone, rows) = rewriteMatching(spark, path, m, candidates, hit, Some(batch))()
+              (gone, rows.map(clusterForWrite(_, m)))
           }
           landChange(spark, path, m, removed, added, op = Some("merge"),
               opCols = keys, txn = txn, identityWm = false) { (on, head) =>
@@ -6157,11 +6152,10 @@ object ManifestTable {
     // the directory values alone and commit WITHOUT the matching files —
     // metadata-only, no byte read or written (Delta's partition delete);
     // undecidable predicates keep the row-level rewrite
-    matchingPartitionFiles(spark, m, predicate) match {
-      case Some(matching) =>
-        landChange(spark, path, m, Rewritten(matching), None)(refuse(path))
-      case None => rewriteMatching(spark, path, m, m.files, predicate)()
-    }
+    val (gone, kept) = matchingPartitionFiles(spark, m, predicate)
+      .map(matching => (Rewritten(matching), Option.empty[DataFrame]))
+      .getOrElse(rewriteMatching(spark, path, m, m.files, Left(predicate))())
+    if (gone.touched.isEmpty) v else landChange(spark, path, m, gone, kept)(refuse(path))
   }
 
   /** Row-level DELETE, merge-on-read: instead of rewriting the files that
@@ -6754,23 +6748,25 @@ object ManifestTable {
     val candidates =
       prunedRels(spark, path, m, Map(colName -> ((Some(lo), Some(hi)))), Map.empty)
     if (candidates.isEmpty) return v
-    rewriteMatching(spark, path, m, candidates, pred)()
+    val (gone, kept) = rewriteMatching(spark, path, m, candidates, Left(pred))()
+    if (gone.touched.isEmpty) v else landChange(spark, path, m, gone, kept)(refuse(path))
   }
 
-  /** Copy-on-write change of the rows of `rels` matching `pred` (NULL
-    * does not match): the files holding one ([[hitFiles]]) leave, and
-    * `rewrite` of their rows lands in their place — read through
-    * [[readRels]], deletion vectors applied, so a rewrite never resurrects
-    * a row a prior deleteVectorized removed. The default drops the
-    * matching rows: a DELETE. A lost race refuses. */
+  /** The copy-on-write encoding of a change to the rows of `rels` that
+    * `hit` touches ([[touchedRows]]): the files holding one ([[hitFiles]])
+    * leave, and `rewrite` of their rows lands in their place — read
+    * through [[readRels]], deletion vectors and equality deletes applied,
+    * so a rewrite never resurrects a removed row. The default keeps the
+    * rows `hit` leaves plus `batch`: a DELETE, or with a batch a REPLACE
+    * WHERE or MERGE. Returns the change as [[landChange]] takes it. */
   private def rewriteMatching(spark: SparkSession, path: String, m: Manifest,
-                              rels: Seq[String], pred: Column, op: Option[String] = None)(
-                              rewrite: DataFrame => DataFrame =
-                                hitRows(_, Left(pred), touched = false)): Long = {
-    val files = hitFiles(spark, path, m, rels, Left(pred))
-    if (files.isEmpty) m.version
-    else landChange(spark, path, m, Rewritten(files),
-      Some(rewrite(readRels(spark, path, m, files))), op = op)(refuse(path))
+                              rels: Seq[String], hit: Either[Column, DataFrame],
+                              batch: Option[DataFrame] = None)(
+                              rewrite: DataFrame => DataFrame = rows =>
+                                batch.foldLeft(hitRows(rows, hit, touched = false))(
+                                  _ unionByName _)): (Rewritten, Option[DataFrame]) = {
+    val files = hitFiles(spark, path, m, rels, hit)
+    (Rewritten(files), Some(rewrite(readRels(spark, path, m, files))))
   }
 
   /** Row-level UPDATE: replace each assigned column with its new
@@ -6848,16 +6844,24 @@ object ManifestTable {
     }
     // op=update: every delete+insert the change feed diffs out of this
     // commit IS an update pair — the four-type CDF refinement
-    if (mode == "cow")
-      rewriteMatching(spark, path, m, m.files, predicate, Some("update"))(
+    val hit = Left(predicate)
+    if (mode == "cow") {
+      val (gone, rows) = rewriteMatching(spark, path, m, m.files, hit)(
         updated(_, coalesce(predicate, lit(false))))
-    else {
-      // the LIVE touched rows: a previously-deleted row must not resurrect
-      // as an updated copy, and each matched live row's position is
-      // exactly what the new DV records
-      val matched = touchedRows(spark, path, m, m.files, Left(predicate), masked = true)
+      if (gone.touched.isEmpty) v
+      else landChange(spark, path, m, gone, rows, op = Some("update"))(refuse(path))
+    } else {
+      // the LIVE touched rows of the files holding a match: a
+      // previously-deleted row must not resurrect as an updated copy, and
+      // each matched live row's position is exactly what the new DV
+      // records. The file cut is a column-pruned scan; only its files pay
+      // the full-width masked read
+      val files = hitFiles(spark, path, m, m.files, hit)
+      if (files.isEmpty) return v
+      val matched = touchedRows(spark, path, m, files, hit, masked = true)
         .localCheckpoint(true) // one materialization feeds positions AND rows
-      try if (matched.isEmpty) v else landChange(spark, path, m, Positions(matched),
+      try if (matched.isEmpty) v else landChange(spark, path, m,
+        Positions(matched, materialized = true),
         Some(clusterForWrite(updated(matched, lit(true)), m)), op = Some("update"))(refuse(path))
       finally releaseCheckpoint(matched)
     }
@@ -6873,8 +6877,10 @@ object ManifestTable {
     * the change's added rows. */
   private case class Rewritten(touched: Seq[String]) extends Removed
   /** Deletion vectors: the removed rows as [[touchedRows]] yields them;
-    * their file name and position columns are the DV entries. */
-  private case class Positions(rows: DataFrame) extends Removed
+    * their file name and position columns are the DV entries.
+    * `materialized` rows are already checkpointed by the caller, so
+    * landing reads their positions without a second checkpoint. */
+  private case class Positions(rows: DataFrame, materialized: Boolean = false) extends Removed
   /** Equality deletes: the removed rows' key values, one column per key,
     * physical-named. */
   private case class Keys(keys: DataFrame) extends Removed
@@ -6884,8 +6890,9 @@ object ManifestTable {
     * purge. The change arrives computed: `removed` in one of the three
     * encodings and `added`, the rows it adds (None when it adds none). In
     * order, the step
-    *  1. writes the removal's DV or eq-key sidecar (DV positions are
-    *     materialized for the write and released after it);
+    *  1. writes the removal's DV or eq-key sidecar (DV positions the
+    *     caller did not materialize are checkpointed for the write and
+    *     released after it);
     *  2. writes `added` once through [[writeFiles]];
     *  3. lands through [[commitRebasing]] under the caller's conflict rule
     *     `rebase` (often [[refuse]]);
@@ -6911,13 +6918,13 @@ object ManifestTable {
     val v = m.version
     val (touched, sidecar, dvs, eqdel) = removed match {
       case Rewritten(rels) => (rels.toSet, None, Map.empty[String, (String, Long)], None)
-      case Positions(rows) =>
+      case Positions(rows, materialized) =>
         // positions materialize once: the sidecar write reads them twice.
         // The checkpoint is removed-rows-sized and released once written
-        val fresh = rows.select(col("__dv_fname").as("fname"), col("__dv_pos").as("pos"))
-          .localCheckpoint()
-        val (name, dvs) =
-          try writeDvEntries(spark, path, m, v, fresh) finally releaseCheckpoint(fresh)
+        val pos = rows.select(col("__dv_fname").as("fname"), col("__dv_pos").as("pos"))
+        val fresh = if (materialized) pos else pos.localCheckpoint()
+        val (name, dvs) = try writeDvEntries(spark, path, m, v, fresh)
+          finally if (!materialized) releaseCheckpoint(fresh)
         (Set.empty[String], name.map(new Path(dvDir(path), _)), dvs, None)
       case Keys(keys) =>
         val dir = new Path(eqdDir(path),
@@ -6954,14 +6961,16 @@ object ManifestTable {
       // our rewrite or sidecar carries the rows or PRIOR positions of
       // exactly the files it touches as of `m`; a concurrent change to one
       // of them would be silently dropped
-      val live = head.files.toSet
+      // eq-delete entries compare by name: a count fold or a DV change
+      // re-writes an entry's matched count without adding an entry
+      val (live, known) = (head.files.toSet, m.eqdels.map(_.name).toSet)
       if ((touched ++ dvs.keys).exists(rel =>
             !live(rel) || head.dvs.get(rel) != m.dvs.get(rel)) ||
-          touched.nonEmpty && head.eqdels.exists(e => !m.eqdels.contains(e)))
+          touched.nonEmpty && head.eqdels.exists(e => !known(e.name)))
         throw new java.util.ConcurrentModificationException(
-          s"a concurrent commit to $path removed, re-vectored or eq-deleted " +
-            "from file(s) this change rewrites or deletion-vectors — re-run " +
-            "against the new snapshot")
+          s"a concurrent commit to $path removed or re-vectored a file this " +
+            "change rewrites or deletion-vectors, or added an equality delete " +
+            "its rewrite would escape — re-run against the new snapshot")
     } { on =>
       val nv = on.version + 1
       commit(spark, path, nv, on, on.files.filterNot(touched) ++ fresh,

@@ -15,9 +15,10 @@ import java.nio.file.Files
   * and merge-on-read refuse, equality deletes land both), and an ANALYZE
   * that declares a new stats column (the declaration must survive the
   * merge's commit). Copy-on-write MERGE also lands past a disjoint append
-  * into a partition it rewrites and into an unpartitioned table, and
-  * refuses a concurrent eq-delete. The row-level changes that cannot rebase
-  * (deleteVectorized, MOR and COW update, COW delete) and fastForward each
+  * into a partition it rewrites, into an unpartitioned table and past a
+  * count fold of a live eq-delete, and refuses a concurrent eq-delete.
+  * The row-level changes that cannot rebase (deleteVectorized, MOR and
+  * COW update, COW delete) and fastForward each
   * refuse one lost race with nothing committed and no sidecar or moved
   * file left behind. The remaining cases drive every other retrying write
   * through one lost race against an appender; check that publish and
@@ -196,6 +197,21 @@ class CommitRebaseSpec extends SparkSpec {
     }
     assert(ManifestTable.currentVersion(spark, path).contains(v0 + 1))
     assert(rows(path) === base.filterNot(_._1 == 8L))
+  }
+
+  /** Folding an entry's count rewrites the entry, not the set of entries:
+    * the rewrite's rows stay sequenced after every entry that can delete
+    * them, so copy-on-write rebases past it. */
+  test("cow MERGE rebases past a count fold of a live eq-delete; both land") {
+    val path = table("cow_fold")
+    withMode("eq")(ManifestTable.merge(spark, path,
+      Seq.empty[R].toDF("id", "v", "n", "part"), keys = Seq("id"),
+      deleteKeys = Some(Seq(8L).toDF("id"))))
+    val v0 = ManifestTable.currentVersion(spark, path).get
+    val v = withMode("cow")(racing(
+      ManifestTable.foldEqdelCounts(spark, path): Unit)(merge(path)))
+    assert(v === v0 + 2)
+    assert(rows(path) === merged(base.filterNot(_._1 == 8L)))
   }
 
   /** Row-level changes that derive from exactly the snapshot they read:
