@@ -34,11 +34,12 @@ import org.apache.spark.sql.SparkSession
   *    this interface (retention is [[ManifestTable.vacuum]]'s job,
   *    outside the commit path).
   *
-  * What stays on the plain filesystem regardless of store: data files
-  * and sidecars (nonce-named — no two writers ever contend on a name),
-  * directory listings (names only ever APPEAR, and the reader protocol
-  * takes the highest contiguous version), and scratch. Only the
-  * name-claiming writes go through the seam.
+  * What stays on the plain filesystem regardless of store, listed,
+  * walked, made and moved through [[TableFs]] (graft's seam for
+  * driver-side directory work): data files and sidecars (nonce-named — no two writers ever
+  * contend on a name), directory listings (names only ever APPEAR, and
+  * the reader protocol takes the highest contiguous version), and
+  * scratch. Only the name-claiming writes go through this seam.
   */
 trait CommitStore {
 

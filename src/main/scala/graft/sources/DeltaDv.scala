@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import TableFs.mkdirs
 
 /** Codec for Delta Lake's public DELETION VECTOR on-disk format — the
   * piece that lets [[ManifestTable.convertDelta]] translate DV-carrying
@@ -204,7 +205,7 @@ private[graft] object DeltaDv {
     * size/data/CRC); returns each blob's (offset, sizeInBytes) exactly as
     * its descriptor must carry them. */
   def writeDvFile(f: FileSystem, p: Path, blobs: Seq[Array[Byte]]): Seq[(Long, Int)] = {
-    f.mkdirs(p.getParent)
+    mkdirs(f, p.getParent)
     val dos = new java.io.DataOutputStream(f.create(p, true))
     try {
       dos.writeByte(FileFormatVersion.toInt)

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import TableFs.mkdirs
 
 /** Minimal writer for the public Delta Lake TRANSACTION-LOG format —
   * the fixture side of [[ManifestTable.convertDelta]]: the converter
@@ -29,28 +30,23 @@ private[graft] object DeltaLayout {
       .parquet(scratch)
     val f = new Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    f.mkdirs(new Path(root))
-    val rels = Seq.newBuilder[String]
-    var i = 0
-    val it = f.listFiles(new Path(scratch), true)
-    val base = f.makeQualified(new Path(scratch)).toUri.getPath
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
-      if (st.isFile && rel.endsWith(".parquet") &&
-          !rel.split("/").exists(s => s.startsWith("_") || s.startsWith("."))) {
-        val dir = rel.split("/").dropRight(1).mkString("/")
+    mkdirs(f, new Path(root))
+    val found = TableFs.walk(f, new Path(scratch))
+    require(f.exists(new Path(scratch)), s"scratch $scratch vanished before its files moved")
+    val rels = found
+      .filter(e => e.rel.endsWith(".parquet") &&
+        !e.rel.split("/").exists(s => s.startsWith("_") || s.startsWith(".")))
+      .zipWithIndex.map { case (e, i) =>
+        val dir = e.rel.split("/").dropRight(1).mkString("/")
         val name = s"$prefix-$i.parquet"
         val target = if (dir.isEmpty) name else s"$dir/$name"
         val tp = new Path(root, target)
-        f.mkdirs(tp.getParent)
-        require(f.rename(st.getPath, tp), s"cannot place $target")
-        rels += target
-        i += 1
+        mkdirs(f, tp.getParent)
+        require(TableFs.rename(f, e.path, tp), s"cannot place $target")
+        target
       }
-    }
     f.delete(new Path(scratch), true)
-    rels.result()
+    rels
   }
 
   def protocol(minReader: Int = 1, minWriter: Int = 2,
@@ -143,12 +139,12 @@ private[graft] object DeltaLayout {
       .unionByName(prot, allowMissingColumns = true)
       .coalesce(1).write.mode("overwrite").parquet(scratch)
     val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val part = f.listStatus(new Path(scratch)).map(_.getPath)
+    val part = TableFs.list(f, new Path(scratch)).map(_.path)
       .find(p => p.getName.endsWith(".parquet")).get
     val target = new Path(new Path(root, "_delta_log"),
       f"$ver%020d.checkpoint.parquet")
-    f.mkdirs(target.getParent)
-    require(f.rename(part, target), s"cannot place checkpoint $target")
+    mkdirs(f, target.getParent)
+    require(TableFs.rename(f, part, target), s"cannot place checkpoint $target")
     f.delete(new Path(scratch), true): Unit
   }
 
@@ -158,7 +154,7 @@ private[graft] object DeltaLayout {
     val f = new Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val p = new Path(new Path(root, "_delta_log"), f"$version%020d.json")
-    f.mkdirs(p.getParent)
+    mkdirs(f, p.getParent)
     val out = f.create(p, true)
     try out.write((actions.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()

@@ -13,6 +13,7 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsOverwrite
 import org.apache.spark.sql.sources.{AlwaysTrue, Filter, InsertableRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import TableFs.mkdirs
 
 /** The DSv2 `TableCatalog` face (`spark.sql.catalog.<name> =
   * graft.sources.GraftCatalog`, `spark.sql.catalog.<name>.warehouse =
@@ -101,7 +102,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   private def writeMarker(managed: Path, location: String): Unit = {
-    fs.mkdirs(managed)
+    mkdirs(fs, managed)
     val out = fs.create(new Path(managed, LocationMarker), true)
     try out.write(location.getBytes("UTF-8")) finally out.close()
   }
@@ -114,16 +115,18 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   private def isTableDir(p: Path): Boolean =
-    fs.exists(new Path(p, "_manifests")) || fs.exists(new Path(p, LocationMarker))
+    fs.exists(new Path(p, "_manifests")) ||
+      fs.exists(new Path(p, LocationMarker))
+
+  private def subdirs(dir: Path): Seq[Path] =
+    TableFs.list(fs, dir).filter(_.isDir).map(_.path)
 
   // ---- tables ----
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val dir = nsPath(namespace)
     if (!fs.exists(dir)) throw new NoSuchNamespaceException(catalogName +: namespace.toSeq)
-    fs.listStatus(dir).filter(_.isDirectory).map(_.getPath)
-      .filter(isTableDir)
-      .map(p => Identifier.of(namespace, p.getName))
+    subdirs(dir).filter(isTableDir).map(p => Identifier.of(namespace, p.getName)).toArray
   }
 
   override def tableExists(ident: Identifier): Boolean =
@@ -205,7 +208,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * for external locations. */
   private def materialize(ident: Identifier, spec: CreationSpec,
                           batch: org.apache.spark.sql.DataFrame): Unit = {
-    if (!spec.external) fs.mkdirs(nsPath(ident.namespace())): Unit
+    if (!spec.external) mkdirs(fs, nsPath(ident.namespace()))
     ManifestTable.overwrite(spark, spec.path, batch, spec.pcols,
       statsCols = spec.statsCols, bloomCols = spec.bloomCols,
       transforms = spec.transforms, generated = spec.generated)
@@ -375,11 +378,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   // ---- namespaces (directories without a manifest log) ----
 
   override def listNamespaces(): Array[Array[String]] = {
-    val root = new Path(warehouse)
-    if (!fs.exists(root)) Array.empty
-    else fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
+    subdirs(new Path(warehouse))
       .filterNot(isTableDir).filterNot(_.getName.startsWith("_"))
-      .map(p => Array(p.getName))
+      .map(p => Array(p.getName)).toArray
   }
 
   override def listNamespaces(namespace: Array[String]): Array[Array[String]] = {
@@ -387,9 +388,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val dir = nsPath(namespace)
     if (!fs.exists(dir) || isTableDir(dir))
       throw new NoSuchNamespaceException(catalogName +: namespace.toSeq)
-    fs.listStatus(dir).filter(_.isDirectory).map(_.getPath)
-      .filterNot(isTableDir).filterNot(_.getName.startsWith("_"))
-      .map(p => namespace :+ p.getName)
+    subdirs(dir).filterNot(isTableDir).filterNot(_.getName.startsWith("_"))
+      .map(p => namespace :+ p.getName).toArray
   }
 
   override def namespaceExists(namespace: Array[String]): Boolean =
@@ -406,7 +406,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   override def createNamespace(namespace: Array[String],
                                metadata: util.Map[String, String]): Unit = {
-    fs.mkdirs(nsPath(namespace)): Unit
+    mkdirs(fs, nsPath(namespace))
   }
 
   override def alterNamespace(namespace: Array[String],
@@ -418,7 +418,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val dir = nsPath(namespace)
     if (!namespaceExists(namespace)) false
     else {
-      if (!cascade && fs.listStatus(dir).nonEmpty)
+      if (!cascade && TableFs.list(fs, dir).nonEmpty)
         throw new IllegalStateException(
           s"namespace ${namespace.mkString(".")} is not empty (use CASCADE)")
       fs.delete(dir, true)

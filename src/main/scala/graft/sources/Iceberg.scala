@@ -8,6 +8,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
+import TableFs.mkdirs
 
 /** Reader for the public ICEBERG TABLE METADATA formats — the pieces
   * [[ManifestTable.convertIceberg]] needs to take a snapshot zero-copy:
@@ -143,7 +144,7 @@ private[graft] object IcebergLayout {
   private def writeAvro(spark: SparkSession, p: Path, schema: Schema,
                         rows: Seq[GenericRecord]): Unit = {
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.mkdirs(p.getParent)
+    mkdirs(f, p.getParent)
     val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
     w.create(schema, f.create(p, true))
     try rows.foreach(w.append) finally w.close()
@@ -256,7 +257,7 @@ private[graft] object IcebergLayout {
         s""""current-snapshot-id":1,"snapshots":[$snapshot]}"""
     val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mp = new Path(new Path(root, "metadata"), s"v$version.metadata.json")
-    f.mkdirs(mp.getParent)
+    mkdirs(f, mp.getParent)
     val out = f.create(mp, true)
     try out.write(text.getBytes("UTF-8")) finally out.close()
     if (hint) {

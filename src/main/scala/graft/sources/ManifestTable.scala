@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType, MapType, Metadata, ShortType, StringType, StructField, StructType}
 import org.apache.spark.sql.graft.bridge.releaseCheckpoint
 import java.nio.charset.StandardCharsets
+import TableFs.mkdirs
 
 /** A minimal snapshot-isolated table format over parquet — the manifest
   * layer that plain-directory tables lack (and the reason the round-1
@@ -487,18 +488,25 @@ object ManifestTable {
 
   // ------------------------------------------------------------------ reads
 
+  /** The one listing of `_manifests`: versions, stats sidecars, staged
+    * batches, tags and swap pins. Empty when the table does not exist. */
+  private def manifestListing(spark: SparkSession, path: String): Seq[TableFs.Entry] =
+    TableFs.list(fs(spark, path), manifestDir(path))
+
+  /** The `<prefix><id>.txt` entries of a `_manifests` listing, with
+    * their ids. */
+  private def named(listing: Seq[TableFs.Entry],
+                    prefix: String): Seq[(String, TableFs.Entry)] =
+    listing.collect { case e if e.name.startsWith(prefix) && e.name.endsWith(".txt") =>
+      (e.name.substring(prefix.length, e.name.length - 4), e) }
+
+  /** The committed versions of a `_manifests` listing, with their entries. */
+  private def versionsIn(listing: Seq[TableFs.Entry]): Seq[(Long, TableFs.Entry)] =
+    named(listing, "m").map { case (id, e) => (id.toLong, e) }.sortBy(_._1)
+
   /** Highest committed version, or None when the table does not exist. */
-  def currentVersion(spark: SparkSession, path: String): Option[Long] = {
-    val f = fs(spark, path)
-    val dir = manifestDir(path)
-    if (!f.exists(dir)) None
-    else {
-      val vs = f.listStatus(dir).map(_.getPath.getName)
-        .filter(n => n.startsWith("m") && n.endsWith(".txt"))
-        .map(n => n.substring(1, n.length - 4).toLong)
-      if (vs.isEmpty) None else Some(vs.max)
-    }
-  }
+  def currentVersion(spark: SparkSession, path: String): Option[Long] =
+    versionsIn(manifestListing(spark, path)).lastOption.map(_._1)
 
   /** The current version of the table at `path` and its manifest; fails
     * when no table exists there. */
@@ -695,18 +703,10 @@ object ManifestTable {
 
   private[sources] def commitClock(spark: SparkSession,
                                    path: String): Seq[(Long, Long)] = {
-    val f = fs(spark, path)
-    val dir = manifestDir(path)
-    val stamped: Seq[(Long, Long)] =
-      if (!f.exists(dir)) Nil
-      else f.listStatus(dir).filter { st =>
-        val n = st.getPath.getName
-        n.startsWith("m") && n.endsWith(".txt")
-      }.map { st =>
-        val v = st.getPath.getName.drop(1).dropRight(4).toLong
-        val ict = readCommitTs(spark, path, v)
-        (v, if (ict > 0L) ict else st.getModificationTime)
-      }.toSeq.sortBy(_._1)
+    val stamped = versionsIn(manifestListing(spark, path)).map { case (v, e) =>
+      val ict = readCommitTs(spark, path, v)
+      (v, if (ict > 0L) ict else e.mtime)
+    }
     // re-monotonize across the mtime→ICT seam (an old mtime ahead of a
     // later ICT must not reorder the clock): carry the running max
     var run = Long.MinValue
@@ -3176,63 +3176,26 @@ object ManifestTable {
     TrackedParquetWrite.run(df, tmp.toString, partitionCols, tracker.toSeq)
     val t1 = System.nanoTime()
 
-    // the move is N driver-side metadata ops; through the CHECKSUMMED
-    // local fs each costs ~10 ms (crc bookkeeping), so a 366-partition
-    // write spent more time renaming than writing. Rename via the raw
-    // fs on file:// (no .crc travels — readers never need it), dedupe
-    // the per-directory mkdirs, and run the loop on a small pool (the
-    // same trick the cloud committers use: renames are independent).
-    val mv: FileSystem = f match {
-      case c: org.apache.hadoop.fs.LocalFileSystem => c.getRaw
-      case other => other
-    }
-    val tmpUri = f.makeQualified(tmp).toUri
-    // list the scratch tree WITHOUT Hadoop on file:// — the local
-    // RawLocalFileSystem materializes permissions by EXEC'ING `ls` per
-    // entry, which turned a 366-partition write into 4 s of process
-    // spawns before a byte moved. java.nio walks the same tree in ~10 ms;
-    // remote stores keep the Hadoop iterator (their listings are real
-    // metadata RPCs with none of this pathology).
-    val found = scala.collection.mutable.ArrayBuffer[Path]()
-    if ("file" == f.getUri.getScheme) {
-      val base = java.nio.file.Paths.get(f.makeQualified(tmp).toUri.getPath)
-      val stream = java.nio.file.Files.walk(base)
-      try stream.forEach { p =>
-        if (p.toString.endsWith(".parquet")) found += new Path(p.toUri)
-      } finally stream.close()
-    } else {
-      val it = f.listFiles(tmp, true)
-      while (it.hasNext) {
-        val file = it.next()
-        if (file.getPath.getName.endsWith(".parquet")) found += file.getPath
-      }
-    }
+    // the move is N driver-side metadata ops (a 366-partition write once
+    // spent more time renaming than writing): the scratch walk, the
+    // mkdirs and the renames go through TableFs, and the renames run on a
+    // small pool (the same trick the cloud committers use: renames are
+    // independent)
+    val found = TableFs.walk(f, tmp).filter(_.name.endsWith(".parquet"))
+    // a walk answers a missing dir as empty: a scratch swept before its
+    // files moved (a VACUUM with a short tmp retention) fails the write
+    // instead of committing it without them
+    require(f.exists(tmp), s"scratch $tmp vanished before its files moved")
     val tList = System.nanoTime()
-    // partition subpath = dirs between tmp root and the file (both
-    // URIs must be fs-qualified or relativize returns its input)
-    def relDirOf(src: Path): String = {
-      val rel = tmpUri.relativize(src.toUri).getPath
-      rel.split("/").dropRight(1).mkString("/")
-    }
+    // partition subpath = dirs between the scratch root and the file
+    def relDirOf(e: TableFs.Entry): String = e.rel.split("/").dropRight(1).mkString("/")
     def destDirOf(relDir: String): Path =
       if (relDir.isEmpty) dataDir(path) else new Path(dataDir(path), relDir)
     // destination dirs are created SEQUENTIALLY before any rename task is
     // submitted — a per-task dedup set would let task B (set-add lost)
     // race past task A's still-in-flight mkdirs and rename into a
-    // directory that doesn't exist yet, failing the whole write spuriously.
-    // On file:// the dirs are made via java.nio: Hadoop's
-    // RawLocalFileSystem.mkdirs materializes permissions per directory
-    // (process spawns — the same pathology as its listings), measured at
-    // ~4 ms/dir, which made a 182-partition write spend 0.7 s in this loop
-    val mkViaNio = "file" == f.getUri.getScheme
-    found.toSeq.map(s => relDirOf(s)).distinct
-      .foreach { rd =>
-        val d = destDirOf(rd)
-        if (mkViaNio)
-          java.nio.file.Files.createDirectories(
-            java.nio.file.Paths.get(f.makeQualified(d).toUri.getPath)): Unit
-        else mv.mkdirs(d): Unit
-      }
+    // directory that doesn't exist yet, failing the whole write spuriously
+    found.map(relDirOf).distinct.foreach(rd => mkdirs(f, destDirOf(rd)))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(16, math.max(1, found.size)))
     def inDir(relDir: String, name: String): String =
@@ -3243,13 +3206,12 @@ object ManifestTable {
         // rel paths: one task writing several partition dirs emits the
         // same part-xxxxx name in each, and deletion vectors key by name
         val tasks: Seq[java.util.concurrent.Callable[(String, String)]] =
-          found.toSeq.zipWithIndex.map { case (src, idx) =>
+          found.zipWithIndex.map { case (src, idx) =>
             () => {
               val relDir = relDirOf(src)
-              val destDir = destDirOf(relDir)
-              val dest = new Path(destDir, s"$commit-$idx-${src.getName}")
-              if (!mv.rename(src, dest)) sys.error(s"could not place $dest")
-              (inDir(relDir, src.getName), inDir(relDir, dest.getName))
+              val dest = new Path(destDirOf(relDir), s"$commit-$idx-${src.name}")
+              if (!TableFs.rename(f, src.path, dest)) sys.error(s"could not place $dest")
+              (inDir(relDir, src.name), inDir(relDir, dest.getName))
             }
           }
         import scala.jdk.CollectionConverters._
@@ -3297,7 +3259,7 @@ object ManifestTable {
                               eqdels: Seq[EqDelete] = Nil,
                               fseqExplicit: Map[String, Long] = Map.empty): Long = {
     val f = fs(spark, path)
-    f.mkdirs(manifestDir(path))
+    mkdirs(f, manifestDir(path))
     val fileSet = files.toSet
     // deletion vectors: files carried from the base keep their DVs unless
     // this commit explicitly re-vectors them (`dvs` wins); files the commit
@@ -3646,8 +3608,7 @@ object ManifestTable {
     // non-current snapshots (compacted-away, rolled-back, orphaned) as
     // live rows — silently catastrophic, so the dispatch is automatic
     val iceMeta = new Path(root, "metadata")
-    if (f.exists(iceMeta) && f.listStatus(iceMeta)
-        .exists(_.getPath.getName.endsWith(".metadata.json")))
+    if (TableFs.list(f, iceMeta).exists(_.name.endsWith(".metadata.json")))
       return convertIceberg(spark, path, statsCols, bloomCols)
     val dd = dataDir(path)
     val keep = Set("data", "_manifests", "_tmp", "_dv")
@@ -3655,31 +3616,16 @@ object ManifestTable {
     // mistargeted at a non-parquet or mixed-layout directory must fail
     // BEFORE any rename or delete restructures it — validation failure
     // leaves the directory byte-for-byte untouched
-    def parquetRelsUnder(base: Path): Seq[String] = {
-      val out = Seq.newBuilder[String]
-      if (f.exists(base)) {
-        val baseUri = f.makeQualified(base).toUri.getPath
-        val it = f.listFiles(base, true)
-        while (it.hasNext) {
-          val st = it.next()
-          val rel = st.getPath.toUri.getPath.stripPrefix(baseUri).stripPrefix("/")
-          val segs = rel.split("/")
-          if (st.isFile && rel.endsWith(".parquet") &&
-              !segs.exists(s => s.startsWith("_") || s.startsWith(".")))
-            out += rel
-        }
-      }
-      out.result()
+    def parquetRelsUnder(base: Path): Seq[String] =
+      TableFs.walk(f, base).map(_.rel).filter(rel => rel.endsWith(".parquet") &&
+        !rel.split("/").exists(s => s.startsWith("_") || s.startsWith(".")))
+    val children = TableFs.list(f, root)
+    val movable = children.filter { e =>
+      !keep.contains(e.name) && !e.name.startsWith("_") && !e.name.startsWith(".")
     }
-    val children = f.listStatus(root).toSeq
-    val movable = children.filter { st =>
-      val n = st.getPath.getName
-      !keep.contains(n) && !n.startsWith("_") && !n.startsWith(".")
-    }
-    val pendingRels = movable.flatMap { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory) parquetRelsUnder(st.getPath).map(r => s"$n/$r")
-      else if (n.endsWith(".parquet")) Seq(n)
+    val pendingRels = movable.flatMap { e =>
+      if (e.isDir) parquetRelsUnder(e.path).map(r => s"${e.name}/$r")
+      else if (e.name.endsWith(".parquet")) Seq(e.name)
       else Seq.empty
     }
     // plus whatever a prior crashed convert already moved under data/ —
@@ -3693,14 +3639,14 @@ object ManifestTable {
       s"CONVERT: inconsistent partition directory shapes under $path " +
         s"(expected ${partCols.mkString("/")}) — convert uniform layouts only")
     // ---- validated: now (and only now) restructure
-    f.mkdirs(dd)
-    children.foreach { st =>
-      val n = st.getPath.getName
+    mkdirs(f, dd)
+    children.foreach { e =>
+      val n = e.name
       if (keep.contains(n)) ()                       // already graft layout
       else if (n.startsWith("_") || n.startsWith(".")) // _SUCCESS, .crc …
-        f.delete(st.getPath, true): Unit
-      else require(f.rename(st.getPath, new Path(dd, n)),
-        s"CONVERT: cannot move ${st.getPath} under $dd")
+        f.delete(e.path, true): Unit
+      else require(f.rename(e.path, new Path(dd, n)),
+        s"CONVERT: cannot move ${e.path} under $dd")
     }
     // schema from footers; basePath folds the partition dirs back in as
     // typed columns, exactly as the table's own reads will resolve them
@@ -3768,8 +3714,8 @@ object ManifestTable {
     require(f.exists(logDir), s"CONVERT FROM DELTA: no _delta_log under $path")
     require(currentVersion(spark, path).isEmpty,
       s"CONVERT: $path is already a graft table")
-    val commits = f.listStatus(logDir).map(_.getPath.getName)
-      .filter(_.matches("\\d{20}\\.json")).sorted.toSeq
+    val logged = TableFs.list(f, logDir)
+    val commits = logged.map(_.name).filter(_.matches("\\d{20}\\.json")).sorted
     val jsonVers = commits.map(_.stripSuffix(".json").toLong)
     // CHECKPOINT BOOTSTRAP for log-cleaned histories: a checkpoint parquet
     // IS the consolidated state at its version (its add rows are the live
@@ -3780,11 +3726,10 @@ object ManifestTable {
     // driver-resident bound as the manifest itself, whose file= lines
     // always carry every name (only stats spill to the sidecar).
     val ckRe = """(\d{20})\.checkpoint(?:\.\d+\.\d+)?\.parquet""".r
-    val ckByVer: Map[Long, Seq[Path]] = f.listStatus(logDir).map(_.getPath)
-      .flatMap(p => p.getName match {
-        case ckRe(v) => Some(v.toLong -> p)
+    val ckByVer: Map[Long, Seq[Path]] = logged.flatMap(e => e.name match {
+        case ckRe(v) => Some(v.toLong -> e.path)
         case _ => None
-      }).groupBy(_._1).map { case (v, ps) => v -> ps.map(_._2).toSeq }
+      }).groupBy(_._1).map { case (v, ps) => v -> ps.map(_._2) }
     // usable checkpoint: the largest whose JSON TAIL is contiguous
     // (v+1 … max, no gaps) — a gap means unreplayable state
     def contiguousAfter(v: Long): Boolean = {
@@ -4132,7 +4077,7 @@ object ManifestTable {
       } else {
         // no hint (non-Hadoop catalogs): the highest-numbered metadata
         // file — `v<N>.metadata.json` or `<N>-<uuid>.metadata.json`
-        val cands = f.listStatus(metaDir).map(_.getPath.getName)
+        val cands = TableFs.list(f, metaDir).map(_.name)
           .filter(_.endsWith(".metadata.json"))
         require(cands.nonEmpty,
           s"CONVERT FROM ICEBERG: no *.metadata.json under $metaDir")
@@ -4324,7 +4269,7 @@ object ManifestTable {
     names.toSeq.sorted.foreach { n =>
       val dst = new Path(eqdDir(target), n)
       if (!tf.exists(dst)) {
-        tf.mkdirs(dst.getParent)
+        mkdirs(tf, dst.getParent)
         require(org.apache.hadoop.fs.FileUtil.copy(
           sf, new Path(eqdDir(source), n), tf, dst, false, conf),
           s"CLONE: could not copy eq-delete sidecar $n from $source")
@@ -4344,7 +4289,7 @@ object ManifestTable {
     names.toSeq.sorted.foreach { n =>
       val dst = new Path(dvDir(target), n)
       if (!tf.exists(dst)) {
-        tf.mkdirs(dst.getParent)
+        mkdirs(tf, dst.getParent)
         require(org.apache.hadoop.fs.FileUtil.copy(
           sf, new Path(dvDir(source), n), tf, dst, false, conf),
           s"CLONE: could not copy DV sidecar $n from $source")
@@ -4889,14 +4834,11 @@ object ManifestTable {
   }
 
   /** Staged batch ids awaiting audit/publish (on-disk state). */
-  def stagedIds(spark: SparkSession, path: String): Seq[String] = {
-    val f = fs(spark, path)
-    val dir = manifestDir(path)
-    if (!f.exists(dir)) Nil
-    else f.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("staged-") && n.endsWith(".txt"))
-      .map(n => n.stripPrefix("staged-").stripSuffix(".txt")).toSeq.sorted
-  }
+  def stagedIds(spark: SparkSession, path: String): Seq[String] =
+    stagedIn(manifestListing(spark, path))
+
+  private def stagedIn(listing: Seq[TableFs.Entry]): Seq[String] =
+    named(listing, "staged-").map(_._1).sorted
 
   /** Publish a staged batch: one append-shaped commit of its recorded
     * files, rebasing across commit races like [[append]]. The publish
@@ -4990,7 +4932,7 @@ object ManifestTable {
       // OUTSIDE the tag grammar (names start alphanumeric) — so it can
       // never clobber a real user tag, never lists in SHOW TAGS, and
       // never resolves in FOR VERSION AS OF; its PIN is still honored by
-      // VACUUM (swapPinnedVersions) until the sweep GCs stale ones. The
+      // VACUUM until it goes stale and the sweep GCs it. The
       // swap pin is transient plumbing overwritten in place (not a
       // name-claiming commit object), so it writes directly.
       val swap = new Path(manifestDir(path), tagFileName(s".swap.$name"))
@@ -5018,26 +4960,27 @@ object ManifestTable {
 
   /** All tags: (name, pinned version, created-at millis), name-sorted.
     * Metadata-only — one dir listing plus one tiny read per tag. */
-  def tags(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
-    val f = fs(spark, path)
-    val dir = manifestDir(path)
-    if (!f.exists(dir)) return Nil
-    f.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("tag-") && n.endsWith(".txt"))
-      .map(n => n.stripPrefix("tag-").stripSuffix(".txt"))
+  def tags(spark: SparkSession, path: String): Seq[(String, Long, Long)] =
+    tagsIn(spark, path, manifestListing(spark, path))
+
+  private def tagsIn(spark: SparkSession, path: String,
+                     listing: Seq[TableFs.Entry]): Seq[(String, Long, Long)] =
+    named(listing, "tag-").map(_._1)
       // replace-swap pins (.swap.<name>) are transient plumbing, never
       // user tags: hidden from SHOW TAGS and from version-ref resolution
-      .filter(n => TagNameRe.findFirstIn(n).isDefined).sorted.toSeq
+      .filter(n => TagNameRe.findFirstIn(n).isDefined).sorted
       .map { name =>
-        val lines = readManifestText(spark, path, tagFileName(name))
-          .split("\n").map(_.trim)
-        val v = lines.collectFirst { case l if l.startsWith("version=") =>
-          l.stripPrefix("version=").toLong }.getOrElse(
-          sys.error(s"corrupt tag file for '$name' at $path"))
-        val ts = lines.collectFirst { case l if l.startsWith("ts=") =>
-          l.stripPrefix("ts=").toLong }.getOrElse(0L)
-        (name, v, ts)
+        val (v, ts) = readPin(spark, path, tagFileName(name))
+        (name, v.getOrElse(sys.error(s"corrupt tag file for '$name' at $path")), ts)
       }
+
+  /** A tag or swap-pin file's (pinned version, created-at millis). */
+  private def readPin(spark: SparkSession, path: String,
+                      name: String): (Option[Long], Long) = {
+    val lines = readManifestText(spark, path, name).split("\n").map(_.trim)
+    def field(key: String) =
+      lines.collectFirst { case l if l.startsWith(key) => l.stripPrefix(key).toLong }
+    (field("version="), field("ts=").getOrElse(0L))
   }
 
   /** The version a tag pins, if the tag exists. */
@@ -5053,47 +4996,22 @@ object ManifestTable {
       tagVersion(spark, path, ref.trim).getOrElse(sys.error(
         s"'$ref' is neither a version number nor a tag at $path")))
 
-  /** Versions pinned by tags — each keeps its manifest, files, stats
-    * sidecar and DV files across VACUUM. Dangling refs (manually deleted
-    * manifests) protect nothing. */
-  private def taggedVersions(spark: SparkSession, path: String): Set[Long] =
-    tags(spark, path).map(_._2).toSet ++ swapPins(spark, path).map(_._2)
-
   /** In-flight CREATE OR REPLACE TAG swap pins: (fileName, version,
-    * created-at ms). Hidden from tags() but honored by VACUUM — a
-    * concurrent sweep must not catch the replace target unpinned between
-    * the old tag's delete and the new tag's create. */
-  private def swapPins(spark: SparkSession,
-                       path: String): Seq[(String, Long, Long)] = {
-    val f = fs(spark, path)
-    val dir = manifestDir(path)
-    if (!f.exists(dir)) return Nil
-    f.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("tag-.swap.") && n.endsWith(".txt")).toSeq
-      .flatMap { n =>
-        val lines = readManifestText(spark, path, n).split("\n").map(_.trim)
-        for (v <- lines.collectFirst { case l if l.startsWith("version=") =>
-               l.stripPrefix("version=").toLong })
-          yield (n, v,
-            lines.collectFirst { case l if l.startsWith("ts=") =>
-              l.stripPrefix("ts=").toLong }.getOrElse(0L))
-      }
-  }
+    * created-at ms). Hidden from tags() but honored by VACUUM while fresh
+    * — a concurrent sweep must not catch the replace target unpinned
+    * between the old tag's delete and the new tag's create. */
+  private def swapPinsIn(spark: SparkSession, path: String,
+                         listing: Seq[TableFs.Entry]): Seq[(String, Long, Long)] =
+    named(listing, "tag-.swap.").flatMap { case (_, e) =>
+      val (v, ts) = readPin(spark, path, e.name)
+      v.map((e.name, _, ts))
+    }
 
   /** A replace completes in milliseconds; a swap older than this came
-    * from a crashed replace and may be swept (the re-run self-heals). */
+    * from a crashed replace: VACUUM neither honors nor keeps it (the
+    * re-run self-heals), so a phantom swap cannot pin its version
+    * forever. */
   private val SwapPinMaxAgeMs = 60L * 60 * 1000
-
-  /** GC swap pins left by crashed CREATE OR REPLACE TAG runs — without
-    * this, a phantom swap would pin its version against VACUUM forever. */
-  private def sweepStaleSwapPins(spark: SparkSession, path: String): Unit = {
-    val f = fs(spark, path)
-    val now = System.currentTimeMillis()
-    swapPins(spark, path).foreach { case (n, _, ts) =>
-      if (now - ts > SwapPinMaxAgeMs)
-        f.delete(new Path(manifestDir(path), n), false): Unit
-    }
-  }
 
   // --------------------------------------------------------------- branches
 
@@ -5140,18 +5058,14 @@ object ManifestTable {
 
   /** All branches: (name, fork base version on main, branch head
     * version), name-sorted. Metadata-only. */
-  def branches(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
-    val f = fs(spark, path)
-    val dir = branchesDir(path)
-    if (!f.exists(dir)) return Nil
-    f.listStatus(dir).filter(_.isDirectory).map(_.getPath.getName).sorted.toSeq
+  def branches(spark: SparkSession, path: String): Seq[(String, Long, Long)] =
+    TableFs.list(fs(spark, path), branchesDir(path)).filter(_.isDir).map(_.name).sorted
       .flatMap { name =>
         currentVersion(spark, branchPath(path, name)).map { hv =>
           val bm = readManifest(spark, branchPath(path, name), hv)
           (name, bm.props.get(BranchBaseProp).map(_.toLong).getOrElse(-1L), hv)
         }
       }
-  }
 
   def dropBranch(spark: SparkSession, path: String, name: String,
                  ifExists: Boolean = false): Unit = {
@@ -5194,7 +5108,7 @@ object ManifestTable {
         val dst = new Path(dataDir(path), rel)
         if (!(f.exists(dst) && !f.exists(src))) {
           require(!f.exists(dst), s"FAST FORWARD: name collision on $rel")
-          f.mkdirs(dst.getParent)
+          mkdirs(f, dst.getParent)
           require(f.rename(src, dst), s"FAST FORWARD: could not move $src")
           movedPairs += ((src, dst))
         }
@@ -5215,7 +5129,7 @@ object ManifestTable {
       val src = new Path(dvDir(bp), n)
       val dst = new Path(dvDir(path), n)
       if (!f.exists(dst)) {
-        f.mkdirs(dst.getParent)
+        mkdirs(f, dst.getParent)
         require(f.rename(src, dst), s"FAST FORWARD: could not move DV sidecar $n")
         movedPairs += ((src, dst))
       }
@@ -5241,7 +5155,7 @@ object ManifestTable {
           val src = new Path(eqdDir(bp), n)
           val dst = new Path(eqdDir(path), n)
           if (!f.exists(dst)) {
-            f.mkdirs(dst.getParent)
+            mkdirs(f, dst.getParent)
             require(f.rename(src, dst),
               s"FAST FORWARD: could not move eq-delete sidecar $n")
             movedPairs += ((src, dst))
@@ -5376,7 +5290,7 @@ object ManifestTable {
       val dst = new Path(dataDir(path), rel)
       if (!(f.exists(dst) && !f.exists(src))) { // idempotent across a crash
         require(!f.exists(dst), s"CHERRY-PICK: name collision on $rel")
-        f.mkdirs(dst.getParent)
+        mkdirs(f, dst.getParent)
         require(f.rename(src, dst), s"CHERRY-PICK: could not move $src")
         movedPairs += ((src, dst))
       }
@@ -5515,9 +5429,10 @@ object ManifestTable {
     * removed files' deletion vectors shed with them (positions of rows
     * that no longer exist); everything else — schema, stats of surviving
     * files, constraints, properties, watermarks — carries. Metadata cost:
-    * one existence probe per referenced file, driver-side — the same
-    * walk VACUUM already does; prior versions stay in history (their
-    * reads fail on the same missing bytes, as they must). */
+    * one existence probe per file the current manifest references,
+    * driver-side (no directory listing, unlike VACUUM's walk); prior
+    * versions stay in history (their reads fail on the same missing
+    * bytes, as they must). */
   def fsck(spark: SparkSession, path: String,
            dryRun: Boolean = false): Seq[String] = {
     val v = currentVersion(spark, path)
@@ -5566,7 +5481,7 @@ object ManifestTable {
       val target =
         if (dir.isEmpty) new Path(root, "manifest")
         else new Path(new Path(root, dir), "manifest")
-      f.mkdirs(target.getParent)
+      mkdirs(f, target.getParent)
       val body = rels.sorted
         .map(rel => f.makeQualified(filePath(path, rel)).toUri.toString)
         .mkString("", "\n", "\n")
@@ -7164,8 +7079,9 @@ object ManifestTable {
   }
 
   /** Delete data files referenced by none of the `keepVersions` most recent
-    * manifests, then the superseded manifests themselves. Returns the number
-    * of data files deleted. Run only when no reader still holds a manifest
+    * manifests, then the superseded manifests themselves: the deletes of
+    * [[sweepPlan]], which [[vacuumDryRun]] reports. Returns the number of
+    * data files deleted. Run only when no reader still holds a manifest
     * older than the retention window.
     *
     * Also sweeps `_tmp` scratch dirs older than `tmpRetentionMs` — the
@@ -7174,15 +7090,14 @@ object ManifestTable {
     */
   def vacuum(spark: SparkSession, path: String, keepVersions: Int = 1,
              tmpRetentionMs: Long = 24L * 3600 * 1000): Int = {
-    val fsys = fs(spark, path)
-    val tmpRoot = new Path(path, "_tmp")
-    if (fsys.exists(tmpRoot)) {
-      val cutoff = System.currentTimeMillis() - tmpRetentionMs
-      fsys.listStatus(tmpRoot).foreach { st =>
-        if (st.getModificationTime < cutoff) fsys.delete(st.getPath, true): Unit
-      }
-    }
-    vacuumData(spark, path, keepVersions)
+    val f = fs(spark, path)
+    val cutoff = System.currentTimeMillis() - tmpRetentionMs
+    TableFs.list(f, new Path(path, "_tmp")).filter(_.mtime < cutoff)
+      .foreach(e => f.delete(e.path, true))
+    val plan = sweepPlan(spark, path, keepVersions)
+    val deleted = plan.data.count(f.delete(_, false))
+    plan.meta.foreach(f.delete(_, true))
+    deleted
   }
 
   /** Time-based retention (`VACUUM t RETAIN n HOURS`, the idiom ops
@@ -7196,145 +7111,80 @@ object ManifestTable {
     * toward KEEPING (an over-retained file is storage; an over-deleted
     * one is a broken reader). Metadata-only resolution: one dir listing.
     */
-  def vacuumRetainMs(spark: SparkSession, path: String, retainMs: Long): Int = {
-    require(retainMs >= 0, "retention window must be non-negative")
-    val stamped = commitClock(spark, path)
-    if (stamped.isEmpty) return 0
-    val cutoff = System.currentTimeMillis() - retainMs
-    val firstKept = stamped.find(_._2 >= cutoff).map(_._1)
-      .getOrElse(stamped.last._1)
-    vacuum(spark, path, stamped.count(_._1 >= firstKept).max(1))
-  }
+  def vacuumRetainMs(spark: SparkSession, path: String, retainMs: Long): Int =
+    retainedVersions(spark, path, retainMs).fold(0)(vacuum(spark, path, _))
 
   /** The data-file paths a `vacuum(keepVersions)` would delete, WITHOUT
     * deleting anything — `VACUUM … DRY RUN`, the audit an operator runs
-    * before the irreversible sweep. Exactly the real sweep's reference
-    * computation (WAP-staged batches protected, external shallow-clone
-    * refs untouchable by construction — the walk covers only the table's
-    * OWN data dir). */
+    * before the irreversible sweep. It is the data half of the same
+    * [[sweepPlan]] the real sweep deletes, so the two cannot disagree. */
   def vacuumDryRun(spark: SparkSession, path: String,
-                   keepVersions: Int = 1): Seq[String] = {
-    require(keepVersions >= 1, "must keep at least the current version")
-    val f = fs(spark, path)
-    val dir = manifestDir(path)
-    if (!f.exists(dir) || !f.exists(dataDir(path))) return Nil
-    val versions = f.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("m") && n.endsWith(".txt"))
-      .map(n => n.substring(1, n.length - 4).toLong).sorted
-    val tagged = taggedVersions(spark, path) ++ branchPinnedVersions(spark, path)
-    val keep = (versions.takeRight(keepVersions) ++
-      versions.filter(tagged.contains)).distinct.sorted
-    val referenced = vacuumReferenced(spark, path,
-      keep.map(readManifest(spark, path, _)))
-    val dataUri = f.makeQualified(dataDir(path)).toUri
-    val out = Seq.newBuilder[String]
-    val it = f.listFiles(dataDir(path), true)
-    while (it.hasNext) {
-      val file = it.next()
-      if (file.getPath.getName.endsWith(".parquet") &&
-          !referenced.contains(dataUri.relativize(file.getPath.toUri).getPath))
-        out += file.getPath.toString
-    }
-    out.result().sorted
-  }
+                   keepVersions: Int = 1): Seq[String] =
+    sweepPlan(spark, path, keepVersions).data.map(_.toString).sorted
 
   /** [[vacuumDryRun]] for a time-retention window — the keep-suffix
     * resolution of [[vacuumRetainMs]], zero mutations. */
   def vacuumRetainDryRunMs(spark: SparkSession, path: String,
-                           retainMs: Long): Seq[String] = {
+                           retainMs: Long): Seq[String] =
+    retainedVersions(spark, path, retainMs).fold(Seq.empty[String])(
+      vacuumDryRun(spark, path, _))
+
+  /** The `keepVersions` a retention window of `retainMs` lowers to; None
+    * when the table has no commits. */
+  private def retainedVersions(spark: SparkSession, path: String,
+                               retainMs: Long): Option[Int] = {
     require(retainMs >= 0, "retention window must be non-negative")
     val stamped = commitClock(spark, path)
-    if (stamped.isEmpty) return Nil
-    val cutoff = System.currentTimeMillis() - retainMs
-    val firstKept = stamped.find(_._2 >= cutoff).map(_._1)
-      .getOrElse(stamped.last._1)
-    vacuumDryRun(spark, path, stamped.count(_._1 >= firstKept).max(1))
+    if (stamped.isEmpty) None
+    else {
+      val cutoff = System.currentTimeMillis() - retainMs
+      val firstKept = stamped.find(_._2 >= cutoff).map(_._1)
+        .getOrElse(stamped.last._1)
+      Some(stamped.count(_._1 >= firstKept).max(1))
+    }
   }
 
-  /** Everything a sweep keeping `keptManifests` must NOT delete: their
-    * file refs plus every WAP-staged batch's (un-published but live). */
-  private def vacuumReferenced(spark: SparkSession, path: String,
-                               keptManifests: Seq[Manifest]): Set[String] = {
-    val stagedFiles = stagedIds(spark, path)
-      .flatMap(id => readStagedManifest(spark, path, id).files)
-    keptManifests.flatMap(_.files).toSet ++ stagedFiles
-  }
+  /** What one sweep removes: unreferenced data files, and the other paths
+    * it deletes after them. */
+  private final case class SweepPlan(data: Seq[Path], meta: Seq[Path])
 
-  private def vacuumData(spark: SparkSession, path: String, keepVersions: Int): Int = {
+  /** The sweep keeping the `keepVersions` most recent versions, computed
+    * without mutating anything. Kept besides them: every version a tag, a
+    * FRESH replace-swap pin or a live branch's fork pins, by name, with
+    * its manifest, files, stats sidecar and DVs. Referenced: the kept
+    * manifests' files plus every WAP-staged batch's (un-published but
+    * live). Doomed: the table's OWN data files nobody references
+    * (external shallow-clone refs are untouchable by construction — the
+    * walk covers only the table's data dir); the superseded manifests;
+    * the stats, DV and equality-delete sidecars no kept manifest names;
+    * and the stale swap pins of crashed replaces, which therefore pin
+    * nothing. */
+  private def sweepPlan(spark: SparkSession, path: String, keepVersions: Int): SweepPlan = {
     require(keepVersions >= 1, "must keep at least the current version")
     val f = fs(spark, path)
-    val dir = manifestDir(path)
-    if (!f.exists(dir)) return 0
-    val versions = f.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("m") && n.endsWith(".txt"))
-      .map(n => n.substring(1, n.length - 4).toLong).sorted
-    // tagged versions are pinned BY NAME outside the retention window:
-    // their manifests, files, sidecars and DVs all survive the sweep.
-    // Stale replace-swap pins GC first so a crashed replace cannot pin
-    // its version indefinitely (fresh ones still protect the in-flight
-    // replace window).
-    sweepStaleSwapPins(spark, path)
-    val tagged = taggedVersions(spark, path) ++ branchPinnedVersions(spark, path)
-    val keep = (versions.takeRight(keepVersions) ++
-      versions.filter(tagged.contains)).distinct.sorted
-    val keptManifests = keep.map(readManifest(spark, path, _))
-    // staged (write-audit-publish) batches are un-published but LIVE:
-    // their files must survive the sweep until published or dropped
-    val referenced = vacuumReferenced(spark, path, keptManifests)
-    // stats sidecars referenced by surviving manifests must outlive the
-    // sweep; everything else named s* (superseded versions, race losers)
-    // goes with the manifests that referenced it
-    val keptSidecars = keptManifests.flatMap(_.sidecar).toSet
-    def sweepSidecars(): Unit =
-      f.listStatus(dir).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("s") && !n.endsWith(".txt") && !keptSidecars.contains(n))
-          f.delete(st.getPath, true): Unit
-      }
-    // deletion-vector sidecars referenced by surviving manifests must
-    // outlive the sweep; superseded/raced ones go with their manifests
-    val keptDvs = keptManifests.flatMap(_.dvs.values.map(_._1)).toSet
-    val keptEqd = keptManifests.flatMap(_.eqdels.map(_.name)).toSet
-    def sweepDvs(): Unit = {
-      val dvRoot = dvDir(path)
-      if (f.exists(dvRoot))
-        f.listStatus(dvRoot).foreach { st =>
-          if (!keptDvs.contains(st.getPath.getName))
-            f.delete(st.getPath, true): Unit
-        }
-      // equality-delete key sidecars: same referenced-by-kept-manifests
-      // retention as DV sidecars
-      val eqRoot = eqdDir(path)
-      if (f.exists(eqRoot))
-        f.listStatus(eqRoot).foreach { st =>
-          if (!keptEqd.contains(st.getPath.getName))
-            f.delete(st.getPath, true): Unit
-        }
-    }
-    val keepSet = keep.toSet
-    var deleted = 0
-    if (!f.exists(dataDir(path))) { // zero-data-file table: nothing to collect
-      versions.filterNot(keepSet.contains).foreach(v =>
-        f.delete(new Path(dir, manifestName(v)), false))
-      sweepSidecars()
-      sweepDvs()
-      return 0
-    }
-    val dataUri = f.makeQualified(dataDir(path)).toUri
-    val it = f.listFiles(dataDir(path), true)
-    val doomed = scala.collection.mutable.ArrayBuffer[Path]()
-    while (it.hasNext) {
-      val file = it.next()
-      if (file.getPath.getName.endsWith(".parquet")) {
-        val rel = dataUri.relativize(file.getPath.toUri).getPath
-        if (!referenced.contains(rel)) doomed += file.getPath
-      }
-    }
-    doomed.foreach { p => if (f.delete(p, false)) deleted += 1 }
-    versions.filterNot(keepSet.contains).foreach(v =>
-      f.delete(new Path(dir, manifestName(v)), false))
-    sweepSidecars()
-    sweepDvs()
-    deleted
+    val listing = manifestListing(spark, path)
+    val versions = versionsIn(listing).map(_._1)
+    if (versions.isEmpty) return SweepPlan(Nil, Nil)
+    val now = System.currentTimeMillis()
+    val (stalePins, freshPins) = swapPinsIn(spark, path, listing)
+      .partition { case (_, _, ts) => now - ts > SwapPinMaxAgeMs }
+    val pinned = tagsIn(spark, path, listing).map(_._2).toSet ++
+      freshPins.map(_._2) ++ branchPinnedVersions(spark, path)
+    val keep = (versions.takeRight(keepVersions) ++ versions.filter(pinned)).toSet
+    val kept = versions.filter(keep).map(readManifest(spark, path, _))
+    val referenced = kept.flatMap(_.files).toSet ++
+      stagedIn(listing).flatMap(id => readStagedManifest(spark, path, id).files)
+    val keptSidecars = kept.flatMap(_.sidecar).toSet
+    def unkept(dir: Path, names: Set[String]): Seq[Path] =
+      TableFs.list(f, dir).filterNot(e => names(e.name)).map(_.path)
+    SweepPlan(
+      TableFs.walk(f, dataDir(path))
+        .filter(e => e.name.endsWith(".parquet") && !referenced(e.rel)).map(_.path),
+      stalePins.map(p => new Path(manifestDir(path), p._1)) ++
+        versions.filterNot(keep).map(v => new Path(manifestDir(path), manifestName(v))) ++
+        listing.filter(e => e.name.startsWith("s") && !e.name.endsWith(".txt") &&
+          !keptSidecars(e.name)).map(_.path) ++
+        unkept(dvDir(path), kept.flatMap(_.dvs.values.map(_._1)).toSet) ++
+        unkept(eqdDir(path), kept.flatMap(_.eqdels.map(_.name)).toSet))
   }
 }

@@ -38,9 +38,7 @@ object ParquetUnits {
     val status = fs.getFileStatus(p)
     val fileOpt =
       if (status.isDirectory)
-        fs.listStatus(p).iterator
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath).take(1).toList.headOption
+        TableFs.list(fs, p).find(e => !e.isDir && e.name.endsWith(".parquet")).map(_.path)
       else Some(p)
     fileOpt.flatMap { file =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))

@@ -651,22 +651,8 @@ object Streaming {
                   checkpointPath: String)
                  (handler: (DataFrame, Long, Long) => Unit): Long = {
     import graft.sources.ManifestTable
-    // checkpoint = a DIRECTORY of immutable marker files `v<version>`; the
-    // follower's position is the highest parseable marker. Advancing = one
-    // atomic create of the next marker (never delete-then-replace, which
-    // has a window where a crash loses the position entirely and the next
-    // poll would replay the WHOLE table); older markers are garbage-swept
-    // only after the new one durably exists, and an interrupted sweep or a
-    // corrupt marker merely leaves the position one step stale —
-    // at-least-once again, never a full replay.
-    val dir = new org.apache.hadoop.fs.Path(checkpointPath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val markers: Seq[Long] =
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("v"))
-        .flatMap(n => scala.util.Try(n.substring(1).toLong).toOption)
-    val last: Long = if (markers.isEmpty) 0L else markers.max
+    val markers = new Markers(spark, checkpointPath)
+    val last = markers.last
     val current = ManifestTable.currentVersion(spark, tablePath)
       .getOrElse(return last)
     if (current <= last) return last
@@ -674,12 +660,37 @@ object Streaming {
       if (last == 0L) ManifestTable.readVersion(spark, tablePath, current)
       else ManifestTable.readVersionDelta(spark, tablePath, last, current)
     handler(delta, last, current)
-    fs.mkdirs(dir)
-    val marker = new org.apache.hadoop.fs.Path(dir, s"v$current")
-    fs.create(marker, true).close()
-    markers.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"v$v"), false): Unit)
+    markers.advance(current)
     current
+  }
+
+  /** A follower's checkpoint: a DIRECTORY of immutable marker files
+    * `v<version>`; the follower's position is the highest parseable
+    * marker. Advancing = one atomic create of the next marker (never
+    * delete-then-replace, which has a window where a crash loses the
+    * position entirely and the next poll would replay the WHOLE table);
+    * older markers are garbage-swept only after the new one durably
+    * exists, and an interrupted sweep or a corrupt marker merely leaves
+    * the position one step stale — at-least-once again, never a full
+    * replay. */
+  private final class Markers(spark: SparkSession, checkpointPath: String) {
+    import graft.sources.TableFs
+    import TableFs.mkdirs
+    private val dir = new org.apache.hadoop.fs.Path(checkpointPath)
+    private val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    private def versions(): Seq[Long] = TableFs.list(fs, dir).map(_.name)
+      .filter(_.startsWith("v"))
+      .flatMap(n => scala.util.Try(n.substring(1).toLong).toOption)
+
+    def last: Long = versions().maxOption.getOrElse(0L)
+
+    def advance(to: Long): Unit = {
+      val old = versions()
+      mkdirs(fs, dir)
+      fs.create(new org.apache.hadoop.fs.Path(dir, s"v$to"), true).close()
+      old.foreach(v =>
+        fs.delete(new org.apache.hadoop.fs.Path(dir, s"v$v"), false): Unit)
+    }
   }
 
   /** CDC apply (Delta's APPLY CHANGES INTO shape): consume the SOURCE
@@ -759,14 +770,8 @@ object Streaming {
                     checkpointPath: String)
                    (handler: (DataFrame, Long, Long) => Unit): Long = {
     import graft.sources.ManifestTable
-    val dir = new org.apache.hadoop.fs.Path(checkpointPath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def markers(): Seq[Long] =
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("v"))
-        .flatMap(n => scala.util.Try(n.substring(1).toLong).toOption)
-    val last: Long = { val m = markers(); if (m.isEmpty) 0L else m.max }
+    val markers = new Markers(spark, checkpointPath)
+    val last = markers.last
     val current = ManifestTable.currentVersion(spark, tablePath)
       .getOrElse(return last)
     if (current <= last) return last
@@ -778,11 +783,7 @@ object Streaming {
     while (from < current) {
       val to = math.min(from + FollowChangesWindow, current)
       handler(ManifestTable.readChanges(spark, tablePath, from, to), from, to)
-      val old = markers()
-      fs.mkdirs(dir)
-      fs.create(new org.apache.hadoop.fs.Path(dir, s"v$to"), true).close()
-      old.foreach(v =>
-        fs.delete(new org.apache.hadoop.fs.Path(dir, s"v$v"), false): Unit)
+      markers.advance(to)
       from = to
     }
     current

@@ -1272,9 +1272,17 @@ class ManifestTableSpec extends SparkSpec {
       "a fresh swap pin must protect its version's file")
     // STALE swap (a crashed replace): the sweep GCs the pin, then takes v1
     writeSwap(System.currentTimeMillis() - 2L * 60 * 60 * 1000)
+    val pin = java.nio.file.Paths.get(path, "_manifests", "tag-.swap.ghost.txt")
+    // DRY RUN treats the stale pin as the sweep does: it lists v1's file
+    // and leaves the pin in place
+    val doomed = ManifestTable.vacuumDryRun(spark, path, 1)
+    assert(doomed.size === 1, s"the stale pin protects nothing, got $doomed")
+    assert(java.nio.file.Files.exists(pin), "DRY RUN must not GC the pin")
     assert(ManifestTable.vacuum(spark, path, keepVersions = 1) === 1)
     assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path, "_manifests", "tag-.swap.ghost.txt")))
+      java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(doomed.head).toUri.getPath)),
+      "the real sweep deletes exactly the listed file")
+    assert(!java.nio.file.Files.exists(pin))
   }
 
   test("unpartitioned MERGE carries table properties and foreign txn watermarks") {
