@@ -71,8 +71,7 @@ object CurationPipeline {
       val split = TrainingData.splitAssign(decontaminated, "doc_id")
       val counts = Seq("train", "val", "test").map { sp =>
         val part = split.filter(col("split") === sp).drop("split", "bucket")
-        Sink.writeJsonlShards(part, s"$outDir/$sp", "doc_id", nShards)
-        StageCount(s"split_$sp", part.count())
+        StageCount(s"split_$sp", Sink.writeJsonlShards(part, s"$outDir/$sp", "doc_id", nShards))
       }
 
       Seq(StageCount("raw", nRaw), StageCount("cleaned", nClean),

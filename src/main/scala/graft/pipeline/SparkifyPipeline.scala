@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.operators.{AntiJoinInsert, LatestPerKey, SurrogateKey}
+import graft.operators.{LatestPerKey, SurrogateKey}
 import graft.sources.{Json, Sink, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -96,39 +96,31 @@ object SparkifyPipeline {
   }
 
   /** Full incremental run over JSON feed paths: writes the five star tables
-    * under `outDir`, inserting only new rows; returns per-table insert
-    * counts. Running twice over the same feeds inserts zero everywhere.
+    * under `outDir`, inserting only new rows ([[Sink.insertNew]]); returns
+    * per-table insert counts. Running twice over the same feeds inserts
+    * zero everywhere.
     */
   def run(spark: SparkSession, songFeed: String, logFeed: String,
           outDir: String): Map[String, Long] = {
     val song = Json.read(spark, Tables.songFeedSchema, songFeed)
     val log = Json.read(spark, Tables.logFeedSchema, logFeed)
 
-    def loadInsert(name: String, staged: DataFrame, keys: Seq[String],
-                   partitionCols: Seq[String], nullSafe: Boolean = false): Long = {
-      val path = s"$outDir/$name"
-      val existing = Sink.readOrEmpty(spark, path, staged.schema)
-      val fresh = (if (nullSafe) AntiJoinInsert.newRowsNullSafe(staged, existing, keys)
-                   else AntiJoinInsert.newRows(staged, existing, keys)).persist()
-      try {
-        val n = fresh.count()
-        if (n > 0) Sink.writePartitioned(fresh, path, partitionCols)
-        n
-      } finally fresh.unpersist()
-    }
+    def load(name: String, staged: DataFrame, keys: Seq[String],
+             partitionCols: Seq[String], nullSafe: Boolean = false): Long =
+      Sink.insertNew(spark, staged, s"$outDir/$name", keys, partitionCols, nullSafe)
 
     val songsDim = songs(song)
-    val nSongs = loadInsert("songs", songsDim, Seq("song_id"), Seq("year", "artist_id"))
-    val nArtists = loadInsert("artists", artists(song), Seq("artist_id"), Nil)
-    val nUsers = loadInsert("users", users(log), Seq("userId"), Nil)
-    val nTime = loadInsert("time", timeTable(log), Seq("start_time"), Seq("year", "month"))
+    val nSongs = load("songs", songsDim, Seq("song_id"), Seq("year", "artist_id"))
+    val nArtists = load("artists", artists(song), Seq("artist_id"), Nil)
+    val nUsers = load("users", users(log), Seq("userId"), Nil)
+    val nTime = load("time", timeTable(log), Seq("start_time"), Seq("year", "month"))
 
     val plays = songplays(log, songsDim)
     val playsPath = s"$outDir/songplays"
     val keyedSchema = SurrogateKey.sparse(plays, "songplay_id").schema
     val keyed = SurrogateKey.sparse(plays, "songplay_id",
       SurrogateKey.nextOffset(Sink.readOrEmpty(spark, playsPath, keyedSchema), "songplay_id"))
-    val nPlays = loadInsert("songplays", keyed,
+    val nPlays = load("songplays", keyed,
       Seq("start_time", "song_id", "sessionId"), Seq("year", "month"), nullSafe = true)
 
     Map("songs" -> nSongs, "artists" -> nArtists, "users" -> nUsers,

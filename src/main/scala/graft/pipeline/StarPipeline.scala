@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   *    reference's left_outer+commented-filter inserts everything);
   *  - the fact is enriched against broadcast dimensions (J5a) and keyed with
   *    partition-sparse surrogate ids;
-  *  - every table writes once (no count-then-write double execution) as
-  *    partitioned parquet.
+  *  - every table writes once as partitioned parquet, its insert count
+  *    observed on the write job ([[Sink.insertNew]]; no count-then-write
+  *    double execution).
   *
   * Fixture→Sparkify mapping: events≈log feed, customer≈users,
   * orders+customer+nation+region≈songplays enrichment, events.ts≈time.
@@ -63,25 +64,14 @@ object StarPipeline {
     * attempted with J1-J5b and missed).
     */
   def run(spark: SparkSession, sfDir: String, outDir: String): Map[String, Long] = {
-    def loadInsert(name: String, staged: DataFrame, keys: Seq[String],
-                   partitionCols: Seq[String]): Long = {
-      val path = s"$outDir/$name"
-      val existing = Sink.readOrEmpty(spark, path, staged.schema)
-      // persist: the count is observability, the write is the job — without
-      // the cache the whole DAG would execute twice (the reference's
-      // count-then-write anti-pattern, `etl.py:119+124-127`).
-      val fresh = AntiJoinInsert.newRows(staged, existing, keys).persist()
-      try {
-        val n = fresh.count()
-        if (n > 0) Sink.writePartitioned(fresh, path, partitionCols)
-        n
-      } finally fresh.unpersist()
-    }
+    def load(name: String, staged: DataFrame, keys: Seq[String],
+             partitionCols: Seq[String]): Long =
+      Sink.insertNew(spark, staged, s"$outDir/$name", keys, partitionCols)
     Map(
-      "users" -> loadInsert("users", userDim(spark, sfDir), Seq("user_id"), Nil),
-      "time" -> loadInsert("time", timeDim(spark, sfDir), Seq("start_time"),
+      "users" -> load("users", userDim(spark, sfDir), Seq("user_id"), Nil),
+      "time" -> load("time", timeDim(spark, sfDir), Seq("start_time"),
         Seq("year", "month")),
-      "fact" -> loadInsert("fact", factEnriched(spark, sfDir),
+      "fact" -> load("fact", factEnriched(spark, sfDir),
         Seq("o_orderkey"), Seq("year", "month")))
   }
 }

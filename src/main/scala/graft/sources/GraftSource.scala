@@ -1130,9 +1130,6 @@ class GraftRelation(ctx: SQLContext, path: String, version: Option[Long])
     }
   }
 
-  /** The scan's inner DataFrame — separated from [[buildScan]] so specs
-    * can assert the real plan (the v1 RDD boundary hides it from the
-    * outer query's executedPlan). */
   /** Top-level (conjunctive) null constraints usable against per-file
     * null counters: `IS NULL` skips null-free files, `IS NOT NULL` skips
     * all-null files. A same-column contradiction (both present) yields no
@@ -1236,6 +1233,9 @@ class GraftRelation(ctx: SQLContext, path: String, version: Option[Long])
     ManifestTable.mergedKeyIntervals(spark, path, manifest, logicalName,
       maxRanges)
 
+  /** The scan's inner DataFrame — separated from [[buildScan]] so specs
+    * can assert the real plan (the v1 RDD boundary hides it from the
+    * outer query's executedPlan). */
   private[sources] def innerScan(requiredColumns: Array[String],
                                  filters: Array[Filter]): DataFrame = {
     val rels = ManifestTable.prunedRels(spark, path, manifest,

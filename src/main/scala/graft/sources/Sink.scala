@@ -1,6 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.operators.{AntiJoinInsert, TrainingData}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Parquet sinks + existing-target reads (reference operators S4-S8).
@@ -28,6 +30,38 @@ object Sink {
 
   def write(df: DataFrame, path: String): Unit = writePartitioned(df, path, Nil)
 
+  /** Runs `write` over `df` and returns the rows it wrote, counted by an
+    * [[Observation]] on the write job itself: no cache, no second job. The
+    * observed node must sit above `df`'s last exchange, in the write's
+    * result stage: Spark applies a result task's accumulator updates once
+    * per partition, so a retried map stage cannot count a row twice.
+    */
+  private def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("n")))
+    obs.get("n").asInstanceOf[Long]
+  }
+
+  /** Insert-only-new load (J1-J5b + S5-S7): appends the rows of `staged`
+    * whose `keys` are not yet in the table at `path` (null-safe on every
+    * key when `nullSafe`, see [[AntiJoinInsert.newRowsNullSafe]]) and
+    * returns how many it appended. The reference counts the new rows in a
+    * job of their own before each write (`etl.py:119,148,198,227,285`),
+    * which runs the whole DAG twice; here the count rides the write.
+    *
+    * The append runs even when no row is new, as the reference's does. A
+    * partitioned table then gets no file; an unpartitioned one gets one
+    * schema-only part file, because Spark's writer keeps task 0's file when
+    * the job wrote no rows.
+    */
+  def insertNew(spark: SparkSession, staged: DataFrame, path: String, keys: Seq[String],
+                partitionCols: Seq[String], nullSafe: Boolean = false): Long = {
+    val existing = readOrEmpty(spark, path, staged.schema)
+    val fresh = if (nullSafe) AntiJoinInsert.newRowsNullSafe(staged, existing, keys)
+                else AntiJoinInsert.newRows(staged, existing, keys)
+    countedWrite(fresh)(writePartitioned(_, path, partitionCols))
+  }
+
   /** Bucketed + sorted table write. Bucketing pre-shuffles data ONCE at
     * write time; subsequent joins/aggregations on the bucket keys between
     * co-bucketed tables run with NO exchange at all — the decisive layout
@@ -42,17 +76,6 @@ object Sink {
       .saveAsTable(table)
   }
 
-  /** ORC interchange sink/source — the second columnar format Spark ships
-    * natively (vectorized reader, predicate pushdown, column pruning), for
-    * pipelines whose upstream/downstream speaks ORC instead of parquet.
-    * Same partitioned-append contract as [[writePartitioned]].
-    */
-  def writeOrc(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Unit =
-    appendWriter(df, partitionCols).orc(path)
-
-  def readOrc(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).orc(path)
-
   /** Export rows as sharded JSON-lines — the standard handoff format for
     * LLM training runs — in the REPRODUCIBLE order of
     * [[graft.operators.TrainingData.deterministicShuffle]]: shard
@@ -60,7 +83,7 @@ object Sink {
     * exports of the same corpus are byte-wise interchangeable no matter
     * how either run was partitioned. Layout: `path/shard=<k>/part-*.txt`,
     * one JSON object per line, `pos` included so consumers can verify
-    * order.
+    * order. Returns the rows written, observed after the shard exchange.
     *
     * Scale: one exchange on the shard key, per-shard external sort, then a
     * straight text write — the same cost shape as the shuffle itself.
@@ -68,16 +91,13 @@ object Sink {
     * so each shard's lines are written by exactly one writer in order.
     */
   def writeJsonlShards(df: DataFrame, path: String, idCol: String,
-                       nShards: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    val ordered = graft.operators.TrainingData
-      .deterministicShuffle(df, idCol, nShards)
-    ordered
-      .repartition(nShards, col("shard"))
+                       nShards: Int): Long = {
+    val ordered = TrainingData.deterministicShuffle(df, idCol, nShards)
+    countedWrite(ordered.repartition(nShards, col("shard")))(_
       .sortWithinPartitions(col("shard"), col("pos"))
       .select(col("shard"), to_json(struct(ordered.columns.map(col)
         .toIndexedSeq: _*)).as("value"))
-      .write.mode(SaveMode.Overwrite).partitionBy("shard").text(path)
+      .write.mode(SaveMode.Overwrite).partitionBy("shard").text(path))
   }
 
   /** Read an existing target table, or return an EMPTY frame with the given

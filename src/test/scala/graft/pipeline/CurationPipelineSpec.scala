@@ -38,11 +38,14 @@ class CurationPipelineSpec extends SparkSpec {
       === counts("decontaminated"))
 
     // exported docs: none of the benchmark's ids may survive (each bench
-    // doc shares all its shingles with itself), and ids match the splits
+    // doc shares all its shingles with itself), and each split's returned
+    // count is the lines exported under it
     val exported = Seq("train", "val", "test").flatMap { sp =>
-      spark.read.text(s"$dir1/$sp")
+      val ids = spark.read.text(s"$dir1/$sp")
         .select(get_json_object(col("value"), "$.doc_id").cast("long"))
         .as[Long].collect()
+      assert(ids.length.toLong === counts(s"split_$sp"), s"$sp: count vs lines exported")
+      ids
     }
     assert(exported.length.toLong === counts("decontaminated"))
     assert(exported.forall(_ % 17 != 0))

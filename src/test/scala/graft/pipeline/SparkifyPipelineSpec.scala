@@ -33,6 +33,16 @@ class SparkifyPipelineSpec extends SparkSpec {
     (s"$dir/songs.json", s"$dir/logs.json", s"$dir/out")
   }
 
+  // one new user's play of a known song, plus a song already loaded
+  private def writeIncrement(): (String, String) = {
+    val dir = Files.createTempDirectory("sparkify2").toString
+    Files.write(Paths.get(s"$dir/songs.json"), songLines.head.getBytes("UTF-8"))
+    Files.write(Paths.get(s"$dir/logs.json"),
+      """{"userId":"11","firstName":"New","lastName":"U","gender":"M","level":"free","song":"Shuffle Free","artist":"The Codes","sessionId":9,"location":"LA","userAgent":"ua3","ts":1541300000000}"""
+        .getBytes("UTF-8"))
+    (s"$dir/songs.json", s"$dir/logs.json")
+  }
+
   test("one run builds the five star tables with reference semantics fixed") {
     val (songFeed, logFeed, out) = writeFeeds()
     val counts = SparkifyPipeline.run(spark, songFeed, logFeed, out)
@@ -70,12 +80,8 @@ class SparkifyPipelineSpec extends SparkSpec {
     val (songFeed, logFeed, out) = writeFeeds()
     SparkifyPipeline.run(spark, songFeed, logFeed, out)
 
-    val dir = Files.createTempDirectory("sparkify2").toString
-    Files.write(Paths.get(s"$dir/songs.json"), songLines.head.getBytes("UTF-8"))
-    Files.write(Paths.get(s"$dir/logs.json"),
-      """{"userId":"11","firstName":"New","lastName":"U","gender":"M","level":"free","song":"Shuffle Free","artist":"The Codes","sessionId":9,"location":"LA","userAgent":"ua3","ts":1541300000000}"""
-        .getBytes("UTF-8"))
-    val counts = SparkifyPipeline.run(spark, s"$dir/songs.json", s"$dir/logs.json", out)
+    val (incSongs, incLogs) = writeIncrement()
+    val counts = SparkifyPipeline.run(spark, incSongs, incLogs, out)
     assert(counts === Map("songs" -> 0L, "artists" -> 0L, "users" -> 1L,
       "time" -> 1L, "songplays" -> 1L))
 
@@ -83,5 +89,33 @@ class SparkifyPipelineSpec extends SparkSpec {
     assert(plays.count() === 4)
     assert(plays.select("songplay_id").distinct().count() === 4,
       "new surrogate ids do not collide with existing ones")
+  }
+
+  test("each returned count equals the rows its run added on disk; a re-run adds none") {
+    val (songFeed, logFeed, out) = writeFeeds()
+    val (incSongs, incLogs) = writeIncrement()
+    val tables = Seq("songs", "artists", "users", "time", "songplays")
+    def loadAndDiff(songs: String, logs: String) = {
+      val before = TablesOnDisk(spark, out, tables)
+      val counts = SparkifyPipeline.run(spark, songs, logs, out)
+      val after = TablesOnDisk(spark, out, tables)
+      assert(counts === TablesOnDisk.added(before, after), "returned counts vs rows on disk")
+      (counts, before, after)
+    }
+    loadAndDiff(songFeed, logFeed)
+    loadAndDiff(incSongs, incLogs)
+    val (again, before, after) = loadAndDiff(incSongs, incLogs)
+    assert(again.values.forall(_ == 0L), s"re-run over the same feeds inserted $again")
+    // an append of no rows writes no file into a partitioned table ...
+    Seq("songs", "time", "songplays").foreach { t =>
+      assert(after(t).files === before(t).files, s"$t gained a file on the re-run")
+    }
+    // ... and exactly one schema-only file into an unpartitioned one: Spark's
+    // writer keeps task 0's file when the job wrote no rows
+    Seq("artists", "users").foreach { t =>
+      val extra = after(t).files -- before(t).files
+      assert(extra.size === 1, s"$t: files added by the re-run: $extra")
+      assert(spark.read.parquet(extra.head).count() === 0L)
+    }
   }
 }

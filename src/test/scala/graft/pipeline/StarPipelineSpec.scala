@@ -7,10 +7,16 @@ class StarPipelineSpec extends SparkSpec {
 
   test("full pipeline run is idempotent: second run inserts zero rows") {
     val out = Files.createTempDirectory("star_out").toString
+    val tables = Seq("users", "time", "fact")
+    val empty = TablesOnDisk(spark, out, tables)
     val first = StarPipeline.run(spark, sf, out)
     assert(first.values.forall(_ > 0), s"first run must insert rows: $first")
+    val loaded = TablesOnDisk(spark, out, tables)
+    assert(first === TablesOnDisk.added(empty, loaded), "first run: counts vs rows on disk")
     val second = StarPipeline.run(spark, sf, out)
     assert(second.values.forall(_ == 0), s"second run must insert nothing: $second")
+    assert(second === TablesOnDisk.added(loaded, TablesOnDisk(spark, out, tables)),
+      "second run: counts vs rows on disk")
   }
 
   test("fact table reads back partition-pruned") {
